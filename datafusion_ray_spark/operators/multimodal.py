@@ -430,6 +430,10 @@ def frame_lumas(binary_df: DataFrame, frame_bytes: int = 256) -> DataFrame:
     identical outputs everywhere), and it removes a whole-payload copy
     that only grows with width.
 
+    A NULL payload yields no frames, like an empty one: the kernel drops
+    it through the Arrow validity buffer, not by trusting the writer to
+    give null slots zero length.
+
     Scale: pure projection (partition-preserving); output is
     ~len/frame_bytes rows per payload, narrow (3 ints).
     """
@@ -447,6 +451,9 @@ def frame_lumas(binary_df: DataFrame, frame_bytes: int = 256) -> DataFrame:
             data = np.frombuffer(pay.buffers()[2], dtype=np.uint8)
             lens = offs[1:] - offs[:-1]
             nf = -(-lens // frame_bytes)  # ceil; 0 frames for empty payloads
+            if pay.null_count:
+                # a NULL slot may still span bytes; it has no frames
+                nf[~pay.is_valid().to_numpy(zero_copy_only=False)] = 0
             total = int(nf.sum())
             if not total:
                 continue

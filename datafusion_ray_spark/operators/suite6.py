@@ -268,9 +268,11 @@ def run_text_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab-join infers IsNotNull(term) and the left join IsNotNull on
     both keys into their legs, and a constraint present in one leg but
     not another defeats exchange reuse (the sketch_hll r11 lesson).
-    Values are unchanged — explode(split()) never emits null terms and
-    a null source never matches the grid's join keys, so such rows
-    never reached the output. Measured at sf0.1: runtime shuffle
+    explode(split()) never emits null terms, so the term guard changes
+    nothing; the source guard DROPS documents whose ``source`` is NULL —
+    they form no source slice and get no output row (before the guard a
+    NULL source still emitted a KL row built from zero counts).
+    Measured at sf0.1: runtime shuffle
     117 KB / 1802 rows / 5 exchanges, 0 reused → 19.5 KB / 691 rows /
     4 + 5 reused; cache write and the extra driver job gone. The grid
     is a |sources|×V broadcast join — bounded by construction."""

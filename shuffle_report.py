@@ -57,7 +57,9 @@ def main() -> int:
                   file=sys.stderr)
         spark.catalog.clearCache()
     with open(args.out, "w") as f:
-        json.dump({"sf_dir": args.sf_dir, "queries": out, "errors": errors},
+        json.dump({"sf_dir": args.sf_dir,
+                   "parallelism": spark.sparkContext.defaultParallelism,
+                   "queries": out, "errors": errors},
                   f, indent=1, sort_keys=True)
     print(json.dumps({"n_queries": len(out), "n_errors": len(errors),
                       "out": args.out}))

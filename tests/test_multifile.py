@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import duckdb
 import pytest
+from pyspark.sql import functions as F
 
 from datafusion_ray_spark.queries.registry import build_registry
 from datafusion_ray_spark.sources.tables import (
@@ -46,18 +47,60 @@ def mf_oracle(mf_dir):
 def test_scans_split_and_spread_noops(spark, mf_dir):
     # make_multifile writes 32 parts for big tables (>=50k rows: lineitem
     # at sf0.01) and 8 for mid-size ones (events at sf0.01 is 10k rows).
-    # spread()'s no-op contract is "enough splits for every core" — it
-    # must be identity exactly when the scan already has >=
-    # defaultParallelism splits (lineitem), and may still fire below that.
-    for table, want in (("lineitem", 32), ("events", 8)):
+    # Spark packs small files into about one split per core, so a scan
+    # plans at least min(parts, defaultParallelism) splits. spread()'s
+    # no-op contract is "enough splits for every core" — it must be
+    # identity exactly when the scan already has >= defaultParallelism
+    # splits (lineitem), and may still fire below that.
+    cores = spark.sparkContext.defaultParallelism
+    for table, parts in (("lineitem", 32), ("events", 8)):
         df = load_table(spark, mf_dir, table)
         n = df.rdd.getNumPartitions()
+        want = min(parts, cores)
         assert n >= want, f"{table}: only {n} scan splits on multi-file layout"
-        if n >= spark.sparkContext.defaultParallelism:
+        if n >= cores:
             assert spread(df) is df, (
                 f"{table}: spread() repartitioned an already-split scan — "
                 "it must only fire on under-split inputs"
             )
+
+
+def _write_random_parquet(path, spark, row_groups: int) -> None:
+    """A seeded, incompressible int64 file big enough that Spark plans at
+    least defaultParallelism splits for it under the session's open cost,
+    cut into ``row_groups`` equal row groups."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    cores = spark.sparkContext.defaultParallelism
+    open_cost = spark._jsparkSession.sessionState().conf().filesOpenCostInBytes()
+    n = (cores + 2) * open_cost // 8
+    values = np.random.default_rng(7).integers(0, 2**62, n)
+    pq.write_table(pa.table({"v": values}), path, compression="none",
+                   row_group_size=-(-n // row_groups))
+
+
+def test_spread_counts_splits_that_hold_data(spark, tmp_path):
+    """A split holds rows only if a row group's midpoint falls in it. One
+    big single-row-group file plans a split per core with every row in one
+    of them, so it must still be spread; a file with a row group per core
+    is already parallel and must come back unchanged."""
+    cores = spark.sparkContext.defaultParallelism
+    _write_random_parquet(tmp_path / "one_rg.parquet", spark, 1)
+    _write_random_parquet(tmp_path / "many_rg.parquet", spark, cores)
+
+    one = load_table(spark, str(tmp_path), "one_rg")
+    assert one.rdd.getNumPartitions() >= cores
+    assert one.select(F.spark_partition_id()).distinct().count() == 1
+    assert spread(one) is not one
+    # untagged frames take the same decision without the memo
+    raw = spark.read.parquet(str(tmp_path / "one_rg.parquet"))
+    assert spread(raw).rdd.getNumPartitions() == cores
+
+    many = load_table(spark, str(tmp_path), "many_rg")
+    assert many.rdd.getNumPartitions() >= cores
+    assert spread(many) is many
 
 
 def test_single_file_layout_still_spreads(spark):

@@ -447,3 +447,47 @@ def test_seq_match_matches_re(spark, j1, j2):
             len(re.findall(s4.SEQ_PATTERNS["n_error_bursts"], journey)),
         )
         assert got[u] == expect, (u, journey)
+
+
+@st.composite
+def _dup_corpus(draw):
+    """A seeded corpus with planted exact copies and near-duplicate
+    clusters (one or two words edited per member), doc ids shuffled so a
+    copy's id is as likely below its original's as above it."""
+    import numpy as np
+
+    rng = np.random.default_rng(draw(st.integers(0, 2**32 - 1)))
+    vocab = [f"w{i}" for i in range(60)]
+    texts = [
+        " ".join(rng.choice(vocab, int(rng.integers(12, 30))))
+        for _ in range(draw(st.integers(2, 10)))
+    ]
+    for _ in range(draw(st.integers(0, 4))):  # exact copies
+        texts.append(texts[int(rng.integers(len(texts)))])
+    for _ in range(draw(st.integers(0, 3))):  # near-duplicate clusters
+        words = texts[int(rng.integers(len(texts)))].split()
+        for _ in range(int(rng.integers(1, 4))):
+            member = list(words)
+            for pos in rng.choice(len(member), int(rng.integers(1, 3))):
+                member[pos] = str(rng.choice(vocab))
+            texts.append(" ".join(member))
+    ids = rng.permutation(len(texts) * 3)[: len(texts)]
+    return [(int(i), t) for i, t in zip(ids, texts)]
+
+
+@given(rows=_dup_corpus())
+@_settings
+def test_minhash_pairs_unique_and_ordered(spark, rows):
+    """Every candidate pair is emitted once, as (smaller id, larger id),
+    however many LSH bands it collides in — dedup_lsh_eval counts pairs
+    and relies on this."""
+    from datafusion_ray_spark.operators import dedup
+
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    pairs = [
+        (r["doc_a"], r["doc_b"])
+        for r in dedup.minhash_dedup_pairs(docs).collect()
+    ]
+    spark.catalog.clearCache()
+    assert len(pairs) == len(set(pairs)), sorted(pairs)
+    assert all(a < b for a, b in pairs), sorted(pairs)

@@ -9,7 +9,8 @@ grouping-sets/unpivot/sliding-window/multi-distinct — pinned so a NEW
 Expand anywhere else, the profile_table anti-pattern, can never return
 silently).
 
-After an INTENTIONAL plan change, regenerate the snapshot:
+The snapshot holds for the sf_dir and session parallelism it was taken
+at. After an INTENTIONAL plan change, regenerate it:
     python shuffle_report.py   # writes SHUFFLE_BASELINE.json, commit it
 """
 
@@ -58,10 +59,20 @@ def baseline() -> dict:
         return json.load(f)
 
 
-def test_baseline_covers_subset(baseline, sf_dir):
+def test_baseline_covers_subset(baseline, spark, sf_dir):
     assert baseline["sf_dir"] == sf_dir, (
         "SHUFFLE_BASELINE.json was generated at a different sf_dir; "
         "regenerate with: python shuffle_report.py --sf-dir " + sf_dir
+    )
+    # Shuffle volume depends on the partition count: a small shuffle writes
+    # one block per (map, reduce) pair, so sketch_hll at sf0.001 writes
+    # 145 KB at 32 partitions and 62 KB at 4 with the same plan.
+    cores = spark.sparkContext.defaultParallelism
+    assert baseline["parallelism"] == cores, (
+        f"SHUFFLE_BASELINE.json was generated at parallelism "
+        f"{baseline['parallelism']}, this session has {cores}; regenerate "
+        f"with: python shuffle_report.py, or run with SPARK_GRAFT_CPUS="
+        f"{baseline['parallelism']}"
     )
     missing = [n for n in _SUBSET if n not in baseline["queries"]]
     assert not missing, f"baseline missing {missing} — rerun shuffle_report.py"

@@ -222,6 +222,19 @@ def test_scene_cuts_finds_known_boundary(spark):
     assert got[2] == (4, 0, -1)
 
 
+def test_frame_lumas_drops_null_payloads(spark):
+    """A NULL payload yields no frames and leaves its neighbours' frames
+    (which share the batch's offsets buffer) intact."""
+    from datafusion_ray_spark.operators.multimodal import frame_lumas
+
+    df = spark.createDataFrame(
+        [(1, bytearray([3] * 300)), (2, None), (3, bytearray([5] * 10))],
+        "doc_id long, payload binary",
+    ).coalesce(1)
+    got = sorted(tuple(r) for r in frame_lumas(df).collect())
+    assert got == [(1, 0, 3 * 256, 256), (1, 1, 3 * 44, 44), (3, 0, 50, 10)]
+
+
 def test_containment_tie_break_and_threshold(spark):
     """Equal-size sets: smaller doc_id is 'small'; pairs under the
     threshold are dropped."""
