@@ -142,16 +142,7 @@ def main() -> None:
              "BENCH_DETAIL.json (used by scale_check.py so a scale-up run "
              "never clobbers the committed 1x baseline detail)",
     )
-    parser.add_argument(
-        "--family-throughput", action="store_true",
-        help="measure per-family kernel throughput (docs/s, vec/s) on a "
-             "200k-row synthetic corpus and write THROUGHPUT.json instead "
-             "of running the query suite",
-    )
     args = parser.parse_args()
-
-    if args.family_throughput:
-        return family_throughput()
 
     from datafusion_ray_spark.queries.registry import build_registry
     from datafusion_ray_spark.session import build_session
@@ -527,159 +518,6 @@ def _run_calibration(
         "baseline_epoch_match": baseline_epoch_match,
         "host_at_probe": _host_load(),
     }
-
-
-def family_throughput() -> int:
-    """Measure steady-state kernel throughput per pipeline family on a
-    deterministic 200k-row synthetic corpus (40-token docs / 64-dim
-    vectors, generated JVM-side so generation isn't the bottleneck), and
-    write THROUGHPUT.json. This re-measures, per round, the one-off
-    numbers SCALE.md cites (MinHash 128k docs/s etc.) so throughput
-    regressions in the linear pipelines show up as artifact diffs, not
-    archaeology. Each kernel is forced end-to-end by aggregating over its
-    computed column (a bare count(*) would let Catalyst prune the kernel
-    away)."""
-    import time
-
-    from pyspark.sql import functions as F
-
-    from datafusion_ray_spark.operators import dedup, similarity, text
-    from datafusion_ray_spark.session import build_session
-
-    host_start = _host_load()
-    spark = build_session(app_name="family_throughput")
-    n_docs, n_vecs, dim = 200_000, 200_000, 64
-
-    docs = spark.range(n_docs).select(
-        F.col("id").alias("doc_id"),
-        F.concat_ws(
-            " ",
-            F.transform(
-                F.sequence(F.lit(1), F.lit(40)),
-                lambda j: F.concat(
-                    F.lit("w"),
-                    F.pmod(F.hash(F.col("id") * 41 + j), F.lit(5000)),
-                ),
-            ),
-        ).alias("text"),
-        F.lit("en").alias("lang"),
-        F.concat(F.lit("src"), F.pmod(F.col("id"), F.lit(7))).alias("source"),
-    )
-    vecs = spark.range(n_vecs).select(
-        F.col("id").alias("vec_id"),
-        F.transform(
-            F.sequence(F.lit(1), F.lit(dim)),
-            lambda j: F.pmod(F.hash(F.col("id") * 67 + j), F.lit(1000))
-            / F.lit(1000.0),
-        ).cast("array<double>").alias("embedding"),
-    )
-    # Materialize inputs (localCheckpoint): the timed loop must measure
-    # the KERNEL, not re-running the synthetic generator expressions.
-    docs = docs.localCheckpoint(eager=True)
-    vecs = vecs.localCheckpoint(eager=True)
-    docs.agg(F.count("*")).collect()  # warm codegen + python workers
-    vecs.agg(F.count("*")).collect()
-
-    sample = [
-        (r["vec_id"], list(r["embedding"]))
-        for r in vecs.where(F.col("vec_id") < 256).collect()
-    ]
-    codebooks = similarity.pq_codebooks(sample)
-    centroids = [(i, v) for i, v in sample[:16]]
-
-    # (family, kernel name, builder, force-aggregate)
-    cases = [
-        ("dedup", "minhash_signature", n_docs,
-         lambda: dedup.minhash_signature(docs).agg(F.max("sig_0"))),
-        ("dedup", "exact_digest", n_docs,
-         lambda: docs.select(F.md5("text").alias("d"))
-         .agg(F.max("d"))),
-        ("text", "gopher_rules", n_docs,
-         lambda: text.gopher_rules(docs)
-         .agg(F.sum(F.col("keep").cast("long")))),
-        ("text", "token_stats", n_docs,
-         lambda: text.token_stats(docs).agg(F.sum("n_tokens"))),
-        ("text", "hash_embedding", n_docs,
-         lambda: text.hash_embedding(docs)
-         .agg(F.max(F.element_at("embedding", 1)))),
-        # round-10 protocol change (breaks cross-round comparability for
-        # this one kernel, recorded in kernel_notes below): codes-only
-        # output, the shape production ADC ranking consumes. The r9
-        # adjudication chased a pq_encode "regression" that profiling
-        # showed was the OLD protocol round-tripping the full raw-vector
-        # payload (DIM x 8 bytes/row) back through the Arrow channel —
-        # the wall measured output shipping, not encoding.
-        ("sim", "pq_encode", n_vecs,
-         lambda: similarity.pq_encode(vecs, codebooks,
-                                      keep_embedding=False)
-         .agg(F.max(F.element_at("code", 1)))),
-        ("sim", "ivf_assign", n_vecs,
-         lambda: similarity.ivf_assign(vecs, centroids)
-         .agg(F.max("cell"))),
-    ]
-    # Two interleaved passes, min-of-3 each, brief settle per kernel
-    # (round-10, was one pass of back-to-back min-of-2): this host sees
-    # intermittent foreign CPU bursts (adjudicated round-9, reconfirmed
-    # by round-10 profiling — stable kernels like ivf_assign halve when
-    # one lands mid-run). A burst is shorter than a full pass, so the
-    # per-kernel minimum ACROSS passes measures machine capability while
-    # the host brackets below record the weather.
-    best_sec: dict[str, float] = {}
-    for _pass in range(2):
-        for fam, name, rows, thunk in cases:
-            time.sleep(3)  # let the previous kernel's runqueue drain
-            for _ in range(3):
-                start = time.perf_counter()
-                thunk().collect()
-                elapsed = time.perf_counter() - start
-                if name not in best_sec or elapsed < best_sec[name]:
-                    best_sec[name] = elapsed
-    out: dict[str, dict] = {}
-    for fam, name, rows, _thunk in cases:
-        best = best_sec[name]
-        out[name] = {
-            "family": fam,
-            "rows": rows,
-            "sec": round(best, 3),
-            "rows_per_sec": int(rows / best),
-        }
-        print(f"throughput: {name} {out[name]['rows_per_sec']} rows/s",
-              file=sys.stderr)
-    from datafusion_ray_spark.hostinfo import host_epoch
-
-    host_end = _host_load()
-    rec = {
-        "metric": "family_throughput",
-        "unit": "rows_per_sec",
-        "n_rows": n_docs,
-        "dim": dim,
-        "kernels": out,
-        "kernel_notes": {
-            "pq_encode": (
-                "round-10 protocol: codes-only output "
-                "(keep_embedding=False), matching production pq_adc_topk; "
-                "earlier rounds measured the full-payload round trip and "
-                "are not comparable for this kernel"
-            ),
-        },
-        "epoch": host_epoch(),
-        # Same self-identification as the suite bench: kernel numbers
-        # taken under foreign load are not comparable across rounds
-        # (round-9: an intermittent foreign workload swung pq_encode 3x
-        # between back-to-back runs). Only the START load flags
-        # contention — this bench saturates all cores for ~a minute, so
-        # the END load1 is dominated by our own work by design.
-        "host": {"start": host_start, "end": host_end,
-                 "contended_at_start": host_start["load1_per_cpu"]
-                 > LOAD_WARN_THRESHOLD},
-    }
-    path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                        "THROUGHPUT.json")
-    with open(path, "w") as f:
-        json.dump(rec, f, indent=1)
-    print(json.dumps(rec))
-    spark.stop()
-    return 0
 
 
 if __name__ == "__main__":

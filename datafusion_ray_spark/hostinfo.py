@@ -8,11 +8,11 @@ numbers are only comparable within one boot ("host epoch"). The round-8
 adjudication of that shift was evidenced but unfalsifiable, because no
 artifact recorded which epoch a number came from.
 
-This module makes the epoch rule machine-checkable: every BENCH/SCALING/
-THROUGHPUT artifact embeds :func:`host_epoch`, and ``scale_check.py``
-refuses to compute absolute ratios against a baseline stamped with a
-different epoch (ratios of SHUFFLE BYTES and row counts are
-epoch-invariant and stay comparable regardless).
+This module makes the epoch rule machine-checkable: every BENCH/SCALING
+artifact embeds :func:`host_epoch`, and ``scale_check.py`` refuses to
+compute absolute ratios against a baseline stamped with a different epoch
+(ratios of SHUFFLE BYTES and row counts are epoch-invariant and stay
+comparable regardless).
 """
 
 from __future__ import annotations

@@ -220,7 +220,7 @@ def _verify_jaccard(df: DataFrame, cand: DataFrame, text_col: str):
     # exchange reuse). localCheckpoint blocks are dropped by the
     # ContextCleaner when unreachable. eager=False: materialization happens
     # at the first ACTION, not at DataFrame construction, so plan-only
-    # tooling (plan_report, uses_python_workers) can build this plan
+    # tooling (uses_python_workers) can build this plan
     # without running the candidate scan. Lineage is still truncated —
     # executor loss after materialization fails the job rather than
     # recomputing; acceptable for a bounded candidate-doc slice.

@@ -424,7 +424,8 @@ def frame_lumas(binary_df: DataFrame, frame_bytes: int = 256) -> DataFrame:
     re-concatenated them (``b"".join``). The r11 mapInArrow experiment
     (rejected, ~30% slower) went through per-row conversion; the
     buffer-level form measured at-or-below the pandas wall across the
-    probe's width sweep (plans/r12/mapinarrow_probe.json: 0.77x at 64 B,
+    probe's width sweep
+    (``git show 07602fa:plans/r12/mapinarrow_probe.json``: 0.77x at 64 B,
     0.97x at the bench's own ~300 B, 0.92-0.95x at 1-4 KB, 0.88-1.10x at
     16 KB across two runs — i.e. never worse outside the noise floor,
     identical outputs everywhere), and it removes a whole-payload copy

@@ -1,13 +1,8 @@
-"""Cross-suite DuckDB oracle builders (moved out of ``suite.py`` in
-round 11).
+"""Cross-suite DuckDB oracle builders.
 
 These oracles mirror the MinHash/LSH parameters in ``operators/dedup.py``
 and the hyperplane/centroid constants in ``operators/similarity.py``, so
-they genuinely depend on those implementation files — a suite that
-validates against ``minhash_pairs_oracle()`` SHOULD go stale in the
-certification ledger when ``dedup.py`` changes. What a consumer no longer
-drags in is ``suite.py`` itself (51 entries of unrelated implementation),
-which previously fused every extension suite into one staleness closure.
+a change to either implementation file must keep them in step.
 """
 
 from __future__ import annotations

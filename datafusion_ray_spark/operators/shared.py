@@ -1,15 +1,9 @@
 """Dependency-light SQL building blocks shared across the extension
-suites (moved out of ``suite.py`` in round 11).
+suites.
 
-Why a separate module: the certification ledger computes each entry's
-staleness from its module's transitive import closure, so a tiny shared
-constant living in ``suite.py`` forced every suite module to import
-``suite.py`` — fusing all extension entries into one closure and making
-"touch one operator file" stale everything. This module imports nothing
-from the operator package (only the table loader), so suites that need
-just a tokenizer expression or the decimal dot-product idiom stay
-decoupled from the dedup/text/similarity implementation files they don't
-actually run.
+This module imports nothing from the operator package (only the table
+loader), so a suite that needs just a tokenizer expression or the decimal
+dot-product idiom does not import ``suite.py`` to get it.
 """
 
 from __future__ import annotations

@@ -67,8 +67,9 @@ def count_min_estimate(sketch: DataFrame, keys: list) -> DataFrame:
     HintErrorLogger warned every run), though the planner then broadcast
     the sketch side on size anyway, so the executed plan is unchanged
     (BroadcastHashJoin BuildLeft/RightOuter -> BuildRight/LeftOuter,
-    plans/r12/sketch_count_min_{before,after}.txt); the flip makes the
-    broadcast intended rather than incidental and silences the warning.
+    ``git show 07602fa:plans/r12/sketch_count_min_{before,after}.txt``);
+    the flip makes the broadcast intended rather than incidental and
+    silences the warning.
     Left join keeps probes whose bucket has count 0; values are identical
     (same keys, same ``na.fill``, same min-over-rows aggregate)."""
     spark = sketch.sparkSession

@@ -22,12 +22,6 @@ from .oracles import (
 )
 from .shared import _DOT_DEC, _NORM_X, _NORM_Y, _SHINGLES, _WORDS, _query_vec
 
-# The SQL constants and cross-suite oracle builders moved to shared.py /
-# oracles.py in round 11 so sibling suites stop importing this module
-# (which fused every extension entry into one staleness closure); they
-# remain imported here because this module's own oracle f-strings and run
-# callables use them.
-
 
 def simhash_oracle() -> str:
     hexmap = "0123456789abcdef"
@@ -2002,9 +1996,3 @@ def extension_entries():
                    "verbatim-substring duplication across docs "
                    "(winnowing-sampled shared spans, Lee et al. 2022)"),
     ]
-    # NOTE: this list is ONLY this module's own entries. Aggregation of
-    # the other suite modules' entry lists lives in queries/registry.py
-    # (assembly plumbing): keeping cross-suite imports out of here keeps
-    # each suite module's import closure ITS OWN, which is what lets the
-    # certification ledger stale exactly the entries whose operator file
-    # changed instead of fusing every extension entry into one closure.

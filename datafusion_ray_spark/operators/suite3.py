@@ -586,36 +586,6 @@ ORDER BY d.event_type
 
 
 # ---------------------------------------------------------------------------
-
-
-def extension_entries3() -> list:
-    """Entries appended after :func:`suite2.extension_entries2`."""
-    from ..queries.registry import SuiteEntry
-
-    return [
-        SuiteEntry("win_rolling_median", run_rolling_median,
-                   ROLLING_MEDIAN_ORACLE,
-                   "exact trailing-10 rolling median per user "
-                   "(sorted-frame arithmetic, integer micro-units)"),
-        SuiteEntry("text_entropy", run_char_entropy, CHAR_ENTROPY_ORACLE,
-                   "character-entropy quality signal (integer fixed-point "
-                   "terms, gibberish/base64 detector)"),
-        SuiteEntry("text_bigram_lm", run_bigram_lm, BIGRAM_LM_ORACLE,
-                   "corpus bigram LM counts + integer-ppm conditional "
-                   "probabilities (top-20)"),
-        SuiteEntry("layout_zorder", run_zorder_layout, ZORDER_ORACLE,
-                   "Z-order (Morton) layout clustering with per-file "
-                   "bounding-box stats (Delta OPTIMIZE ZORDER shape)"),
-        SuiteEntry("profile_table", run_profile_table, PROFILE_ORACLE,
-                   "one-pass per-column table profile: null count, "
-                   "distinct count, min/max"),
-        SuiteEntry("ev_mad_outliers", run_mad_outliers, MAD_ORACLE,
-                   "median/MAD robust outlier report per event type "
-                   "(broadcast bounds joins)"),
-    ]
-
-
-# ---------------------------------------------------------------------------
 # Multimodal perceptual-hash near-dup — image-style dedup over the binary
 # payload column: aHash (64-bit average hash over the codec's 8x8 resize)
 # + banded candidate join + exact hamming verify. The multimodal twin of
@@ -856,31 +826,6 @@ ORDER BY e.event_id
 """
 
 
-def extension_entries3b() -> list:
-    from ..queries.registry import SuiteEntry
-
-    return [
-        SuiteEntry("mm_phash_dedup", run_phash_dedup,
-                   phash_oracle(PHASH_CERT_HAMMING),
-                   "multimodal perceptual-hash (aHash) near-dup pairs: "
-                   "banded candidates + exact inline hamming verify; the "
-                   "oracle replicates the banding bit-for-bit (cert "
-                   "threshold 20 so the match is non-vacuous — see "
-                   "PHASH_CERT_HAMMING)"),
-        SuiteEntry("dedup_apply_quality", run_dedup_apply_quality,
-                   dedup_apply_quality_oracle(),
-                   "dedup apply keeping each cluster's highest-quality "
-                   "member (longest text), recursive-CTE certified"),
-        SuiteEntry("source_cap", run_source_cap, SOURCE_CAP_ORACLE,
-                   "per-source volume cap (top-K docs per domain by "
-                   "length) — web-corpus domain balancing"),
-        SuiteEntry("join_value_band", run_value_band_join,
-                   VALUE_BAND_ORACLE,
-                   "numeric epsilon band join via bucketized equi-join "
-                   "(|dv|<=eps residual), linear shuffle"),
-    ]
-
-
 # ---------------------------------------------------------------------------
 # Exact triangle census — the third classic graph kernel (after the
 # connected components inside dedup_groups and PageRank): triangle and
@@ -1023,20 +968,6 @@ FROM uw JOIN cohort c USING (user_id)
 GROUP BY c.cohort_week, week_offset
 ORDER BY c.cohort_week, week_offset
 """
-
-
-def extension_entries3c() -> list:
-    from ..queries.registry import SuiteEntry
-
-    return [
-        SuiteEntry("graph_triangles", run_triangles, TRIANGLES_ORACLE,
-                   "exact triangle/wedge census over the trade graph "
-                   "(node-ordered orientation, MR triangle-count shape)"),
-        SuiteEntry("ev_retention_cohorts", run_retention_cohorts,
-                   RETENTION_ORACLE,
-                   "weekly retention cohort matrix (first-seen week x "
-                   "offset), three linear shuffles"),
-    ]
 
 
 # ---------------------------------------------------------------------------
@@ -1196,10 +1127,58 @@ FK_PROFILE_ORACLE = " UNION ALL ".join(
 ) + " ORDER BY fk"
 
 
-def extension_entries3d() -> list:
+# ---------------------------------------------------------------------------
+
+
+def extension_entries3() -> list:
+    """Entries appended after :func:`suite2.extension_entries2`."""
     from ..queries.registry import SuiteEntry
 
     return [
+        SuiteEntry("win_rolling_median", run_rolling_median,
+                   ROLLING_MEDIAN_ORACLE,
+                   "exact trailing-10 rolling median per user "
+                   "(sorted-frame arithmetic, integer micro-units)"),
+        SuiteEntry("text_entropy", run_char_entropy, CHAR_ENTROPY_ORACLE,
+                   "character-entropy quality signal (integer fixed-point "
+                   "terms, gibberish/base64 detector)"),
+        SuiteEntry("text_bigram_lm", run_bigram_lm, BIGRAM_LM_ORACLE,
+                   "corpus bigram LM counts + integer-ppm conditional "
+                   "probabilities (top-20)"),
+        SuiteEntry("layout_zorder", run_zorder_layout, ZORDER_ORACLE,
+                   "Z-order (Morton) layout clustering with per-file "
+                   "bounding-box stats (Delta OPTIMIZE ZORDER shape)"),
+        SuiteEntry("profile_table", run_profile_table, PROFILE_ORACLE,
+                   "one-pass per-column table profile: null count, "
+                   "distinct count, min/max"),
+        SuiteEntry("ev_mad_outliers", run_mad_outliers, MAD_ORACLE,
+                   "median/MAD robust outlier report per event type "
+                   "(broadcast bounds joins)"),
+        SuiteEntry("mm_phash_dedup", run_phash_dedup,
+                   phash_oracle(PHASH_CERT_HAMMING),
+                   "multimodal perceptual-hash (aHash) near-dup pairs: "
+                   "banded candidates + exact inline hamming verify; the "
+                   "oracle replicates the banding bit-for-bit (cert "
+                   "threshold 20 so the match is non-vacuous — see "
+                   "PHASH_CERT_HAMMING)"),
+        SuiteEntry("dedup_apply_quality", run_dedup_apply_quality,
+                   dedup_apply_quality_oracle(),
+                   "dedup apply keeping each cluster's highest-quality "
+                   "member (longest text), recursive-CTE certified"),
+        SuiteEntry("source_cap", run_source_cap, SOURCE_CAP_ORACLE,
+                   "per-source volume cap (top-K docs per domain by "
+                   "length) — web-corpus domain balancing"),
+        SuiteEntry("join_value_band", run_value_band_join,
+                   VALUE_BAND_ORACLE,
+                   "numeric epsilon band join via bucketized equi-join "
+                   "(|dv|<=eps residual), linear shuffle"),
+        SuiteEntry("graph_triangles", run_triangles, TRIANGLES_ORACLE,
+                   "exact triangle/wedge census over the trade graph "
+                   "(node-ordered orientation, MR triangle-count shape)"),
+        SuiteEntry("ev_retention_cohorts", run_retention_cohorts,
+                   RETENTION_ORACLE,
+                   "weekly retention cohort matrix (first-seen week x "
+                   "offset), three linear shuffles"),
         SuiteEntry("ev_upsert_merge", run_upsert_merge, UPSERT_MERGE_ORACLE,
                    "MERGE INTO kernel: latest-row snapshots + full outer "
                    "join with update/insert/delete semantics (CDC apply)"),

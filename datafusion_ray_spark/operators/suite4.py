@@ -144,10 +144,10 @@ def run_lsh_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bare count plus a LeftSemi count — and the AllPairs subtree (pair
     # expansion + inline Jaccard verify, the query's dominant kernel)
     # canonicalized differently under them, so it PLANNED AND RAN TWICE
-    # (plans/r12/dedup_lsh_eval_before.txt nodes 12-17 vs 18-32). A
-    # marker left join against the checkpointed LSH-true set computes
-    # both counts in one pass: count(*) is n_exact, count(_m) is the
-    # semi-join count — exact because minhash pairs are unique per
+    # (`git show 07602fa:plans/r12/dedup_lsh_eval_before.txt`, nodes
+    # 12-17 vs 18-32). A marker left join against the checkpointed LSH-true
+    # set computes both counts in one pass: count(*) is n_exact, count(_m)
+    # is the semi-join count — exact because minhash pairs are unique per
     # (doc_a, doc_b) (candidates are .distinct(), verify joins 1:1).
     ex_counts = (
         exact.join(

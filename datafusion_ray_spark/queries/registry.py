@@ -44,47 +44,18 @@ def _sql_entry(qdef: QueryDef) -> SuiteEntry:
     )
 
 
-# Flagship entries are certified first: external correctness gates may cap
-# how many registry entries they validate per run (the driver certifies the
-# FIRST 50), so order is the certification window.  Everything stays green
-# in the local oracle gate (tests/test_suite_oracle.py) regardless of order.
-#
-# WINDOW POLICY (round 10+, the rotation's successor): the 50-slot driver
-# window = q1–q22 (fixed) + 8 family flagships (fixed) + 20 rotating slots
-# picked by the STALENESS LEDGER (datafusion_ray_spark/certledger.py →
-# CERT_LEDGER.json): entries whose implementation file-closure changed
-# since their last driver-certified round first, then oldest-certified
-# first. Rounds 4–9 rotated never-certified entries through the window
-# until every declared entry had a driver row (192/192, round 9); from
-# round 10 the same window budget re-certifies the entries most likely to
-# have decayed. The concrete lists live in queries/window.py (policy-only
-# module, excluded from the ledger's closures — see its docstring), and
-# tests/test_cert_ledger.py asserts they reproduce the committed ledger.
-from .window import CERTIFICATION_FLAGSHIPS, CERTIFICATION_ROTATING
-
-_PRIORITY_AFTER_TPCH = CERTIFICATION_FLAGSHIPS + CERTIFICATION_ROTATING
-
-
 def build_registry() -> dict[str, SuiteEntry]:
-    unordered: dict[str, SuiteEntry] = {}
+    """All entries in insertion order: TPC-H q1–q22 first."""
+    entries: dict[str, SuiteEntry] = {}
     for qdef in {**TPCH_QUERIES, **COVERAGE_QUERIES, **COVERAGE2_QUERIES,
                  **COVERAGE3_QUERIES, **COVERAGE4_QUERIES,
                  **PIPELINE_QUERIES}.values():
-        unordered[qdef.name] = _sql_entry(qdef)
-    # Extension operators (DataFrame/Pandas-UDF implementations). The
-    # per-suite entry lists are aggregated HERE, not in operators/suite.py:
-    # this module is assembly plumbing excluded from the certification
-    # ledger's closures, so cross-suite imports in it don't fuse every
-    # extension entry into one shared staleness closure.
+        entries[qdef.name] = _sql_entry(qdef)
+    # Extension operators (DataFrame/Pandas-UDF implementations).
     from ..operators.sinks import extension_entries_sinks
     from ..operators.suite import extension_entries
     from ..operators.suite2 import extension_entries2
-    from ..operators.suite3 import (
-        extension_entries3,
-        extension_entries3b,
-        extension_entries3c,
-        extension_entries3d,
-    )
+    from ..operators.suite3 import extension_entries3
     from ..operators.suite4 import extension_entries4
     from ..operators.suite5 import extension_entries5
     from ..operators.suite6 import extension_entries6
@@ -95,9 +66,6 @@ def build_registry() -> dict[str, SuiteEntry]:
         extension_entries()
         + extension_entries2()
         + extension_entries3()
-        + extension_entries3b()
-        + extension_entries3c()
-        + extension_entries3d()
         + extension_entries4()
         + extension_entries5()
         + extension_entries6()
@@ -105,10 +73,5 @@ def build_registry() -> dict[str, SuiteEntry]:
         + extension_entries8()
         + extension_entries_sinks()
     ):
-        unordered[entry.name] = entry
-
-    entries: dict[str, SuiteEntry] = {}
-    for name in [q.name for q in TPCH_QUERIES.values()] + _PRIORITY_AFTER_TPCH:
-        entries[name] = unordered.pop(name)
-    entries.update(unordered)
+        entries[entry.name] = entry
     return entries

@@ -1,8 +1,8 @@
 """Scale-up certification: measure how every registry query's runtime grows
 when the data grows 10x, and flag super-linear plans.
 
-The round-3 verdict's bar is "plans you'd want at 100x" — PLANS.md and
-SHUFFLE_BASELINE.json argue that statically; this harness measures it.
+The round-3 verdict's bar is "plans you'd want at 100x" —
+SHUFFLE_BASELINE.json argues that statically; this harness measures it.
 It builds a 10x variant of sf0.1 (``.scaledata/x10``), runs the full
 fault-isolated bench against it, and writes ``SCALING_r04.json`` with the
 per-query wall-time and shuffle-byte ratios vs the committed 1x

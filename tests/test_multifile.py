@@ -9,9 +9,7 @@ per corpus table) and proves:
   ``spread()`` is a no-op (returns the SAME DataFrame object — the extra
   shuffle exists only in the degenerate case it fixes);
 - a representative query subset stays oracle-green on the directory
-  layout (the full 171-query artifact lives in CORRECTNESS_MULTIFILE.json,
-  regenerated per round via
-  ``python correctness_local.py --sf-dir .mfdata/sf0.01``).
+  layout.
 """
 
 from __future__ import annotations

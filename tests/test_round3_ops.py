@@ -2,7 +2,7 @@
 nearest as-of, SCD-2, EWMA, winsorize, funnel, SQ8 ANN, PageRank.
 
 Value-level certification lives in the oracle gate
-(tests/test_suite_oracle.py + CORRECTNESS_LOCAL.json); these tests pin the
+(tests/test_suite_oracle.py); these tests pin the
 edge-case SEMANTICS the oracles don't isolate: exactly-once pairing,
 tie-breaking, tolerance fall-through, interval chaining, fixed-point
 invariants.
