@@ -20,6 +20,7 @@ data except in ``collect()``/``show()``, exactly like the reference's lazy
 from __future__ import annotations
 
 import logging
+import operator
 from typing import Any
 
 import pyarrow as pa
@@ -31,6 +32,40 @@ from .session import build_session
 from .sql import run_script
 
 logger = logging.getLogger(__name__)
+
+#: the ``[col, op, value]`` filter-triple ops (``s3store._parse_filters``
+#: validates them) as column comparisons
+_FILTER_OPS = {
+    "=": operator.eq, "==": operator.eq, "!=": operator.ne,
+    "<": operator.lt, "<=": operator.le, ">": operator.gt, ">=": operator.ge,
+}
+
+
+def _shape(df: DataFrame, columns, filters) -> DataFrame:
+    """Apply a declared projection and AND-ed filter triples."""
+    if columns:
+        df = df.select(*columns)
+    for col, op, val in filters:
+        df = df.where(_FILTER_OPS[op](F.col(col), val))
+    return df
+
+
+def _missing_connector(exc: Exception) -> bool:
+    """True when a Hadoop-connector read failed only because the connector
+    is absent — the one tier-1 failure the pure-Python tiers exist for.
+    Any other failure (IAM denied, throttling, bad endpoint, missing key)
+    must surface as-is: silently rerouting a production-scale table
+    through a pure-Python reader would bury the real cause AND the real
+    performance."""
+    msg = f"{type(exc).__name__}: {exc}"
+    return any(s in msg for s in (
+        "No FileSystem for scheme",
+        # a partially-installed classpath (hadoop-aws present,
+        # aws-sdk-bundle absent) raises NoClassDefFoundError, whose
+        # message need not mention ClassNotFoundException
+        "ClassNotFoundException", "NoClassDefFoundError",
+        "UnsupportedFileSystemException",
+    ))
 
 
 class DFRayDataFrame:
@@ -302,35 +337,21 @@ class DFRayContext:
         """
         import json
 
-        raw = path
-        columns = options.pop("columns", None)
-        if isinstance(columns, str):
-            columns = [c.strip() for c in columns.split(",") if c.strip()]
-        filters = options.pop("filters", None)
-        if isinstance(filters, str):
-            filters = json.loads(filters)
+        from .sources.s3store import (
+            _declared_entries,
+            _parse_columns,
+            _parse_filters,
+        )
 
-        def shape(df: DataFrame) -> DataFrame:
-            if columns:
-                df = df.select(*columns)
-            for col, op, val in filters or ():
-                c = F.col(col)
-                df = df.where(
-                    {"=": c == val, "==": c == val, "!=": c != val,
-                     "<": c < val, "<=": c <= val,
-                     ">": c > val, ">=": c >= val}[op]
-                )
-            return df
+        raw = path
+        declared = {k: options.pop(k, None) for k in ("columns", "filters")}
+        columns = _parse_columns(declared)
+        filters = _parse_filters(declared)
 
         # Multi-object http(s) datasets: a LIST of object URLs, or
         # ``manifest=True`` marking ``path`` as a URL whose body lists
-        # them (one per line, # comments, relative entries resolve against
-        # the manifest's directory; an optional ``url<whitespace>bytes``
-        # size annotation lets split-mode planning skip every per-URL
-        # HEAD probe — ONE manifest fetch plans the dataset, the http
-        # analogue of s3 sizes riding the listing). No generic http
-        # listing protocol exists, so explicit enumeration is the
-        # multi-object analogue of the reference's object-store listing.
+        # them — no generic http listing protocol exists, so explicit
+        # enumeration is the analogue of the reference's store listing.
         manifest: str | None = None
         if options.pop("manifest", None):
             if isinstance(path, (list, tuple)):
@@ -339,35 +360,25 @@ class DFRayContext:
                     "manifest's URL as path, not both"
                 )
             manifest = str(path)
-        # A list element is a URL or a (url, size_bytes) pair — sizes give
-        # the list form the same zero-probe split planning as a
-        # size-annotated manifest (the planner HEAD-probes only entries
-        # that don't carry one).
+        # A list element is a URL or a [url, size_bytes] pair (sizes
+        # spare the planner its size probes).
         url_list: list | None = None
-        first_url: str | None = None
         if isinstance(path, (list, tuple)):
-            url_list = []
-            for u in path:
-                if isinstance(u, (list, tuple)) and len(u) == 2:
-                    url_list.append([str(u[0]), int(u[1])])
-                else:
-                    url_list.append(str(u))
-            urls_only = [u[0] if isinstance(u, list) else u
-                         for u in url_list]
-            if not urls_only or not all(
-                u.startswith(("http://", "https://")) for u in urls_only
+            url_list = list(path)
+            entries = _declared_entries({"urls": url_list}, "urls") or []
+            if not entries or not all(
+                u.startswith(("http://", "https://")) for u, _ in entries
             ):
                 raise ValueError(
                     "register_parquet with a list takes http(s) object "
                     f"URLs (or [url, size] pairs); got {url_list!r}"
                 )
-            first_url = urls_only[0]
-            path = first_url  # route into the http branch below
+            path = entries[0][0]  # route into the http branch below
             # provenance must not misreport a multi-object dataset as its
             # first object
             raw = (
-                first_url if len(urls_only) == 1
-                else f"{first_url} (+{len(urls_only) - 1} more objects)"
+                path if len(entries) == 1
+                else f"{path} (+{len(entries) - 1} more objects)"
             )
 
         path = self._normalize_path(path)
@@ -376,34 +387,22 @@ class DFRayContext:
             # too (src/util.rs:523-580). The distributed ranged source
             # needs Range support; servers without it degrade to the same
             # driver-spool fallback register_csv uses.
-            try:
-                from .sources.httpparquet import register_http_parquet
+            from .sources.httpparquet import (
+                RANGE_UNSUPPORTED_TOKEN,
+                HTTPParquetDataSource,
+                RangeUnsupportedError,
+                _HTTPStore,
+            )
 
-                register_http_parquet(self.spark)
-                reader = self.spark.read.format("httpparquet")
-                if url_list is not None:
-                    reader = reader.option("urls", json.dumps(url_list))
-                elif manifest:
-                    reader = reader.option("manifest", str(manifest))
-                else:
-                    reader = reader.option("url", raw)
-                if columns:
-                    reader = reader.option("columns", ",".join(columns))
-                if filters:
-                    reader = reader.option(
-                        "filters", json.dumps(list(filters))
-                    )
-                for k, v in options.items():
-                    reader = reader.option(k, str(v))
-                df = reader.load()
-                df.limit(0).collect()  # surface Range/footer errors NOW
-                for col, op, val in filters or ():
-                    c = F.col(col)
-                    df = df.where(
-                        {"=": c == val, "==": c == val, "!=": c != val,
-                         "<": c < val, "<=": c <= val,
-                         ">": c > val, ">=": c >= val}[op]
-                    )
+            src = (
+                {"urls": json.dumps(url_list)} if url_list is not None
+                else {"manifest": manifest} if manifest
+                else {"url": raw}
+            )
+            try:
+                df = self._ranged_parquet(
+                    HTTPParquetDataSource, src, columns, filters, options
+                )
                 self._register(name, df, raw)
                 return
             except Exception as exc:
@@ -417,11 +416,6 @@ class DFRayContext:
                 # the type when the raise is driver-side, its sentinel
                 # token when Spark's worker boundary has flattened the
                 # exception to message text.
-                from .sources.httpparquet import (
-                    RANGE_UNSUPPORTED_TOKEN,
-                    RangeUnsupportedError,
-                )
-
                 range_unsupported = isinstance(
                     exc, RangeUnsupportedError
                 ) or RANGE_UNSUPPORTED_TOKEN in f"{exc}"
@@ -430,41 +424,18 @@ class DFRayContext:
                 logger.info(
                     "server lacks Range support; driver-spool fallback"
                 )
-            from .sources.httpparquet import _url_entries as _resolve_urls
-
-            src_opts: dict[str, Any] = (
-                {"urls": url_list} if url_list is not None
-                else {"manifest": manifest} if manifest
-                else {"url": raw}
-            )
-            local = [self._fetch_url(u)
-                     for u, _size in _resolve_urls(src_opts)]
-            self._register(name, shape(self.spark.read.parquet(*local)), raw)
+            local = [self._fetch_url(u) for u, _ in _HTTPStore(src).entries()]
+            df = self.spark.read.parquet(*local)
+            self._register(name, _shape(df, columns, filters), raw)
             return
         if path.startswith(("s3a://", "gs://")):
             try:
                 df = self.spark.read.parquet(path)
                 df.limit(0).collect()  # surface missing-connector NOW
-                self._register(name, shape(df), path)
+                self._register(name, _shape(df, columns, filters), path)
                 return
             except Exception as exc:
-                # Fall back ONLY when the connector itself is absent. Any
-                # other tier-1 failure (IAM denied, throttling, bad
-                # endpoint) must surface as-is: silently rerouting a
-                # production-scale table through the pure-Python reader
-                # would bury the real cause AND the real performance.
-                msg = f"{type(exc).__name__}: {exc}"
-                missing_connector = (
-                    "No FileSystem for scheme" in msg
-                    # Partially-installed classpath (hadoop-aws present,
-                    # aws-sdk-bundle absent) raises NoClassDefFoundError,
-                    # whose message need not mention ClassNotFoundException
-                    # (advisor round-8).
-                    or "ClassNotFoundException" in msg
-                    or "NoClassDefFoundError" in msg
-                    or "UnsupportedFileSystemException" in msg
-                )
-                if not missing_connector:
+                if not _missing_connector(exc):
                     raise
                 logger.info(
                     "object-store connector unavailable; "
@@ -483,31 +454,39 @@ class DFRayContext:
                 options.setdefault(
                     "endpoint_url", "https://storage.googleapis.com"
                 )
-            from .sources.s3store import register_s3_parquet
+            from .sources.s3store import S3ParquetDataSource
 
-            register_s3_parquet(self.spark)
-            reader = self.spark.read.format("s3parquet").option("path", raw)
-            if columns:
-                reader = reader.option("columns", ",".join(columns))
-            if filters:
-                reader = reader.option("filters", json.dumps(list(filters)))
-            for k, v in options.items():
-                reader = reader.option(k, str(v))
-            df = reader.load()
-            df.limit(0).collect()  # surface credential/listing errors NOW
-            # projection already happened in the source; the where() makes
-            # the stats-pruned scan EXACT (surviving row groups can still
-            # hold non-matching rows).
-            for col, op, val in filters or ():
-                c = F.col(col)
-                df = df.where(
-                    {"=": c == val, "==": c == val, "!=": c != val,
-                     "<": c < val, "<=": c <= val,
-                     ">": c > val, ">=": c >= val}[op]
-                )
+            df = self._ranged_parquet(
+                S3ParquetDataSource, {"path": raw}, columns, filters, options
+            )
             self._register(name, df, raw)
             return
-        self._register(name, shape(self.spark.read.parquet(path)), path)
+        df = self.spark.read.parquet(path)
+        self._register(name, _shape(df, columns, filters), path)
+
+    def _ranged_parquet(self, source, src_opts: dict, columns, filters,
+                        options: dict) -> DataFrame:
+        """Scan through a ranged-parquet source (``s3parquet`` or
+        ``httpparquet``): the source reads only the projected columns and
+        drops row groups the footer stats refute; the ``where()`` on top
+        makes the filters EXACT (surviving row groups can still hold
+        non-matching rows)."""
+        import json
+
+        from .sources.s3store import _enable_python_filter_pushdown
+
+        _enable_python_filter_pushdown(self.spark)
+        self.spark.dataSource.register(source)
+        reader = self.spark.read.format(source.name()).options(**src_opts)
+        if columns:
+            reader = reader.option("columns", ",".join(columns))
+        if filters:
+            reader = reader.option("filters", json.dumps(filters))
+        for k, v in options.items():
+            reader = reader.option(k, str(v))
+        df = reader.load()
+        df.limit(0).collect()  # surface Range/footer/credential errors NOW
+        return _shape(df, None, filters)
 
     def register_csv(self, name: str, path: str, **options: Any) -> None:
         """Register a CSV file with header+schema inference (the reference
@@ -550,11 +529,7 @@ class DFRayContext:
                 self._register(name, df, s3a)
                 return
             except Exception as exc:
-                msg = f"{type(exc).__name__}: {exc}"
-                if not any(s in msg for s in (
-                    "No FileSystem for scheme", "ClassNotFoundException",
-                    "NoClassDefFoundError", "UnsupportedFileSystemException",
-                )):
+                if not _missing_connector(exc):
                     raise  # real failure (auth, missing key): fail loud
                 logger.info("s3a connector unavailable; presigned-URL tier")
             expiry = int(options.pop("presign_expiry", 3600))

@@ -21,6 +21,15 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
+def _key_and_shard(n_shards: int, seed: str, id_col: str):
+    """The seeded permutation key md5(seed:id) and the shard it assigns."""
+    key = F.md5(F.concat_ws(":", F.lit(seed), F.col(id_col).cast("string")))
+    shard = (F.conv(F.substring(key, 1, 4), 16, 10).cast("long") % n_shards).cast(
+        "int"
+    )
+    return key, shard
+
+
 def seeded_shuffle(df: DataFrame, n_shards: int = 8, seed: str = "42",
                    id_col: str = "doc_id") -> DataFrame:
     """Assign each row a (shard, pos) under the seeded permutation.
@@ -30,10 +39,7 @@ def seeded_shuffle(df: DataFrame, n_shards: int = 8, seed: str = "42",
     except on id collisions, so (key, id) ordering is total and the output
     is bit-deterministic.
     """
-    key = F.md5(F.concat_ws(":", F.lit(seed), F.col(id_col).cast("string")))
-    shard = (F.conv(F.substring(key, 1, 4), 16, 10).cast("long") % n_shards).cast(
-        "int"
-    )
+    key, shard = _key_and_shard(n_shards, seed, id_col)
     pos = F.row_number().over(
         Window.partitionBy("shard").orderBy("shuffle_key", id_col)
     )
@@ -50,10 +56,7 @@ def write_shards(df: DataFrame, path: str, n_shards: int = 8,
     rows stored in permutation order (the streaming-read order a trainer
     consumes). One hash repartition + partition-local sort — the 100 TB
     write path."""
-    key = F.md5(F.concat_ws(":", F.lit(seed), F.col(id_col).cast("string")))
-    shard = (F.conv(F.substring(key, 1, 4), 16, 10).cast("long") % n_shards).cast(
-        "int"
-    )
+    key, shard = _key_and_shard(n_shards, seed, id_col)
     (
         df.withColumn("shuffle_key", key)
         .withColumn("shard", shard)

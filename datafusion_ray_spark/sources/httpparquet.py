@@ -1,21 +1,14 @@
-"""Distributed HTTP(S) parquet source — extends the reference's http
-object-store capability (``/root/reference/src/util.rs:523-580`` registers
-an http store from the URL scheme; its DataFusion scans then ranged-read
-parquet over it) to this engine's ``register_parquet("https://...")``.
+"""The http(s) store of the ranged-parquet reader — extends the reference's
+http object-store capability (``/root/reference/src/util.rs:523-580``
+registers an http store from the URL scheme; its DataFusion scans then
+ranged-read parquet over it) to this engine's
+``register_parquet("https://...")``.
 
-Same architecture as ``sources/s3store.py`` with urllib Range GETs in
-place of boto3 (one shared planning core — the row-group packer, the
-stats pruner, and the column projector are imported from there):
-
-- the PLANNER issues one size probe (HEAD, or a 1-byte Range GET when the
-  server hides Content-Length), parses the parquet FOOTER from a cached
-  tail fetch, and emits one input partition per ~``partition_bytes`` of
-  row groups — row groups refuted by the footer's min/max stats against
-  Catalyst's pushed predicates (``pushFilters``, round-10) or the
-  user-declared ``filters`` option are dropped here, driver-side;
-- EVERY EXECUTOR opens its own ranged reader and fetches exactly the
-  byte ranges its row groups (and, with ``columns``, only the projected
-  columns' pages) cover — Arrow batches out, never per-row Python.
+The scan itself — planner, stats pruner, ranged file, Arrow-batch reads —
+is the one in ``sources/s3store.py``; this module supplies only what http
+does differently: resolving the scan's objects from ``url``, ``urls`` or
+``manifest``, probing a size (HEAD, or a 1-byte Range GET when the server
+hides Content-Length), and the urllib Range GET.
 
 Servers without Range support cannot serve partial reads of a columnar
 file; the facade degrades to its driver-spool fallback (download once,
@@ -24,25 +17,14 @@ read locally) rather than failing, same as ``register_csv``.
 
 from __future__ import annotations
 
-import io
 import urllib.request
 
-from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
-
 from .s3store import (
-    DEFAULT_FOOTER_PLANNING_MAX_FILES,
-    DEFAULT_PARTITION_BYTES,
-    _FOOTER_PROBE,
+    _RangedParquetSource,
+    _declared_entries,
     _enable_python_filter_pushdown,
-    _pack_row_groups,
-    _parse_columns,
-    _parse_filters,
-    _range_plan,
-    _select_row_groups_for_range,
-    _triples_from_pushed,
     redact_url,
 )
-
 
 #: one manifest fetch serves a whole scan: ``schema()`` and the reader's
 #: ``partitions()`` both resolve the URL list, and fetching twice is a
@@ -101,45 +83,6 @@ def _manifest_entries(murl: str) -> list[tuple[str, int | None]]:
     return entries
 
 
-def _url_entries(opts: dict) -> list[tuple[str, int | None]]:
-    """The (url, known_size) pairs this scan covers. Three declaration
-    forms:
-
-    - ``url``: one object (the round-9 surface, unchanged);
-    - ``urls``: a JSON list of object URLs — the multi-object analogue of
-      the reference's listing behavior over an http store, which has no
-      generic listing protocol to discover objects with; an element may
-      also be a ``[url, size_bytes]`` pair, giving the list form the same
-      zero-probe split planning as a size-annotated manifest;
-    - ``manifest``: a URL whose body LISTS object URLs (one per line,
-      ``#`` comments allowed, optional ``url<whitespace>bytes`` size
-      annotation) — how a 100 TB publisher actually exposes a many-file
-      dataset over plain http.
-
-    Sizes are ``None`` where the declaration doesn't carry them; the
-    planner HEAD-probes only those — and in split mode only up to
-    ``size_probe_max_files`` of them, beyond which the probe defers to
-    the task (see ``DEFAULT_SIZE_PROBE_MAX_FILES``).
-    """
-    import json
-
-    if opts.get("manifest"):
-        return _manifest_entries(opts["manifest"])
-    if opts.get("urls"):
-        raw = opts["urls"]
-        urls = json.loads(raw) if isinstance(raw, str) else list(raw)
-        if not urls:
-            raise ValueError("'urls' option is an empty list")
-        entries = []
-        for u in urls:
-            if isinstance(u, (list, tuple)) and len(u) == 2:
-                entries.append((str(u[0]), int(u[1])))
-            else:
-                entries.append((str(u), None))
-        return entries
-    return [(opts["url"], None)]
-
-
 #: stable machine-readable token for "this server cannot serve ranged
 #: reads". It is part of the error CONTRACT: the facade's driver-spool
 #: fallback keys on this token (plus the exception type driver-side)
@@ -147,19 +90,6 @@ def _url_entries(opts: dict) -> list[tuple[str, int | None]]:
 #: only message text survives into the PySparkException the driver sees.
 #: Human wording around it may change; the token must not.
 RANGE_UNSUPPORTED_TOKEN = "[RANGE_UNSUPPORTED]"
-
-#: plain (size-less) URL lists larger than this stop paying a planner
-#: HEAD per URL in split mode: beyond the threshold each unsized entry
-#: becomes ONE whole-file partition whose TASK probes the size itself
-#: (one HEAD per file, cluster-parallel, overlapped with the read)
-#: instead of the driver draining an O(files) probe tail through a
-#: 16-way pool before a single task can launch. The cost is intra-file
-#: byte-range splitting for those entries — irrelevant above the
-#: threshold, where per-file parallelism already exceeds any executor
-#: count; a publisher with few huge objects should annotate sizes
-#: (``[url, bytes]`` pairs or a sized manifest), which keeps exact range
-#: splits with ZERO probes. Override with ``size_probe_max_files``.
-DEFAULT_SIZE_PROBE_MAX_FILES = 256
 
 
 class RangeUnsupportedError(OSError):
@@ -172,235 +102,84 @@ class RangeUnsupportedError(OSError):
         super().__init__(f"{RANGE_UNSUPPORTED_TOKEN} {detail}")
 
 
-def _probe_size(url: str, timeout: float = 60.0) -> int:
-    """Object size via HEAD; falls back to a 1-byte Range GET's
-    Content-Range header (servers that hide Content-Length on HEAD)."""
-    req = urllib.request.Request(url, method="HEAD")
-    try:
-        with urllib.request.urlopen(req, timeout=timeout) as resp:  # noqa: S310 - user-supplied source
+class _HTTPStore:
+    """The objects of one http(s) scan. Three declaration forms:
+
+    - ``url``: one object;
+    - ``urls``: a JSON list of object URLs — the multi-object analogue of
+      the reference's listing behavior over an http store, which has no
+      generic listing protocol to discover objects with; an element may
+      also be a ``[url, size_bytes]`` pair, giving the list form the same
+      zero-probe split planning as a size-annotated manifest;
+    - ``manifest``: a URL whose body LISTS object URLs (one per line,
+      ``#`` comments allowed, optional ``url<whitespace>bytes`` size
+      annotation) — how a 100 TB publisher actually exposes a many-file
+      dataset over plain http.
+
+    Refs are object URLs."""
+
+    timeout = 60.0
+
+    def __init__(self, opts: dict):
+        self.opts = opts
+
+    def entries(self) -> list[tuple[str, int | None]]:
+        if self.opts.get("manifest"):
+            return _manifest_entries(self.opts["manifest"])
+        return (_declared_entries(self.opts, "urls")
+                or [(self.opts["url"], None)])
+
+    def probe_size(self, url: str) -> int:
+        """Object size via HEAD; falls back to a 1-byte Range GET's
+        Content-Range header (servers that hide Content-Length on
+        HEAD)."""
+        req = urllib.request.Request(url, method="HEAD")
+        try:
+            with urllib.request.urlopen(req, timeout=self.timeout) as resp:  # noqa: S310 - user-supplied source
+                length = resp.headers.get("Content-Length")
+                if length:
+                    return int(length)
+        except Exception:  # noqa: BLE001 - fall through to the Range probe
+            pass
+        req = urllib.request.Request(url, headers={"Range": "bytes=0-0"})
+        with urllib.request.urlopen(req, timeout=self.timeout) as resp:  # noqa: S310
+            rng = resp.headers.get("Content-Range", "")
+            if "/" in rng:
+                return int(rng.rsplit("/", 1)[1])
+            # Range-less server answering 200: its Content-Length IS the
+            # object size (the body is discarded; the ranged reader will
+            # fail loudly on the first real read and the facade spools).
             length = resp.headers.get("Content-Length")
-            if length:
+            if resp.status == 200 and length:
                 return int(length)
-    except Exception:  # noqa: BLE001 - fall through to the Range probe
-        pass
-    req = urllib.request.Request(url, headers={"Range": "bytes=0-0"})
-    with urllib.request.urlopen(req, timeout=timeout) as resp:  # noqa: S310
-        rng = resp.headers.get("Content-Range", "")
-        if "/" in rng:
-            return int(rng.rsplit("/", 1)[1])
-        # Range-less server answering 200: its Content-Length IS the
-        # object size (the body is discarded; the ranged reader will
-        # fail loudly on the first real read and the facade spools).
-        length = resp.headers.get("Content-Length")
-        if resp.status == 200 and length:
-            return int(length)
-    raise RangeUnsupportedError(
-        f"cannot determine object size for {redact_url(url)}"
-    )
-
-
-class _RangedHTTPFile(io.RawIOBase):
-    """Seekable read-only file over one HTTP object via Range GETs, with
-    the same cached-tail trick as ``_RangedS3File``: footer parsing costs
-    ONE request, data pages outside the tail pay their own ranged GETs."""
-
-    def __init__(self, url: str, size: int, timeout: float = 60.0):
-        self._url, self._size, self._timeout = url, size, timeout
-        self._pos = 0
-        self._tail_start = max(0, size - _FOOTER_PROBE)
-        self._tail: bytes | None = None
-
-    def seekable(self) -> bool:
-        return True
-
-    def readable(self) -> bool:
-        return True
-
-    def seek(self, pos: int, whence: int = 0) -> int:
-        self._pos = (
-            pos if whence == 0
-            else self._pos + pos if whence == 1
-            else self._size + pos
+        raise RangeUnsupportedError(
+            f"cannot determine object size for {redact_url(url)}"
         )
-        return self._pos
 
-    def tell(self) -> int:
-        return self._pos
-
-    def _get(self, start: int, end: int) -> bytes:
+    def get(self, url: str, start: int, end: int) -> bytes:
         req = urllib.request.Request(
-            self._url, headers={"Range": f"bytes={start}-{end}"}
+            url, headers={"Range": f"bytes={start}-{end}"}
         )
-        with urllib.request.urlopen(req, timeout=self._timeout) as resp:  # noqa: S310
+        with urllib.request.urlopen(req, timeout=self.timeout) as resp:  # noqa: S310
             if resp.status != 206:
                 raise RangeUnsupportedError(
-                    f"server ignored Range request for "
-                    f"{redact_url(self._url)} (HTTP {resp.status}); "
-                    "ranged parquet reads need Accept-Ranges: bytes"
+                    f"server ignored Range request for {redact_url(url)} "
+                    f"(HTTP {resp.status}); ranged parquet reads need "
+                    "Accept-Ranges: bytes"
                 )
             return resp.read()
 
-    def read(self, n: int = -1) -> bytes:
-        if n is None or n < 0:
-            end = self._size - 1
-        else:
-            end = min(self._pos + n, self._size) - 1
-        if end < self._pos:
-            return b""
-        if self._pos >= self._tail_start and self._size > 0:
-            if self._tail is None:
-                self._tail = self._get(self._tail_start, self._size - 1)
-            off = self._pos - self._tail_start
-            data = self._tail[off : end - self._tail_start + 1]
-            self._pos += len(data)
-            return data
-        data = self._get(self._pos, end)
-        self._pos += len(data)
-        return data
 
-
-class HTTPParquetDataSource(DataSource):
+class HTTPParquetDataSource(_RangedParquetSource):
     """``spark.read.format("httpparquet").option("url", "https://...")``
     (single object), ``.option("urls", json_list)`` (explicit multi-
     object), or ``.option("manifest", "https://.../manifest.txt")``."""
 
+    store = _HTTPStore
+
     @classmethod
     def name(cls) -> str:
         return "httpparquet"
-
-    def schema(self):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import from_arrow_schema
-
-        opts = dict(self.options)
-        # parquet is self-describing; first footer. A manifest-carried
-        # size skips even the schema probe's HEAD.
-        url, size = _url_entries(opts)[0]
-        pf = pq.ParquetFile(_RangedHTTPFile(url, size if size is not None
-                                            else _probe_size(url)))
-        arrow_schema = pf.schema_arrow
-        cols = _parse_columns(opts)
-        if cols:
-            arrow_schema = pa.schema([arrow_schema.field(c) for c in cols])
-        _parse_filters(opts)  # validate triples at planning time
-        return from_arrow_schema(arrow_schema)
-
-    def reader(self, schema):
-        return _HTTPParquetReader(schema, dict(self.options))
-
-
-class _HTTPParquetReader(DataSourceReader):
-    def __init__(self, schema, options: dict):
-        self.schema = schema
-        self.options = options
-        self.part_bytes = int(
-            options.get("partition_bytes", DEFAULT_PARTITION_BYTES)
-        )
-        self._parts: list | None = None
-        self._pushed: list[tuple[str, str, object]] = []
-
-    def pushFilters(self, filters):
-        """Same contract as ``_S3ParquetReader.pushFilters``: Catalyst's
-        predicates feed the footer-stats row-group pruner; every filter
-        is returned unconsumed so exact filtering stays above the scan."""
-        self._pushed = _triples_from_pushed(filters)
-        self._parts = None
-        return filters
-
-    def partitions(self):
-        if self._parts is None:
-            from concurrent.futures import ThreadPoolExecutor
-
-            import pyarrow.parquet as pq
-
-            entries = _url_entries(self.options)
-            max_footer_files = int(self.options.get(
-                "footer_planning_max_files",
-                DEFAULT_FOOTER_PLANNING_MAX_FILES,
-            ))
-            if len(entries) > max_footer_files:
-                # Hadoop split protocol over http: sizes come from the
-                # manifest when annotated (zero planning requests beyond
-                # the one manifest fetch — the analogue of s3 sizes
-                # riding the listing), HEAD probes only for entries that
-                # don't carry one; tasks read their own footers and claim
-                # row groups by midpoint, pruning task-side.
-                unsized = [u for u, s in entries if s is None]
-                probe_max = int(self.options.get(
-                    "size_probe_max_files", DEFAULT_SIZE_PROBE_MAX_FILES))
-                if len(unsized) > probe_max:
-                    # size-deferred partitions: zero planning requests;
-                    # the task probes its own file (size=None sentinel)
-                    # and claims every surviving row group.
-                    plan = _range_plan(
-                        [e for e in entries if e[1] is not None],
-                        self.part_bytes)
-                    plan += [(u, None, 0, None) for u in unsized]
-                    self._parts = [InputPartition(p) for p in plan]
-                    return self._parts
-                if unsized:
-                    with ThreadPoolExecutor(
-                        max_workers=min(16, len(unsized))
-                    ) as pool:
-                        probed = dict(zip(unsized, pool.map(_probe_size,
-                                                            unsized)))
-                else:
-                    probed = {}
-                sized = [(u, s if s is not None else probed[u])
-                         for u, s in entries]
-                plan = _range_plan(sized, self.part_bytes)
-                self._parts = [InputPartition(p) for p in plan]
-                return self._parts
-
-            def footer(entry):
-                url, size = entry
-                if size is None:
-                    size = _probe_size(url)
-                meta = pq.ParquetFile(_RangedHTTPFile(url, size)).metadata
-                return url, size, meta
-
-            # footers fetched CONCURRENTLY: planning a many-URL dataset
-            # costs ~one round-trip latency, not one serial probe per URL
-            if len(entries) > 1:
-                with ThreadPoolExecutor(
-                    max_workers=min(16, len(entries))
-                ) as pool:
-                    metas = list(pool.map(footer, entries))
-            else:
-                metas = [footer(e) for e in entries]
-            filters = _parse_filters(self.options) + self._pushed
-            parts = _pack_row_groups(metas, self.part_bytes, filters)
-            self._parts = [InputPartition(p) for p in parts]
-        return self._parts
-
-    def read(self, partition):
-        # Empty plan (all row groups filter-refuted) -> pyspark passes one
-        # None partition in place of the empty list; yield nothing.
-        if partition is None:
-            return
-        import pyarrow.parquet as pq
-
-        if len(partition.value) == 4:  # byte-range split (large listing)
-            url, size, start, end = partition.value
-            if size is None:  # size-deferred whole-file partition: the
-                # planner skipped the HEAD tail; this task probes its own
-                # file and owns its entire byte range.
-                size = _probe_size(url)
-                end = size
-            pf = pq.ParquetFile(_RangedHTTPFile(url, size))
-            row_groups = _select_row_groups_for_range(
-                pf.metadata, start, end,
-                _parse_filters(self.options) + self._pushed,
-            )
-            if not row_groups:
-                return
-        else:
-            url, size, row_groups = partition.value
-            pf = pq.ParquetFile(_RangedHTTPFile(url, size))
-        cols = _parse_columns(self.options)
-        for batch in pf.iter_batches(row_groups=row_groups, columns=cols):
-            yield batch.select(cols) if cols else batch
 
 
 def register_http_parquet(spark) -> None:

@@ -1,7 +1,14 @@
-"""Distributed S3 parquet source — a Spark 4 Python Data Source that closes
-the reference's s3 object-store capability (``/root/reference/src/util.rs:
-523-580`` builds an AmazonS3 object store from the URL scheme and registers
-it for scans) when the JVM-side ``s3a://`` connector jars are absent.
+"""Distributed ranged-parquet reader: ONE Spark 4 Python Data Source core
+for parquet on any store that serves ranged GETs, plus its S3 store.
+
+The reference reads parquet from s3, gs and http through one DataFusion
+scan; only the object store differs, picked from the URL scheme
+(``/root/reference/src/util.rs:523-580``). Same split here: this module
+holds the scan (seekable ranged file, DataSource/reader pair, planner,
+stats pruner) and the S3 store; ``sources/httpparquet.py`` holds only the
+http store. A store supplies what differs: ``entries()`` — the scan's
+objects as ``[(ref, size | None)]``; ``get(ref, start, end)`` — one
+ranged GET, ``end`` inclusive; ``probe_size(ref)``.
 
 The production path for S3 remains Hadoop's ``s3a`` connector (jars +
 IAM); ``DFRayContext.register_parquet("s3://...")`` tries that first and
@@ -10,53 +17,47 @@ can still read S3 tables DISTRIBUTED rather than not at all.
 
 How it distributes (the same split Spark's own parquet source makes):
 
-- The PLANNER (driver) lists the prefix (one ``list_objects_v2`` page
-  walk). For listings up to ``footer_planning_max_files`` (default 256)
-  it range-reads each file's FOOTER and emits one input partition per
+- The PLANNER (driver) resolves the entries. Up to
+  ``footer_planning_max_files`` (default 256) objects, it range-reads
+  each FOOTER (16-way concurrent) and emits one input partition per
   contiguous run of row groups packed to ``partition_bytes`` (default
   128 MB) — precise splits and plan-time stats pruning. BEYOND that it
-  switches to the Hadoop split protocol: byte-range partitions computed
-  from the listing's sizes ALONE (zero per-file driver round trips — a
-  100 TB / 800k-object prefix plans without the driver transferring
-  ~50 GB of footer tails), and each TASK reads its own footer, claims
-  the row groups whose byte midpoint falls in its range (contiguous
-  ranges tile the file, so exactly-once), and applies the same stats
-  pruning task-side.
+  switches to the Hadoop split protocol: byte-range partitions from sizes
+  ALONE, and each TASK reads its own footer, claims the row groups whose
+  byte midpoint falls in its range (contiguous ranges tile the file, so
+  exactly-once), and prunes task-side. Unsized entries are probed 16-way
+  on the driver — or, above ``size_probe_max_files`` of them, each
+  becomes one whole-file partition whose task probes its own size.
 - EVERY EXECUTOR opens its own ranged reader over exactly its row groups
-  (boto3 ``Range:`` GETs behind a seekable file object; pyarrow reads only
-  the byte ranges those row groups cover) and yields ARROW BATCHES — the
-  Python Data Source Arrow fast path, no per-row Python.
+  (pyarrow reads only the byte ranges those row groups cover) and yields
+  ARROW BATCHES — the Python Data Source Arrow fast path.
 
-Schema comes from the first footer (parquet is self-describing, matching
-``spark.read.parquet``). Predicate pushdown is AUTOMATIC (round-10):
-Spark 4.1's Python Data Source ``pushFilters`` API hands the reader the
-conjunctive predicates Catalyst collected above the scan
+Schema comes from the first object's footer (parquet is self-describing,
+matching ``spark.read.parquet``); only that object's size is probed.
+Predicate pushdown is AUTOMATIC: Spark 4.1's ``pushFilters`` API hands
+the reader the conjunctive predicates Catalyst collected above the scan
 (``spark.sql.python.filterPushdown.enabled`` — set by the engine's
-session builder and by ``register_s3_parquet``), and the planner feeds
+session builder and by the ``register_*`` helpers), and the planner feeds
 them into the same footer-stats row-group pruner the user-declared
 ``filters`` option uses. Every pushed filter is returned to Spark
-unconsumed (pruning is conservative — it drops provably-empty row
-groups, it does not evaluate predicates), so exact filtering always
-stays in the plan above the scan. The USER-declared options remain for
-sessions without the pushdown conf (the analogue of the reference's
-forced parquet pushdown, ``/root/reference/src/util.rs:284-295``):
+unconsumed (pruning drops provably-empty row groups, it does not evaluate
+predicates), so exact filtering always stays in the plan above the scan.
+The USER-declared options remain for sessions without the pushdown conf
+(the analogue of the reference's forced parquet pushdown,
+``/root/reference/src/util.rs:284-295``):
 
-- ``columns`` option (comma-separated): the source's schema() narrows to
-  exactly these columns and executors read ONLY their byte ranges
-  (``iter_batches(columns=...)`` — parquet is columnar, so unread
-  columns' pages are never transferred);
+- ``columns`` option (comma-separated): schema() narrows to exactly these
+  columns and executors read ONLY their byte ranges (parquet is
+  columnar, so unread columns' pages are never transferred);
 - ``filters`` option (JSON list of ``[col, op, value]`` triples, AND-ed;
-  ops ``= == != < <= > >=``): the PLANNER drops row groups whose footer
-  min/max statistics prove no row can match — zero extra round trips,
-  the stats ride the already-fetched footers. Pruning is LOSSLESS and
-  conservative (a row group is kept on any doubt: missing stats,
-  unorderable types); surviving row groups may still hold non-matching
-  rows, so exact filtering stays in the query plan above the scan
-  (``DFRayContext.register_parquet`` applies the same triples as a
-  ``where()`` on the registered table).
+  ops ``= == != < <= > >=``): the planner drops row groups whose footer
+  min/max statistics prove no row can match. Pruning is LOSSLESS and
+  conservative (a row group is kept on any doubt); surviving row groups
+  may still hold non-matching rows, so ``DFRayContext.register_parquet``
+  applies the same triples as a ``where()`` on the registered table.
 
-Credentials: the boto3 default chain (env/instance profile), overridable
-per-read with ``option("access_key"/"secret_key"/"region"/
+S3 credentials: the boto3 default chain (env/instance profile),
+overridable per-read with ``option("access_key"/"secret_key"/"region"/
 "endpoint_url")`` — the endpoint override is what the moto-backed e2e
 tests (tests/test_s3store.py) exercise.
 """
@@ -65,6 +66,8 @@ from __future__ import annotations
 
 import io
 import os
+import threading
+from functools import partial
 
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
@@ -86,6 +89,19 @@ _FOOTER_PROBE = 64 << 10  # tail bytes fetched to parse most footers in one GET
 #: ~50 GB of footer tails. Override per-read with the
 #: ``footer_planning_max_files`` option.
 DEFAULT_FOOTER_PLANNING_MAX_FILES = 256
+
+#: split-mode scans with more size-less entries than this stop paying a
+#: planner size probe per object: beyond the threshold each unsized entry
+#: becomes ONE whole-file partition whose TASK probes the size itself
+#: (one probe per file, cluster-parallel, overlapped with the read)
+#: instead of the driver draining an O(files) probe tail through a
+#: 16-way pool before a single task can launch. The cost is intra-file
+#: byte-range splitting for those entries — irrelevant above the
+#: threshold, where per-file parallelism already exceeds any executor
+#: count; a publisher with few huge objects should annotate sizes
+#: (``[url, bytes]`` pairs or a sized manifest), which keeps exact range
+#: splits with ZERO probes. Override with ``size_probe_max_files``.
+DEFAULT_SIZE_PROBE_MAX_FILES = 256
 
 
 def _client(opts: dict):
@@ -130,22 +146,24 @@ def _split_url(url: str) -> tuple[str, str]:
     return bucket, key
 
 
-class _RangedS3File(io.RawIOBase):
-    """Minimal seekable read-only file over one S3 object via Range GETs.
+class _RangedFile(io.RawIOBase):
+    """Minimal seekable read-only file over one object of size ``size``;
+    ``get(start, end)`` fetches the inclusive byte range ``[start, end]``
+    (one ranged GET against the object's store).
 
     pyarrow calls read() for exactly the byte ranges the requested row
     groups/footer cover, so the transfer volume is what the scan needs —
     the object is never downloaded whole.
     """
 
-    def __init__(self, client, bucket: str, key: str, size: int):
-        self._c, self._b, self._k, self._size = client, bucket, key, size
+    def __init__(self, get, size: int):
+        self._get, self._size = get, size
         self._pos = 0
         # Footer parsing clusters its reads (magic+length probe, then the
         # footer itself) in the object's tail; one cached tail GET serves
         # them all, so PLANNING cost is one round trip per object instead
         # of 2-3 tiny GETs — the cost the driver pays per file when it
-        # plans a large prefix.
+        # plans a large listing.
         self._tail_start = max(0, size - _FOOTER_PROBE)
         self._tail: bytes | None = None
 
@@ -175,29 +193,41 @@ class _RangedS3File(io.RawIOBase):
             return b""
         if self._pos >= self._tail_start and self._size > 0:
             if self._tail is None:
-                resp = self._c.get_object(
-                    Bucket=self._b, Key=self._k,
-                    Range=f"bytes={self._tail_start}-{self._size - 1}",
-                )
-                self._tail = resp["Body"].read()
+                self._tail = self._get(self._tail_start, self._size - 1)
             off = self._pos - self._tail_start
             data = self._tail[off : end - self._tail_start + 1]
-            self._pos += len(data)
-            return data
-        resp = self._c.get_object(
-            Bucket=self._b, Key=self._k,
-            Range=f"bytes={self._pos}-{end}",
-        )
-        data = resp["Body"].read()
+        else:
+            data = self._get(self._pos, end)
         self._pos += len(data)
         return data
+
+
+def _open(store, ref, size: int):
+    """pyarrow ParquetFile over one of ``store``'s objects."""
+    import pyarrow.parquet as pq
+
+    return pq.ParquetFile(_RangedFile(partial(store.get, ref), size))
+
+
+def _pool_map(fn, items) -> list:
+    """``map`` over a 16-way thread pool (store clients are thread-safe):
+    planning a many-object scan costs ~one round-trip latency, not one
+    serial request per object on the driver."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    if len(items) <= 1:
+        return [fn(i) for i in items]
+    with ThreadPoolExecutor(max_workers=min(16, len(items))) as pool:
+        return list(pool.map(fn, items))
 
 
 def _parse_columns(opts: dict) -> list[str] | None:
     raw = opts.get("columns")
     if not raw:
         return None
-    cols = [c.strip() for c in str(raw).split(",") if c.strip()]
+    if isinstance(raw, str):
+        raw = raw.split(",")
+    cols = [str(c).strip() for c in raw if str(c).strip()]
     return cols or None
 
 
@@ -328,6 +358,239 @@ def _rg_may_match(meta, rg: int, col_idx: dict[str, int],
     return True
 
 
+def _col_index(meta, filters) -> dict[str, int]:
+    """Column name -> index in the footer, for ``_rg_may_match``."""
+    if not filters or not meta.num_row_groups:
+        return {}
+    rg0 = meta.row_group(0)
+    return {rg0.column(i).path_in_schema: i for i in range(rg0.num_columns)}
+
+
+def _rg_span(rg_meta) -> tuple[int, int]:
+    """(first byte offset, total compressed bytes) of a row group — the
+    coordinates the Hadoop split-midpoint rule needs."""
+    starts = []
+    compressed = 0
+    for j in range(rg_meta.num_columns):
+        cc = rg_meta.column(j)
+        off = cc.dictionary_page_offset
+        starts.append(off if off is not None else cc.data_page_offset)
+        compressed += cc.total_compressed_size
+    return min(starts), compressed
+
+
+def _select_row_groups_for_range(meta, start: int, end: int,
+                                 filters) -> list[int]:
+    """TASK-side split resolution (Hadoop protocol): the row groups whose
+    byte MIDPOINT falls in [start, end) — contiguous ranges tile the
+    file, so every row group lands in exactly one partition — minus the
+    groups the footer stats refute for ``filters`` (same lossless pruning
+    the driver-side planner does, applied where the footer was read)."""
+    col_idx = _col_index(meta, filters)
+    out = []
+    for rg in range(meta.num_row_groups):
+        rg_start, rg_bytes = _rg_span(meta.row_group(rg))
+        mid = rg_start + rg_bytes // 2
+        if not (start <= mid < end):
+            continue
+        if filters and not _rg_may_match(meta, rg, col_idx, filters):
+            continue
+        out.append(rg)
+    return out
+
+
+def _range_plan(objects, part_bytes: int):
+    """[(ref, size, start, end), ...] — byte-range partitions from the
+    objects' sizes ALONE (no footer reads anywhere on the driver)."""
+    parts = []
+    for key, size in objects:
+        start = 0
+        while start < size:
+            end = min(start + part_bytes, size)
+            parts.append((key, size, start, end))
+            start = end
+    return parts
+
+
+def _pack_row_groups(metas, part_bytes: int, filters=()):
+    """Footer-mode plan: pack each object's surviving row groups into
+    contiguous runs of ~``part_bytes``; ``metas`` is ``[(ref, size,
+    parquet FileMetaData), ...]``."""
+    parts = []
+    for key, size, meta in metas:
+        col_idx = _col_index(meta, filters)
+        run: list[int] = []
+        run_bytes = 0
+        for rg in range(meta.num_row_groups):
+            if filters and not _rg_may_match(meta, rg, col_idx, filters):
+                continue
+            rg_bytes = meta.row_group(rg).total_byte_size
+            if run and run_bytes + rg_bytes > part_bytes:
+                parts.append((key, size, run))
+                run, run_bytes = [], 0
+            run.append(rg)
+            run_bytes += rg_bytes
+        if run:
+            parts.append((key, size, run))
+    return parts
+
+
+def _declared_entries(opts: dict, key: str) -> list[tuple[str, int | None]] | None:
+    """Explicit-object declaration for a scan: option ``key`` is a JSON
+    list of object URLs, each optionally a ``[url, size_bytes]`` pair.
+    Sized entries plan with zero size probes — how a manifest-committed
+    table (sources/objectindex) turns its manifest into a scan: re-listing
+    the store would only re-discover what the commit recorded, and could
+    observe uncommitted writers. Returns ``None`` when the option is
+    absent."""
+    import json
+
+    raw = opts.get(key)
+    if not raw:
+        return None
+    urls = json.loads(raw) if isinstance(raw, str) else list(raw)
+    if not urls:
+        raise ValueError(f"{key!r} option is an empty list")
+    return [
+        (str(u[0]), int(u[1])) if isinstance(u, (list, tuple)) and len(u) == 2
+        else (str(u), None)
+        for u in urls
+    ]
+
+
+class _RangedParquetSource(DataSource):
+    """The one parquet scan over a ranged-GET store; a subclass names its
+    format and sets ``store`` to the store class (see the module
+    docstring for the store interface)."""
+
+    store: type
+
+    def schema(self):
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import from_arrow_schema
+
+        opts = dict(self.options)
+        store = self.store(opts)
+        # parquet is self-describing: the first object's footer, probing
+        # that object's size alone (a declared size skips even that).
+        ref, size = store.entries()[0]
+        pf = _open(store, ref, store.probe_size(ref) if size is None else size)
+        arrow_schema = pf.schema_arrow
+        cols = _parse_columns(opts)
+        if cols:
+            arrow_schema = pa.schema([arrow_schema.field(c) for c in cols])
+        _parse_filters(opts)  # validate triples at planning time
+        return from_arrow_schema(arrow_schema)
+
+    def reader(self, schema):
+        opts = dict(self.options)
+        return _ParquetReader(schema, opts, self.store(opts))
+
+
+class _ParquetReader(DataSourceReader):
+    def __init__(self, schema, options: dict, store):
+        self.schema = schema
+        self.options = options
+        self.store = store
+        self.part_bytes = int(
+            options.get("partition_bytes", DEFAULT_PARTITION_BYTES)
+        )
+        self._parts: list | None = None
+        self._pushed: list[tuple[str, str, object]] = []
+
+    def pushFilters(self, filters):
+        """Catalyst's conjunctive predicates over this scan (Spark 4.1
+        Python Data Source pushdown; requires
+        ``spark.sql.python.filterPushdown.enabled``). The planner feeds
+        them into the footer-stats row-group pruner — provably-empty row
+        groups never plan, never transfer. EVERY filter is returned
+        unconsumed: stats pruning cannot evaluate predicates, so Spark
+        must keep exact filtering above the scan (correctness does not
+        depend on the pruning at all)."""
+        self._pushed = _triples_from_pushed(filters)
+        self._parts = None  # pushed predicates invalidate a cached plan
+        return filters
+
+    def _filters(self) -> list[tuple[str, str, object]]:
+        return _parse_filters(self.options) + self._pushed
+
+    def partitions(self):
+        # Cache the plan on the reader: repeated planner calls within one
+        # scan's lifetime must not re-pay the listing (or, in footer
+        # mode, the O(files) footer round trips).
+        if self._parts is None:
+            self._parts = [InputPartition(p) for p in self._plan()]
+        return self._parts
+
+    def _plan(self) -> list:
+        store, opts = self.store, self.options
+        entries = store.entries()
+        max_footer_files = int(opts.get(
+            "footer_planning_max_files", DEFAULT_FOOTER_PLANNING_MAX_FILES,
+        ))
+        if len(entries) <= max_footer_files:
+            def footer(entry):
+                ref, size = entry
+                if size is None:
+                    size = store.probe_size(ref)
+                return ref, size, _open(store, ref, size).metadata
+
+            return _pack_row_groups(
+                _pool_map(footer, entries), self.part_bytes, self._filters()
+            )
+        # Hadoop split protocol: byte ranges from sizes alone — zero
+        # footer reads on the driver; tasks read their own footers and
+        # claim row groups by midpoint, pruning task-side.
+        unsized = [ref for ref, size in entries if size is None]
+        probe_max = int(opts.get(
+            "size_probe_max_files", DEFAULT_SIZE_PROBE_MAX_FILES,
+        ))
+        if len(unsized) > probe_max:
+            # size-deferred partitions: zero planning requests; each task
+            # probes its own file (size=None sentinel) and claims every
+            # surviving row group.
+            sized = [e for e in entries if e[1] is not None]
+            return (_range_plan(sized, self.part_bytes)
+                    + [(ref, None, 0, None) for ref in unsized])
+        probed = dict(zip(unsized, _pool_map(store.probe_size, unsized)))
+        return _range_plan(
+            [(ref, probed[ref] if size is None else size)
+             for ref, size in entries],
+            self.part_bytes,
+        )
+
+    def read(self, partition):
+        # A legitimately EMPTY plan (every row group refuted by the filter
+        # stats) comes back here as a single None partition: pyspark's
+        # plan_data_source_read substitutes [None] when partitions()
+        # returns [] — yield nothing instead of dereferencing it.
+        if partition is None:
+            return
+        store = self.store
+        if len(partition.value) == 4:  # byte-range split (large listing)
+            ref, size, start, end = partition.value
+            if size is None:  # size-deferred whole-file partition
+                size = end = store.probe_size(ref)
+            pf = _open(store, ref, size)
+            row_groups = _select_row_groups_for_range(
+                pf.metadata, start, end, self._filters(),
+            )
+            if not row_groups:
+                return
+        else:
+            ref, size, row_groups = partition.value
+            pf = _open(store, ref, size)
+        cols = _parse_columns(self.options)
+        # Arrow fast path: yield RecordBatches, never per-row Python.
+        # With a projection, pyarrow reads ONLY the requested columns'
+        # pages (columnar byte ranges); select() pins the declared
+        # column order.
+        for batch in pf.iter_batches(row_groups=row_groups, columns=cols):
+            yield batch.select(cols) if cols else batch
+
+
+# -- the S3 store ------------------------------------------------------------
+
 def _list_parquet_objects(client, bucket: str, key: str) -> list[tuple[str, int]]:
     """(key, size) for `key` itself or every *.parquet under the prefix."""
     out: list[tuple[str, int]] = []
@@ -364,301 +627,77 @@ def _list_parquet_objects(client, bucket: str, key: str) -> list[tuple[str, int]
     return sorted(out)
 
 
-def _path_entries(opts: dict) -> list[tuple[str, int | None]] | None:
-    """Explicit-object declaration for a scan: ``paths`` is a JSON list of
-    ``s3://bucket/key`` URLs, each optionally a ``[url, size_bytes]``
-    pair — the s3 twin of httpparquet's ``urls`` form. A fully
-    size-annotated list plans with ZERO ListObjects and ZERO HeadObject
-    calls, which is how a manifest-committed table (sources/objectindex)
-    turns its manifest into a scan: the manifest already knows every
-    object and its size, so re-listing the store would only re-discover
-    what the commit recorded — and could observe uncommitted writers.
-    Returns ``None`` when the option is absent (prefix-listing mode)."""
-    import json
-
-    raw = opts.get("paths")
-    if not raw:
-        return None
-    urls = json.loads(raw) if isinstance(raw, str) else list(raw)
-    if not urls:
-        raise ValueError("'paths' option is an empty list")
-    entries: list[tuple[str, int | None]] = []
-    for u in urls:
-        if isinstance(u, (list, tuple)) and len(u) == 2:
-            entries.append((str(u[0]), int(u[1])))
-        else:
-            entries.append((str(u), None))
-    return entries
+_CLIENT_LOCK = threading.Lock()
 
 
-def _bucket_and_objects(client, opts: dict) -> tuple[str, list[tuple[str, int]]]:
-    """Resolve the scan's (bucket, [(key, size), ...]) from either
-    declaration form: explicit ``paths`` (sizes HEAD-probed only where
-    the declaration doesn't carry them) or ``path`` prefix listing. All
-    ``paths`` entries must live in ONE bucket — a partition records only
-    its key, and the read path binds one client+bucket per scan."""
-    entries = _path_entries(opts)
-    if entries is None:
-        bucket, key = _split_url(opts["path"])
-        return bucket, _list_parquet_objects(client, bucket, key)
-    bucket = None
-    objects: list[tuple[str, int]] = []
-    for url, size in entries:
-        b, k = _split_url(url)
-        if bucket is None:
-            bucket = b
-        elif b != bucket:
-            raise ValueError(
-                "'paths' entries span buckets "
-                f"({bucket!r} vs {b!r}); one scan binds one bucket — "
-                "register one table per bucket"
-            )
-        if size is None:
-            size = client.head_object(Bucket=b, Key=k)["ContentLength"]
-        objects.append((k, int(size)))
-    return bucket, sorted(objects)
+class _S3Store:
+    """The objects of one s3:// (or gs://, through GCS's S3-interop
+    endpoint) scan, declared by a ``path`` prefix or a ``paths`` list.
+    Refs are object keys; all objects live in ONE bucket — a partition
+    records only its key, and the read path binds one bucket per scan."""
+
+    def __init__(self, opts: dict):
+        self.opts = opts
+        # Resolved ONCE and pickled to executors: with an explicit-list
+        # scan the `paths` option IS the manifest, and re-deriving the
+        # bucket per read() call would re-parse that JSON per partition.
+        paths = _declared_entries(opts, "paths")
+        self.bucket = _split_url(opts["path"] if paths is None
+                                 else paths[0][0])[0]
+        self._c = None
+
+    def __getstate__(self):
+        return dict(self.__dict__, _c=None)  # clients don't pickle
+
+    @property
+    def client(self):
+        with _CLIENT_LOCK:  # the planner's footer pool shares one client
+            if self._c is None:
+                self._c = _client(self.opts)
+        return self._c
+
+    def entries(self) -> list[tuple[str, int | None]]:
+        """``(key, size)`` from the prefix listing (sizes ride the
+        listing), or from ``paths``: zero ListObjects, sizes only where
+        the declaration carries them."""
+        paths = _declared_entries(self.opts, "paths")
+        if paths is None:
+            key = _split_url(self.opts["path"])[1]
+            return _list_parquet_objects(self.client, self.bucket, key)
+        out = []
+        for url, size in paths:
+            b, k = _split_url(url)
+            if b != self.bucket:
+                raise ValueError(
+                    "'paths' entries span buckets "
+                    f"({self.bucket!r} vs {b!r}); one scan binds one "
+                    "bucket — register one table per bucket"
+                )
+            out.append((k, size))
+        return sorted(out, key=lambda e: e[0])
+
+    def probe_size(self, key: str) -> int:
+        return self.client.head_object(
+            Bucket=self.bucket, Key=key
+        )["ContentLength"]
+
+    def get(self, key: str, start: int, end: int) -> bytes:
+        return self.client.get_object(
+            Bucket=self.bucket, Key=key, Range=f"bytes={start}-{end}",
+        )["Body"].read()
 
 
-def _scan_bucket(opts: dict) -> str:
-    """The one bucket this scan reads from (task-side, no round trips)."""
-    entries = _path_entries(opts)
-    if entries is None:
-        return _split_url(opts["path"])[0]
-    return _split_url(entries[0][0])[0]
-
-
-def _row_group_plan(client, bucket: str, objects, part_bytes: int,
-                    filters=()):
-    """[(key, size, [rg, ...]), ...] — contiguous row-group runs packed to
-    ~part_bytes each, planned from footers only; row groups whose footer
-    min/max stats refute ``filters`` are dropped here, driver-side, at
-    ZERO extra round trips (the stats ride the footers the planner
-    already fetched).
-
-    Footers are fetched CONCURRENTLY (thread pool; boto3 clients are
-    thread-safe): planning a many-object prefix costs ~one round-trip
-    latency, not one serial GET per object on the driver."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    import pyarrow.parquet as pq
-
-    def footer(obj):
-        key, size = obj
-        return key, size, pq.ParquetFile(
-            _RangedS3File(client, bucket, key, size)
-        ).metadata
-
-    if len(objects) > 1:
-        with ThreadPoolExecutor(max_workers=min(16, len(objects))) as pool:
-            metas = list(pool.map(footer, objects))
-    else:
-        metas = [footer(obj) for obj in objects]
-    return _pack_row_groups(metas, part_bytes, filters)
-
-
-def _rg_span(rg_meta) -> tuple[int, int]:
-    """(first byte offset, total compressed bytes) of a row group — the
-    coordinates the Hadoop split-midpoint rule needs."""
-    starts = []
-    compressed = 0
-    for j in range(rg_meta.num_columns):
-        cc = rg_meta.column(j)
-        off = cc.dictionary_page_offset
-        starts.append(off if off is not None else cc.data_page_offset)
-        compressed += cc.total_compressed_size
-    return min(starts), compressed
-
-
-def _select_row_groups_for_range(meta, start: int, end: int,
-                                 filters) -> list[int]:
-    """TASK-side split resolution (Hadoop protocol): the row groups whose
-    byte MIDPOINT falls in [start, end) — contiguous ranges tile the
-    file, so every row group lands in exactly one partition — minus the
-    groups the footer stats refute for ``filters`` (same lossless pruning
-    the driver-side planner does, applied where the footer was read)."""
-    col_idx: dict[str, int] = {}
-    if filters and meta.num_row_groups:
-        rg0 = meta.row_group(0)
-        col_idx = {
-            rg0.column(i).path_in_schema: i for i in range(rg0.num_columns)
-        }
-    out = []
-    for rg in range(meta.num_row_groups):
-        rg_start, rg_bytes = _rg_span(meta.row_group(rg))
-        mid = rg_start + rg_bytes // 2
-        if not (start <= mid < end):
-            continue
-        if filters and not _rg_may_match(meta, rg, col_idx, filters):
-            continue
-        out.append(rg)
-    return out
-
-
-def _range_plan(objects, part_bytes: int):
-    """[(key, size, start, end), ...] — byte-range partitions from the
-    listing's sizes ALONE (no footer reads anywhere on the driver)."""
-    parts = []
-    for key, size in objects:
-        start = 0
-        while start < size:
-            end = min(start + part_bytes, size)
-            parts.append((key, size, start, end))
-            start = end
-    return parts
-
-
-def _pack_row_groups(metas, part_bytes: int, filters=()):
-    """Shared planning core (s3 + http sources): pack each object's
-    surviving row groups into contiguous runs of ~``part_bytes``;
-    ``metas`` is ``[(key_or_url, size, parquet FileMetaData), ...]``."""
-    parts = []
-    for key, size, meta in metas:
-        col_idx: dict[str, int] = {}
-        if filters and meta.num_row_groups:
-            rg0 = meta.row_group(0)
-            col_idx = {
-                rg0.column(i).path_in_schema: i
-                for i in range(rg0.num_columns)
-            }
-        run: list[int] = []
-        run_bytes = 0
-        for rg in range(meta.num_row_groups):
-            if filters and not _rg_may_match(meta, rg, col_idx, filters):
-                continue
-            rg_bytes = meta.row_group(rg).total_byte_size
-            if run and run_bytes + rg_bytes > part_bytes:
-                parts.append((key, size, run))
-                run, run_bytes = [], 0
-            run.append(rg)
-            run_bytes += rg_bytes
-        if run:
-            parts.append((key, size, run))
-    return parts
-
-
-class S3ParquetDataSource(DataSource):
+class S3ParquetDataSource(_RangedParquetSource):
     """``spark.read.format("s3parquet").option("path", "s3://b/prefix")``,
     or ``.option("paths", json_list)`` — an explicit object list whose
     elements may be ``[url, size_bytes]`` pairs for zero-probe planning
     (the scan form a manifest-committed table resolves to)."""
 
+    store = _S3Store
+
     @classmethod
     def name(cls) -> str:
         return "s3parquet"
-
-    def _opts(self) -> dict:
-        return dict(self.options)
-
-    def schema(self):
-        from pyspark.sql.pandas.types import from_arrow_schema
-
-        opts = self._opts()
-        client = _client(opts)
-        bucket, objects = _bucket_and_objects(client, opts)
-        import pyarrow.parquet as pq
-
-        k, size = objects[0]
-        pf = pq.ParquetFile(_RangedS3File(client, bucket, k, size))
-        arrow_schema = pf.schema_arrow
-        cols = _parse_columns(opts)
-        if cols:
-            missing = [c for c in cols if arrow_schema.field(c) is None]
-            if missing:  # pragma: no cover - field() raises first
-                raise KeyError(missing)
-            import pyarrow as pa
-
-            arrow_schema = pa.schema([arrow_schema.field(c) for c in cols])
-        _parse_filters(opts)  # validate triples at planning time
-        return from_arrow_schema(arrow_schema)
-
-    def reader(self, schema):
-        return _S3ParquetReader(schema, self._opts())
-
-
-class _S3ParquetReader(DataSourceReader):
-    def __init__(self, schema, options: dict):
-        self.schema = schema
-        self.options = options
-        self.part_bytes = int(
-            options.get("partition_bytes", DEFAULT_PARTITION_BYTES)
-        )
-        # Resolved ONCE and pickled to executors: with an explicit-list
-        # scan the `paths` option IS the manifest, and re-deriving the
-        # bucket per read() call would re-parse that JSON once per
-        # partition (O(partitions x manifest) at index scale).
-        self._bucket = _scan_bucket(options)
-        self._parts: list | None = None
-        self._pushed: list[tuple[str, str, object]] = []
-
-    def pushFilters(self, filters):
-        """Catalyst's conjunctive predicates over this scan (Spark 4.1
-        Python Data Source pushdown; requires
-        ``spark.sql.python.filterPushdown.enabled``). The planner feeds
-        them into the footer-stats row-group pruner — provably-empty row
-        groups never plan, never transfer. EVERY filter is returned
-        unconsumed: stats pruning cannot evaluate predicates, so Spark
-        must keep exact filtering above the scan (correctness does not
-        depend on the pruning at all)."""
-        self._pushed = _triples_from_pushed(filters)
-        self._parts = None  # pushed predicates invalidate a cached plan
-        return filters
-
-    def partitions(self):
-        # Cache the listing + plan on the reader: repeated planner calls
-        # within one scan's lifetime must not re-pay the listing (or, in
-        # footer mode, the O(files) footer round trips).
-        if self._parts is None:
-            opts = self.options
-            client = _client(opts)
-            bucket, objects = _bucket_and_objects(client, opts)
-            max_footer_files = int(opts.get(
-                "footer_planning_max_files",
-                DEFAULT_FOOTER_PLANNING_MAX_FILES,
-            ))
-            if len(objects) > max_footer_files:
-                # Hadoop split protocol: byte ranges from sizes alone —
-                # ZERO driver round trips beyond the listing; tasks read
-                # their own footers and claim row groups by midpoint.
-                plan = _range_plan(objects, self.part_bytes)
-            else:
-                plan = _row_group_plan(
-                    client, bucket, objects, self.part_bytes,
-                    filters=_parse_filters(opts) + self._pushed,
-                )
-            self._parts = [InputPartition(p) for p in plan]
-        return self._parts
-
-    def read(self, partition):
-        # A legitimately EMPTY plan (every row group refuted by the filter
-        # stats) comes back here as a single None partition: pyspark's
-        # plan_data_source_read substitutes [None] when partitions()
-        # returns [] — yield nothing instead of dereferencing it.
-        if partition is None:
-            return
-        import pyarrow.parquet as pq
-
-        opts = self.options
-        client = _client(opts)
-        bucket = self._bucket
-        if len(partition.value) == 4:  # byte-range split (large listing)
-            key, size, start, end = partition.value
-            pf = pq.ParquetFile(_RangedS3File(client, bucket, key, size))
-            row_groups = _select_row_groups_for_range(
-                pf.metadata, start, end,
-                _parse_filters(opts) + self._pushed,
-            )
-            if not row_groups:
-                return
-        else:
-            key, size, row_groups = partition.value
-            pf = pq.ParquetFile(_RangedS3File(client, bucket, key, size))
-        cols = _parse_columns(opts)
-        # Arrow fast path: yield RecordBatches, never per-row Python.
-        # With a projection, pyarrow reads ONLY the requested columns'
-        # pages (columnar byte ranges); select() pins the declared
-        # column order.
-        for batch in pf.iter_batches(row_groups=row_groups, columns=cols):
-            yield batch.select(cols) if cols else batch
 
 
 def _enable_python_filter_pushdown(spark) -> None:

@@ -239,6 +239,23 @@ def test_execution_metrics_expose_runtime_counters(spark, sf_dir):
     assert shuffled < df.df.sparkSession.table("lineitem").count()
 
 
+def test_register_parquet_bad_filter_op_raises_value_error(spark, sf_dir):
+    """A filter triple with an unknown op is rejected with the same
+    ValueError on a local path as on the object-store tiers (one parser
+    validates the declared filters for every tier)."""
+    import os
+
+    import pytest
+
+    ctx = DFRayContext(spark=spark)
+    with pytest.raises(ValueError, match="bad filter triple"):
+        ctx.register_parquet(
+            "bad_op", os.path.join(sf_dir, "nation.parquet"),
+            filters=[["n_nationkey", "~", 1]],
+        )
+    assert "bad_op" not in ctx.tables()
+
+
 def test_register_parquet_local_pushdown_options(spark, sf_dir):
     """columns/filters on a LOCAL path apply the same projection + exact
     where() as the object-store tiers, and Catalyst pushes both into the

@@ -426,8 +426,8 @@ def test_sized_manifest_plans_with_zero_object_requests(multi_base):
     HEADs, zero object GETs (the http analogue of s3 sizes riding the
     listing). The request log is the witness."""
     from datafusion_ray_spark.sources.httpparquet import (
-        _HTTPParquetReader,
         _MANIFEST_CACHE,
+        HTTPParquetDataSource,
     )
 
     sizes = {p: len(b) for p, b in _MultiHandler.payloads.items()}
@@ -437,11 +437,11 @@ def test_sized_manifest_plans_with_zero_object_requests(multi_base):
     ).encode()
     _MANIFEST_CACHE.clear()
     _MultiHandler.requests = []
-    reader = _HTTPParquetReader(None, {
+    reader = HTTPParquetDataSource({
         "manifest": f"{multi_base}/sized_manifest.txt",
         "footer_planning_max_files": "1",   # force split mode at 2 files
         "partition_bytes": "40000",
-    })
+    }).reader(None)
     parts = reader.partitions()
     assert len(parts) > 2
     assert _MultiHandler.requests == [
@@ -489,7 +489,7 @@ def test_sized_url_list_zero_probe_planning_and_facade(spark, multi_base):
     import json as _json
 
     from datafusion_ray_spark.context import DFRayContext
-    from datafusion_ray_spark.sources.httpparquet import _HTTPParquetReader
+    from datafusion_ray_spark.sources.httpparquet import HTTPParquetDataSource
 
     pairs = [
         [f"{multi_base}{p}", len(b)]
@@ -497,11 +497,11 @@ def test_sized_url_list_zero_probe_planning_and_facade(spark, multi_base):
         if p.endswith(".parquet")
     ]
     _MultiHandler.requests = []
-    reader = _HTTPParquetReader(None, {
+    reader = HTTPParquetDataSource({
         "urls": _json.dumps(pairs),
         "footer_planning_max_files": "1",
         "partition_bytes": "40000",
-    })
+    }).reader(None)
     assert len(reader.partitions()) > 2
     assert _MultiHandler.requests == [], (
         f"sized url-list planning issued requests: {_MultiHandler.requests}"
@@ -549,16 +549,16 @@ def test_unsized_url_list_above_probe_cap_plans_with_zero_requests(
     task (exactly one probe per file, next to its reads). Rows stay
     oracle-equal and filters still prune task-side."""
     from datafusion_ray_spark.context import DFRayContext
-    from datafusion_ray_spark.sources.httpparquet import _HTTPParquetReader
+    from datafusion_ray_spark.sources.httpparquet import HTTPParquetDataSource
 
     urls = [f"{multi_base}/a.parquet", f"{multi_base}/b.parquet"]
     _MultiHandler.requests = []
-    reader = _HTTPParquetReader(None, {
+    reader = HTTPParquetDataSource({
         "urls": urls,
         "footer_planning_max_files": "1",  # force split mode at 2 files
         "size_probe_max_files": "1",       # 2 unsized files > cap
         "partition_bytes": "40000",
-    })
+    }).reader(None)
     parts = reader.partitions()
     assert len(parts) == 2  # one size-deferred partition per file
     assert all(p.value[1] is None and p.value[3] is None for p in parts)

@@ -303,7 +303,7 @@ def test_s3_scan_plans_with_zero_listing_calls(spark, s3_opts):
     )
     s3store._client = lambda o: Recorder(real_client(o))
     try:
-        reader = s3store._S3ParquetReader(None, reader_opts)
+        reader = s3store.S3ParquetDataSource(reader_opts).reader(None)
         parts = reader.partitions()
         rows = sum(
             batch.num_rows for p in parts for batch in reader.read(p)
@@ -591,7 +591,7 @@ def test_s3_sorted_index_prunes_row_groups_via_pushdown(spark, s3_opts):
     )
 
     def scan(pushed):
-        reader = s3store._S3ParquetReader(None, dict(reader_opts))
+        reader = s3store.S3ParquetDataSource(dict(reader_opts)).reader(None)
         if pushed:
             reader.pushFilters(pushed)
         parts = reader.partitions()

@@ -19,6 +19,9 @@ import os
 
 import pytest
 
+# the http store's local Range server, for the store-parity test
+from .test_httpparquet import _RangeHandler, http_url  # noqa: F401
+
 try:
     import boto3
     from moto.server import ThreadedMotoServer
@@ -278,7 +281,7 @@ def test_projection_and_stats_pruning_reduce_transfer(s3_endpoint, bucket):
         rec = Recorder(real_client(opts))
         s3store._client = lambda _o: rec
         try:
-            reader = s3store._S3ParquetReader(None, opts)
+            reader = s3store.S3ParquetDataSource(opts).reader(None)
             parts = reader.partitions()
             rows = cols = 0
             for p in parts:
@@ -370,9 +373,12 @@ def test_ranged_file_tail_cache_one_get_per_footer():
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    from functools import partial
+
+    from datafusion_ray_spark.sources import s3store
     from datafusion_ray_spark.sources.s3store import (
         _FOOTER_PROBE,
-        _RangedS3File,
+        _RangedFile,
     )
 
     sink = pa.BufferOutputStream()
@@ -395,7 +401,13 @@ def test_ranged_file_tail_cache_one_get_per_footer():
             return {"Body": _io.BytesIO(self.payload[int(lo): int(hi) + 1])}
 
     client = CountingClient(blob)
-    pf = pq.ParquetFile(_RangedS3File(client, "b", "k", len(blob)))
+    real_client = s3store._client
+    s3store._client = lambda _o: client
+    try:
+        store = s3store._S3Store({"path": "s3://b/k"})
+        pf = pq.ParquetFile(_RangedFile(partial(store.get, "k"), len(blob)))
+    finally:
+        s3store._client = real_client
     assert pf.metadata.num_row_groups == 4
     assert len(client.calls) == 1, f"footer parse issued {client.calls}"
 
@@ -477,7 +489,7 @@ def test_pushfilters_byte_reduction_no_declared_filters(s3_endpoint, bucket):
         rec = Recorder(real_client(opts))
         s3store._client = lambda _o: rec
         try:
-            reader = s3store._S3ParquetReader(None, dict(opts))
+            reader = s3store.S3ParquetDataSource(dict(opts)).reader(None)
             if pushed is not None:
                 returned = reader.pushFilters(pushed)
                 assert [f is g for f, g in zip(returned, pushed)] == (
@@ -615,7 +627,7 @@ def test_range_split_protocol_large_listing(s3_endpoint, bucket):
         rec = Recorder(real_client(opts))
         s3store._client = lambda _o: rec
         try:
-            reader = s3store._S3ParquetReader(None, dict(opts))
+            reader = s3store.S3ParquetDataSource(dict(opts)).reader(None)
             if pushed is not None:
                 reader.pushFilters(pushed)
             parts = reader.partitions()
@@ -643,7 +655,7 @@ def test_range_split_protocol_large_listing(s3_endpoint, bucket):
 
     # footer mode (threshold back at default) returns identical rows
     opts_footer = dict(opts, footer_planning_max_files="256")
-    reader = s3store._S3ParquetReader(None, opts_footer)
+    reader = s3store.S3ParquetDataSource(opts_footer).reader(None)
     rows_footer = sum(
         b.num_rows for p in reader.partitions() for b in reader.read(p)
     )
@@ -712,7 +724,7 @@ def test_paths_sized_entries_skip_all_discovery(s3_endpoint, bucket):
     }
     s3store._client = lambda _o: Recorder(real_client(_o))
     try:
-        reader = s3store._S3ParquetReader(None, dict(opts))
+        reader = s3store.S3ParquetDataSource(dict(opts)).reader(None)
         rows = sum(
             b.num_rows for p in reader.partitions() for b in reader.read(p)
         )
@@ -732,7 +744,7 @@ def test_paths_sized_entries_skip_all_discovery(s3_endpoint, bucket):
     )
     s3store._client = lambda _o: Recorder(real_client(_o))
     try:
-        reader = s3store._S3ParquetReader(None, dict(opts))
+        reader = s3store.S3ParquetDataSource(dict(opts)).reader(None)
         rows2 = sum(
             b.num_rows for p in reader.partitions() for b in reader.read(p)
         )
@@ -745,12 +757,115 @@ def test_paths_sized_entries_skip_all_discovery(s3_endpoint, bucket):
 def test_paths_validation_errors():
     import pytest as _pytest
 
-    from datafusion_ray_spark.sources.s3store import _bucket_and_objects
+    from datafusion_ray_spark.sources.s3store import _S3Store
 
     with _pytest.raises(ValueError, match="empty list"):
-        _bucket_and_objects(None, {"paths": "[]"})
+        _S3Store({"paths": "[]"}).entries()
     with _pytest.raises(ValueError, match="span buckets"):
-        _bucket_and_objects(
-            None,
+        _S3Store(
             {"paths": '[["s3://a/x.parquet", 1], ["s3://b/y.parquet", 1]]'},
+        ).entries()
+
+
+def test_schema_probes_only_the_first_unsized_path(s3_endpoint, bucket):
+    """schema() reads ONE footer, so it probes only that object's size:
+    three unsized `paths` entries cost one HeadObject, not three."""
+    import json
+
+    from datafusion_ray_spark.sources import s3store
+
+    real_client = s3store._client
+    heads: list[str] = []
+
+    class Recorder:
+        def __init__(self, inner):
+            self.inner = inner
+
+        def head_object(self, **kw):
+            heads.append(kw["Key"])
+            return self.inner.head_object(**kw)
+
+        def __getattr__(self, attr):
+            return getattr(self.inner, attr)
+
+    source = s3store.S3ParquetDataSource({
+        "endpoint_url": s3_endpoint, "access_key": "testing",
+        "secret_key": "testing", "region": "us-east-1",
+        "paths": json.dumps([
+            "s3://graft/dir/part-0.parquet",
+            "s3://graft/dir/part-1.parquet",
+            "s3://graft/multi/customer.parquet",
+        ]),
+    })
+    s3store._client = lambda _o: Recorder(real_client(_o))
+    try:
+        schema = source.schema()
+    finally:
+        s3store._client = real_client
+    assert "s_suppkey" in schema.fieldNames()
+    assert heads == ["dir/part-0.parquet"]
+
+
+@pytest.mark.parametrize("footer_planning_max_files", [None, "0"],
+                         ids=["footer", "byte_range"])
+def test_store_parity_s3_and_http(s3_endpoint, bucket, http_url,
+                                  footer_planning_max_files):
+    """The s3 and http stores of the one ranged-parquet reader, over the
+    SAME parquet bytes (8 row groups of 10k ascending k), plan the same
+    partitions, return the same rows, and prune the same row groups under
+    the same pushed predicate — in footer mode and in byte-range mode."""
+    from pyspark.sql.datasource import GreaterThanOrEqual
+
+    from datafusion_ray_spark.sources.httpparquet import HTTPParquetDataSource
+    from datafusion_ray_spark.sources.s3store import S3ParquetDataSource
+
+    payload = _RangeHandler.payload
+    boto3.client("s3", endpoint_url=s3_endpoint).put_object(
+        Bucket="graft", Key="parity/data.parquet", Body=payload,
+    )
+    opts = {"partition_bytes": "1"}
+    if footer_planning_max_files is not None:
+        opts = {"partition_bytes": "400000",
+                "footer_planning_max_files": footer_planning_max_files}
+    sources = {
+        "s3": S3ParquetDataSource(dict(
+            opts, path="s3://graft/parity/data.parquet",
+            endpoint_url=s3_endpoint, access_key="testing",
+            secret_key="testing", region="us-east-1",
+        )),
+        "http": HTTPParquetDataSource(dict(opts, url=http_url)),
+    }
+
+    def scan(source, pushed=None):
+        reader = source.reader(source.schema())
+        if pushed:
+            reader.pushFilters(pushed)
+        parts = reader.partitions()
+        ks = sorted(
+            k for p in parts for b in reader.read(p)
+            for k in b.column("k").to_pylist()
         )
+        # a partition's ref is the store's own (key vs url): compare the rest
+        return [p.value[1:] for p in parts], ks
+
+    full = {name: scan(src) for name, src in sources.items()}
+    assert full["s3"] == full["http"]
+    plan, ks = full["s3"]
+    assert ks == list(range(80_000))
+    if footer_planning_max_files is None:
+        assert plan == [(len(payload), [rg]) for rg in range(8)]
+    else:
+        assert len(plan) > 2 and all(len(v) == 3 for v in plan)
+        assert plan[-1][2] == len(payload)
+
+    # k >= 60000 refutes row groups 0-5 from footer stats on both stores:
+    # driver-side in footer mode, task-side in byte-range mode
+    pushed = {
+        name: scan(src, [GreaterThanOrEqual(("k",), 60_000)])
+        for name, src in sources.items()
+    }
+    assert pushed["s3"] == pushed["http"]
+    plan_f, ks_f = pushed["s3"]
+    assert ks_f == list(range(60_000, 80_000))
+    if footer_planning_max_files is None:
+        assert plan_f == [(len(payload), [6]), (len(payload), [7])]
