@@ -31,8 +31,6 @@ for web crawling", WWW 2007).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -240,7 +238,7 @@ def minhash_dedup_pairs(df: DataFrame, text_col: str = "text") -> DataFrame:
     Jaccard is computed from integer set sizes (bit-deterministic); pairs
     with jaccard >= JACCARD_THRESHOLD are flagged near-dups.
 
-    The candidate pair set is materialized (persist + count) before the
+    The candidate pair set is pinned with a lazy ``persist`` for the
     verify stage: candidates are a sub-percent fraction of the corpus, and
     with them pinned, verification re-reads shingles ONLY for candidate
     documents (tiny id list broadcast into the scan) instead of re-deriving
@@ -466,22 +464,7 @@ def _both_directions(e: DataFrame) -> DataFrame:
     ).selectExpr("d.u AS u", "d.v AS v")
 
 
-#: Max node degree above which a star round switches from the window-min
-#: form to the hub-safe aggregate+join form (r12, VERDICT r11 #1-of-"What's
-#: wrong"): ``min() OVER (PARTITION BY u)`` puts EVERY row of a hub node
-#: into one window task with no skew escape, while the aggregate+join form
-#: is skew-safe end to end — the partial (map-side) min combines a hub's
-#: rows per map task before the exchange (hash aggregation IS the salted
-#: two-level min, keyed by (node, map partition)), and the join-back probe
-#: side is AQE-skew-splittable. Below the threshold the window form stays:
-#: it is ~2x faster per round at uniform degrees (r11 A/B). The default is
-#: sized so a window partition stays well under a task's comfortable
-#: working set (2^22 edge endpoints x ~16 B/row = ~64 MB); override with
-#: $SPARK_GRAFT_CC_HUB_DEGREE for clusters with different task memory.
-CC_HUB_DEGREE = int(os.environ.get("SPARK_GRAFT_CC_HUB_DEGREE", str(1 << 22)))
-
-
-def _large_star(e: DataFrame, hub_safe: bool = False) -> DataFrame:
+def _large_star(e: DataFrame) -> DataFrame:
     """Large-star operation (Kiveris et al. 2014): every node connects its
     LARGER neighbors to its minimum neighborhood member. Input/output:
     canonical undirected edges (s < t).
@@ -492,50 +475,29 @@ def _large_star(e: DataFrame, hub_safe: bool = False) -> DataFrame:
     the adjacency subtree TWICE (build + probe legs) and paid an SMJ with
     two sorts. The window shuffles the adjacency once and sorts it once —
     measured per round at sf0.1: 8 Exchange -> 4, 3 SMJ -> 0, ~2x wall
-    (0.76 -> 0.36 s warm), identical edge set (A/B verified).
-
-    r12: ``hub_safe=True`` (chosen per round by ``duplicate_groups`` from
-    a measured max degree, threshold ``CC_HUB_DEGREE``) switches to the
-    skew-safe form: a map-side-combinable ``groupBy(u).min(v)`` (the
-    two-level min — partial min per (node, map partition), final min per
-    node; a hub's rows collapse BEFORE the exchange) joined back to the
-    v > u slice, where AQE's skew-join split can break up the hub's probe
-    partition. Value-identical: both forms attach min over the FULL
-    neighborhood (adjacency in both directions) to the larger-neighbor
-    rows."""
+    (0.76 -> 0.36 s warm), identical edge set (A/B verified). A hub node's
+    rows land in one window task, which ``WindowExec`` buffers in a
+    spillable array: a hub costs one long task, not an OOM."""
     adj = _both_directions(e)
-    if hub_safe:
-        m = adj.groupBy("u").agg(F.min("v").alias("mn"))
-        out = (
-            adj.where("v > u")
-            .join(m, "u")
-            .selectExpr("least(u, mn) AS s", "v AS t")
-        )
-    else:
-        # for v in N(u), v > u: (m_u, v); m_u <= u < v keeps canonical order
-        out = (
-            adj.selectExpr(
-                "least(u, min(v) OVER (PARTITION BY u)) AS m", "u", "v"
-            )
-            .where("v > u")
-            .selectExpr("m AS s", "v AS t")
-        )
-    return out.where("s != t").distinct()
+    # for v in N(u), v > u: (m_u, v); m_u <= u < v keeps canonical order
+    return (
+        adj.selectExpr("least(u, min(v) OVER (PARTITION BY u)) AS m", "u", "v")
+        .where("v > u")
+        .selectExpr("m AS s", "v AS t")
+        .where("s != t")
+        .distinct()
+    )
 
 
-def _small_star(e: DataFrame, hub_safe: bool = False) -> DataFrame:
+def _small_star(e: DataFrame) -> DataFrame:
     """Small-star operation: every node connects its SMALLER neighbors (and
     itself) to the minimum of them. Canonical (s < t) in and out; the
     two emissions per edge go through one explode (see
     ``_both_directions`` for why not a self-union). Same window-over-
-    groupBy+join rewrite as :func:`_large_star` (r11) and the same
-    r12 hub-safe aggregate+join escape (keyed by the child node ``t``)."""
-    if hub_safe:
-        j = e.join(e.groupBy("t").agg(F.min("s").alias("m")), "t")
-    else:
-        j = e.selectExpr("s", "t", "min(s) OVER (PARTITION BY t) AS m")
+    groupBy+join rewrite as :func:`_large_star` (r11)."""
     return (
-        j.selectExpr(
+        e.selectExpr("s", "t", "min(s) OVER (PARTITION BY t) AS m")
+        .selectExpr(
             "explode(array(named_struct('s2', m, 't2', s),"
             " named_struct('s2', m, 't2', t))) AS d"
         )
@@ -545,10 +507,8 @@ def _small_star(e: DataFrame, hub_safe: bool = False) -> DataFrame:
     )
 
 
-def _star_probe(e: DataFrame) -> tuple[bool, int]:
-    """EXACT terminal test + max-degree readout, one cheap job.
-
-    Terminal test: a canonical (s < t) edge set is
+def _is_star_forest(e: DataFrame) -> bool:
+    """EXACT terminal test, one cheap job: a canonical (s < t) edge set is
     a star forest iff (a) no node appears both as a parent (s) and as a
     child (t), AND (b) every child has exactly one distinct parent.
     Condition (b) is NOT implied by (a): edges {(1,4),(3,4)} are
@@ -562,45 +522,23 @@ def _star_probe(e: DataFrame) -> tuple[bool, int]:
     groupBy, no join, no self-union, and NO count_distinct (which would
     plan an Expand per round): the loop's edge sets are distinct rows, so
     a child's distinct-parent count IS its child-role row count —
-    sum(c) > 1 detects multi-parent children exactly.
-
-    r12: the same per-node aggregate now also returns the edge set's max
-    node degree (parent-role + child-role row count), which costs nothing
-    extra (the groupBy dominates) and lets ``duplicate_groups`` pick the
-    hub-safe star form for the NEXT round without a separate job. The old
-    ``limit(1)`` early exit is gone — the global max needs every group —
-    but the scan/shuffle work is identical and the final aggregate is
-    one row."""
+    sum(c) > 1 detects multi-parent children exactly."""
     roles = e.selectExpr(
         "explode(array(named_struct('id', s, 'p', 1, 'c', 0),"
         " named_struct('id', t, 'p', 0, 'c', 1))) AS r"
     ).select("r.*")
-    row = (
+    bad = (
         roles.groupBy("id")
         .agg(
             F.max("p").alias("p"),
             F.max("c").alias("c"),
             F.sum("c").alias("nchild"),
-            F.count("*").alias("deg"),
         )
-        .agg(
-            F.max(
-                F.when(
-                    ((F.col("p") == 1) & (F.col("c") == 1))
-                    | (F.col("nchild") > 1),
-                    1,
-                ).otherwise(0)
-            ).alias("bad"),
-            F.max("deg").alias("max_deg"),
-        )
-        .first()
+        .where("(p = 1 AND c = 1) OR nchild > 1")
+        .limit(1)
+        .count()
     )
-    return (row["bad"] or 0) == 0, int(row["max_deg"] or 0)
-
-
-def _is_star_forest(e: DataFrame) -> bool:
-    """Terminal test alone (see :func:`_star_probe`)."""
-    return _star_probe(e)[0]
+    return bad == 0
 
 
 def duplicate_groups(pairs: DataFrame, max_iterations: int = 60) -> DataFrame:
@@ -633,25 +571,11 @@ def duplicate_groups(pairs: DataFrame, max_iterations: int = 60) -> DataFrame:
     # self-pairs here so the final node roster derives from this
     # checkpoint, never from `pairs` again (re-deriving pairs for the
     # singleton roster re-ran the whole minhash pipeline — 62 s vs 6 s on
-    # the 10x fixture). r12: the materialization's probe is the max node
-    # degree of the input graph — one edge-scale, map-side-combinable
-    # aggregate riding the SAME job that pins the edges — so round 1 can
-    # already pick the hub-safe star form when a corpus-scale hub exists
-    # (VERDICT r11: the window-min rewrite's one new scale risk).
-    e0, max_deg = materialize_and_probe(
-        pairs.selectExpr(
-            "CAST(least(doc_a, doc_b) AS BIGINT) AS s",
-            "CAST(greatest(doc_a, doc_b) AS BIGINT) AS t",
-        ).distinct(),
-        lambda d: int(
-            d.selectExpr("explode(array(s, t)) AS n")
-            .groupBy("n")
-            .agg(F.count("*").alias("deg"))
-            .agg(F.max("deg"))
-            .first()[0]
-            or 0
-        ),
-    )
+    # the 10x fixture). The checkpoint is lazy: round 1's job fills it.
+    e0 = pairs.selectExpr(
+        "CAST(least(doc_a, doc_b) AS BIGINT) AS s",
+        "CAST(greatest(doc_a, doc_b) AS BIGINT) AS t",
+    ).distinct().localCheckpoint(eager=False)
     e = e0.where("s != t")
     # no pre-check: pair detectors essentially never emit a ready star
     # forest, and a contraction round on one is a no-op, so checking only
@@ -659,19 +583,13 @@ def duplicate_groups(pairs: DataFrame, max_iterations: int = 60) -> DataFrame:
     converged = False
     for _ in range(max_iterations):
         # One action per round, not two: the round's checkpoint blocks
-        # materialize INSIDE the star-forest test's probe job — measured
-        # ~1 job + scheduler gap saved per round at sf0.1 with identical
-        # work; later rounds/labels read the pinned blocks. The probe
-        # also reports the contracted edge set's max degree, updating the
-        # hub decision per round (star rounds shrink hubs, so a graph
-        # that starts hub-safe usually drops back to the faster window
-        # form after a round or two).
-        hub_safe = max_deg >= CC_HUB_DEGREE
-        e, (is_forest, max_deg) = materialize_and_probe(
-            _small_star(_large_star(e, hub_safe), hub_safe), _star_probe
+        # materialize INSIDE the star-forest test's job — measured ~1 job
+        # + scheduler gap saved per round at sf0.1 with identical work;
+        # later rounds/labels read the pinned blocks.
+        e, converged = materialize_and_probe(
+            _small_star(_large_star(e)), _is_star_forest
         )
-        if is_forest:
-            converged = True
+        if converged:
             break
     if not converged:
         warnings.warn(

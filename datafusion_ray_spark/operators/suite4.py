@@ -15,8 +15,6 @@ verification touches candidates only, nothing collects rows to the driver.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -1175,21 +1173,9 @@ ORDER BY user_id, eus, event_id
 # doc_id order, the ingest order), the fraction of its distinct shingles
 # never seen in ANY earlier document. Duplicate-heavy or boilerplate docs
 # score near zero; genuinely new content scores high — the ranking signal
-# novelty-aware samplers use. First-occurrence per shingle is one min
-# aggregate over the exploded (shingle, doc_id) pairs — linear, combinable;
-# the per-doc fraction is a ppm integer.
-
-
-#: Hub-safe mode for the novelty scorer (r12, VERDICT r11 #2). The star
-#: loop can PROBE its (bounded, pinned) edge set's degree cheaply; the
-#: shingle stream is corpus-scale, so probing its max frequency would cost
-#: the very pass the guard exists to protect — the switch is therefore a
-#: deployment conf, default off (the window form, 23% faster at sf0.1 and
-#: plan-ledger-pinned). Set SPARK_GRAFT_NOVELTY_HUB_SAFE=1 on corpora with
-#: heavy boilerplate (a corpus-wide shingle's window partition is ONE
-#: task): the aggregate+join form's partial min combines hot shingles
-#: map-side and the join-back is AQE-skew-splittable.
-NOVELTY_HUB_SAFE = os.environ.get("SPARK_GRAFT_NOVELTY_HUB_SAFE", "0") == "1"
+# novelty-aware samplers use. First-occurrence per shingle is one window
+# min over the exploded (shingle, doc_id) pairs, keyed by shingle; the
+# per-doc fraction is a ppm integer.
 
 
 def run_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1203,19 +1189,15 @@ def run_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     # keys) and shuffled the full exploded stream a second time through
     # a sort-merge join. `min(doc_id) OVER (PARTITION BY s)` attaches the
     # first-occurrence doc in the one (s) shuffle; the per-doc aggregate
-    # is then map-side combinable. The boilerplate-shingle straggler
-    # escape is NOVELTY_HUB_SAFE above.
+    # is then map-side combinable. A boilerplate shingle's rows land in
+    # one window task, which WindowExec buffers in a spillable array: a
+    # long task, not an OOM.
     sh = docs.select(
         "doc_id", F.explode(dedup.shingles("text")).alias("s")
     )
-    if NOVELTY_HUB_SAFE:
-        first = sh.groupBy("s").agg(F.min("doc_id").alias("first_doc"))
-        joined = sh.join(first, "s")
-    else:
-        fd = F.min("doc_id").over(Window.partitionBy("s"))
-        joined = sh.withColumn("first_doc", fd)
+    first_doc = F.min("doc_id").over(Window.partitionBy("s"))
     return (
-        joined
+        sh.withColumn("first_doc", first_doc)
         .groupBy("doc_id")
         .agg(
             F.count("*").cast("long").alias("n_shingles"),

@@ -4,7 +4,8 @@ when the data grows 10x, and flag super-linear plans.
 The round-3 verdict's bar is "plans you'd want at 100x" —
 SHUFFLE_BASELINE.json argues that statically; this harness measures it.
 It builds a 10x variant of sf0.1 (``.scaledata/x10``), runs the full
-fault-isolated bench against it, and writes ``SCALING_r04.json`` with the
+fault-isolated bench against it, and writes ``SCALING.json``
+(``SCALING_X{n}.json`` for ``--copies n`` other than 10) with the
 per-query wall-time and shuffle-byte ratios vs the committed 1x
 ``BENCH_DETAIL.json``. A linear plan lands well under 10x wall ratio
 (fixed JVM/job-submit cost amortizes); a plan that is secretly quadratic
@@ -35,7 +36,7 @@ multi-file layout from ``testing.make_multifile``), so scans split
 naturally and ``spread()`` no-ops.
 
 Usage: python scale_check.py [--copies 10] [--queries q1,q5,...]
-       [--rebuild] [--out SCALING_r04.json]
+       [--rebuild] [--out SCALING.json]
 """
 
 from __future__ import annotations
@@ -253,8 +254,8 @@ def main() -> int:
     if args.out is None:
         args.out = os.path.join(
             REPO,
-            "SCALING_r04.json" if args.copies == 10
-            else f"SCALING_X{args.copies}_r04.json",
+            "SCALING.json" if args.copies == 10
+            else f"SCALING_X{args.copies}.json",
         )
 
     if args.rebuild or not os.path.isdir(DST):

@@ -560,15 +560,28 @@ def test_multimodal_frame_sample_fanout(docs):
     assert d1[0]["n_bytes"] == 10
 
 
-def test_duplicate_groups_transitive_closure(spark):
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (7, 9), (10, 11), (3, 5)],
-        ["doc_a", "doc_b"],
-    )
-    groups = {r["doc_id"]: r["group_id"] for r in dedup.duplicate_groups(pairs).collect()}
-    assert groups[1] == groups[2] == groups[3] == groups[5] == 1  # chain merges
-    assert groups[7] == groups[9] == 7
-    assert groups[10] == groups[11] == 10
+@pytest.mark.parametrize(
+    "edges, expected",
+    [
+        pytest.param(
+            [(1, 2), (2, 3), (7, 9), (10, 11), (3, 5)],
+            {1: 1, 2: 1, 3: 1, 5: 1, 7: 7, 9: 7, 10: 10, 11: 10},
+            id="chains",
+        ),
+        # a hub joined to 1..39, plus a chain: the hub's whole neighborhood
+        # lands in one window partition in round 1
+        pytest.param(
+            [(0, i) for i in range(1, 40)] + [(50, 51), (51, 52)],
+            {**{i: 0 for i in range(40)}, 50: 50, 51: 50, 52: 50},
+            id="hub",
+        ),
+    ],
+)
+def test_duplicate_groups_transitive_closure(spark, edges, expected):
+    pairs = spark.createDataFrame(edges, ["doc_a", "doc_b"])
+    rows = dedup.duplicate_groups(pairs).collect()
+    assert len(rows) == len(expected)  # one row per doc
+    assert {r["doc_id"]: r["group_id"] for r in rows} == expected
 
 
 def test_duplicate_groups_deep_chain_converges(spark):
@@ -609,42 +622,6 @@ def test_duplicate_groups_no_premature_star_forest_exit(spark):
     assert ids == list(range(1, 10))
     # ... and one component rooted at the minimum
     assert {r["group_id"] for r in rows} == {1}
-
-
-def test_star_hub_safe_form_is_value_identical(spark):
-    """r12 skew guard: the hub-safe aggregate+join star forms must emit
-    the EXACT edge set of the window forms (they attach the same
-    neighborhood minimum), and their plans must contain no Window node —
-    the whole point is that a hub key's rows never collapse into one
-    window task (the partial-agg min combines map-side and the join-back
-    is AQE-skew-splittable)."""
-    edges = [(1, 2), (2, 3), (3, 5), (1, 7), (4, 5), (6, 7), (8, 9)]
-    e = spark.createDataFrame(edges, ["s", "t"])
-    for fn in (dedup._large_star, dedup._small_star):
-        window_form = {(r["s"], r["t"]) for r in fn(e, False).collect()}
-        safe = fn(e, True)
-        safe_form = {(r["s"], r["t"]) for r in safe.collect()}
-        assert safe_form == window_form
-        plan = safe._jdf.queryExecution().executedPlan().toString()
-        assert "Window" not in plan, plan
-
-
-def test_duplicate_groups_hub_safe_threshold(spark, monkeypatch):
-    """With the hub-degree threshold forced to 1, every round takes the
-    hub-safe path; groups must be identical to the window path. The hub
-    graph (node 0 joined to everything, plus a chain) exercises both the
-    round-1 input-degree probe and the per-round re-probe."""
-    from datafusion_ray_spark.operators import dedup as dd
-
-    edges = [(0, i) for i in range(1, 40)] + [(50, 51), (51, 52)]
-    pairs = spark.createDataFrame(edges, ["doc_a", "doc_b"])
-    expected = {(r["doc_id"], r["group_id"])
-                for r in dd.duplicate_groups(pairs).collect()}
-    monkeypatch.setattr(dd, "CC_HUB_DEGREE", 1)
-    got = {(r["doc_id"], r["group_id"])
-           for r in dd.duplicate_groups(pairs).collect()}
-    assert got == expected
-    assert {g for _, g in got} == {0, 50}
 
 
 def test_is_star_forest_rejects_multi_parent_child(spark):

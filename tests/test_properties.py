@@ -491,3 +491,52 @@ def test_minhash_pairs_unique_and_ordered(spark, rows):
     spark.catalog.clearCache()
     assert len(pairs) == len(set(pairs)), sorted(pairs)
     assert all(a < b for a, b in pairs), sorted(pairs)
+
+
+@st.composite
+def _dup_graph(draw):
+    """Seeded pair lists mixing the shapes star contraction must handle: a
+    star hub, a long chain, random pairs, repeated pairs (either order)
+    and self-pairs, over shuffled node ids so a component's minimum can
+    sit anywhere in it."""
+    import numpy as np
+
+    rng = np.random.default_rng(draw(st.integers(0, 2**32 - 1)))
+    ids = [int(i) for i in rng.permutation(200)]
+    hub, chain = ids[0], ids[1:draw(st.integers(3, 30))]
+    spokes = rng.choice(ids[30:80], draw(st.integers(0, 25)))
+    edges = [(hub, int(v)) for v in spokes]
+    edges += list(zip(chain, chain[1:]))
+    rand = rng.choice(ids[:80], (draw(st.integers(0, 15)), 2))
+    edges += [(int(a), int(b)) for a, b in rand]
+    edges += [(b, a) for a, b in edges[: draw(st.integers(0, 5))]]  # repeats
+    edges += [(v, v) for v in ids[80:80 + draw(st.integers(0, 3))]]
+    return edges
+
+
+@given(edges=_dup_graph())
+@_settings
+def test_duplicate_groups_match_union_find(spark, edges):
+    """Star contraction labels every doc with the minimum doc id of its
+    connected component, once per doc — the same labelling a union-find
+    gives; a doc seen only in a self-pair is its own group."""
+    from datafusion_ray_spark.operators import dedup
+
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)  # a root is its set's minimum
+    expected = {v: find(v) for v in list(parent)}
+
+    pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
+    rows = dedup.duplicate_groups(pairs).collect()
+    assert len(rows) == len(expected)  # one row per doc
+    assert {r["doc_id"]: r["group_id"] for r in rows} == expected

@@ -3,19 +3,20 @@
 ``scale_check.py`` builds a 10x variant of sf0.1 (disjoint-key copies for
 the keyed tables, fresh vocab-sampled synthetic rows for documents/
 embeddings), runs the full fault-isolated bench against it, and writes
-``SCALING_r04.json`` with per-query wall-time ratios vs the committed 1x
-``BENCH_DETAIL.json``. This test pins the committed artifact's contract:
+``SCALING.json`` with per-query wall-time ratios vs the committed 1x
+``BENCH_DETAIL.json``; ``--copies 100`` writes ``SCALING_X100.json``. Both
+names are fixed, so a rebuild replaces the artifact these tests read. This
+test pins the committed artifact's contract:
 every query ran, none errored, and nothing scales super-linearly except
 the explicitly documented all-pairs baseline (``sim_knn_brute``, the
 recall oracle for the sub-linear ANN family).
 
 After an intentional change, regenerate with:
-    python scale_check.py --rebuild   # ~20 min, writes SCALING_r04.json
+    python scale_check.py --rebuild   # ~20 min, writes SCALING.json
 """
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 
@@ -25,10 +26,10 @@ _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _artifact() -> dict:
-    paths = sorted(glob.glob(os.path.join(_REPO, "SCALING_r*.json")))
-    if not paths:
-        pytest.skip("no SCALING_r*.json committed yet")
-    with open(paths[-1]) as f:
+    path = os.path.join(_REPO, "SCALING.json")
+    if not os.path.exists(path):
+        pytest.skip("no SCALING.json committed yet")
+    with open(path) as f:
         return json.load(f)
 
 
@@ -96,12 +97,10 @@ def test_x100_subset_artifact_is_clean():
     representative queries from every family) must be error-free with no
     super-linear flags — the closest measurable stand-in for the 100 TB
     north star this sandbox can produce."""
-    import glob
-
-    paths = sorted(glob.glob(os.path.join(_REPO, "SCALING_X100_r*.json")))
-    if not paths:
+    path = os.path.join(_REPO, "SCALING_X100.json")
+    if not os.path.exists(path):
         pytest.skip("no x100 artifact committed")
-    with open(paths[-1]) as f:  # newest round's artifact
+    with open(path) as f:
         art = json.load(f)
     assert art["factor"] == 100
     assert art["summary"]["n_errors"] == 0, art["summary"]["err_queries"]

@@ -434,26 +434,6 @@ def test_ngram_novelty_duplicate_scores_zero(spark, monkeypatch):
     assert got[4][0] == 2 and got[4][1] < 100_000
 
 
-def test_ngram_novelty_hub_safe_twin_is_value_identical(spark, monkeypatch):
-    """r12 skew guard: SPARK_GRAFT_NOVELTY_HUB_SAFE swaps the window-min
-    first-occurrence attach for a partial-agg min + AQE-skew-splittable
-    join-back. Same rows, and the hub-safe plan must carry no Window."""
-    import datafusion_ray_spark.operators.suite4 as s4
-
-    a = " ".join(f"w{i}" for i in range(20))
-    b = " ".join(f"x{i}" for i in range(20))
-    docs = spark.createDataFrame(
-        [(1, a, "s"), (2, a, "s"), (3, b, "s"), (4, a + " " + b, "s")],
-        "doc_id long, text string, source string",
-    )
-    monkeypatch.setattr(s4, "_docs", lambda _s, _d: docs)
-    base = [tuple(r) for r in s4.run_ngram_novelty(spark, "ignored").collect()]
-    monkeypatch.setattr(s4, "NOVELTY_HUB_SAFE", True)
-    safe_df = s4.run_ngram_novelty(spark, "ignored")
-    assert [tuple(r) for r in safe_df.collect()] == base
-    assert "Window" not in safe_df._jdf.queryExecution().executedPlan().toString()
-
-
 def test_knn_graph_ranks_planted_neighbors(spark):
     """Two tight clusters: every vector's rank-1 neighbor comes from its
     own cluster, and ranking ties break by neighbor id."""
