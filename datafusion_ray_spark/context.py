@@ -290,10 +290,6 @@ class DFRayContext:
             "processor_pool_max": processor_pool_max,
         }
         self._tables: dict[str, str] = {}
-        # name -> presign metadata for s3:// CSV tables served through a
-        # presigned GET URL (jar-less tier): enough to RE-PRESIGN and
-        # re-register when the URL nears expiry (sql() checks each call).
-        self._presigned: dict[str, dict] = {}
 
     # -- registration (reference: core.py:591-643, src/context.rs:57-107) ---
 
@@ -385,8 +381,8 @@ class DFRayContext:
         if path.startswith(("http://", "https://")):
             # Reference parity: its http object store serves parquet scans
             # too (src/util.rs:523-580). The distributed ranged source
-            # needs Range support; servers without it degrade to the same
-            # driver-spool fallback register_csv uses.
+            # needs Range support; servers without it degrade to a
+            # driver spool of the objects.
             from .sources.httpparquet import (
                 RANGE_UNSUPPORTED_TOKEN,
                 HTTPParquetDataSource,
@@ -476,17 +472,24 @@ class DFRayContext:
         from .sources.s3store import _enable_python_filter_pushdown
 
         _enable_python_filter_pushdown(self.spark)
+        if columns:
+            src_opts["columns"] = ",".join(columns)
+        if filters:
+            src_opts["filters"] = json.dumps(filters)
+        df = self._load_source(source, src_opts, options)
+        return _shape(df, None, filters)
+
+    def _load_source(self, source, src_opts: dict, options: dict) -> DataFrame:
+        """Load a Python data source with ``src_opts`` and the caller's
+        ``options``, surfacing schema, Range and credential errors NOW
+        rather than at the first query."""
         self.spark.dataSource.register(source)
         reader = self.spark.read.format(source.name()).options(**src_opts)
-        if columns:
-            reader = reader.option("columns", ",".join(columns))
-        if filters:
-            reader = reader.option("filters", json.dumps(filters))
         for k, v in options.items():
             reader = reader.option(k, str(v))
         df = reader.load()
-        df.limit(0).collect()  # surface Range/footer/credential errors NOW
-        return _shape(df, None, filters)
+        df.limit(0).collect()
+        return df
 
     def register_csv(self, name: str, path: str, **options: Any) -> None:
         """Register a CSV file with header+schema inference (the reference
@@ -494,30 +497,17 @@ class DFRayContext:
         schema — ``src/context.rs:69-79``).
 
         http(s) URLs are supported like the reference's http object store
-        (``examples/http_csv.py:27-35``), and DISTRIBUTED: a Spark 4
-        Python Data Source splits the file into byte-range partitions that
-        executors fetch with HTTP Range requests (``sources/httpcsv.py``).
-        Servers without Range support degrade to one executor-side
-        partition; if the datasource path fails entirely, the driver-spool
-        fallback still registers the table.
+        (``examples/http_csv.py:27-35``), and DISTRIBUTED: the ranged CSV
+        reader (``sources/httpcsv.py``) splits the file into byte-range
+        partitions that executors fetch with HTTP Range requests. Servers
+        without Range support degrade to one executor-side partition.
 
         ``s3://`` CSV follows the same two tiers as parquet: the s3a
-        connector when its jars are present, else a presigned GET URL
-        (boto3, ``presign_expiry`` seconds, default 3600) feeds the SAME
-        distributed Range-partitioned HTTP source — S3 serves Range
-        requests natively, so a jar-less environment still scans S3 CSV
-        in parallel. Credentials/endpoint options (``endpoint_url``,
-        ``access_key``/``secret_key``, ``region``) match the parquet tier.
-
-        Presigned-URL hygiene (round-10): the signed URL is a BEARER
-        CREDENTIAL, so it never appears in user-visible surfaces — the
-        registered provenance (``tables()``) keeps the original ``s3://``
-        path, and plan/log output carries no query string. Expiry is
-        handled, not just documented: ``sql()`` re-presigns and
-        re-registers the table when the URL nears ``presign_expiry``, so
-        long-lived sessions keep working. Only a DIRECT
-        ``spark.table(name)`` scan issued after expiry (bypassing this
-        facade) sees S3's 403 — re-register or query through ``ctx.sql``.
+        connector when its jars are present, else the same ranged CSV
+        reader over the S3 store, so a jar-less environment still scans
+        S3 CSV in parallel. Credentials/endpoint options (``endpoint_url``,
+        ``access_key``/``secret_key``, ``region``, ``anon``) match the
+        parquet tier; provenance (``tables()``) keeps the ``s3://`` path.
         """
         if path.startswith(("s3://", "s3a://")):
             s3a = self._normalize_path(path)
@@ -531,31 +521,20 @@ class DFRayContext:
             except Exception as exc:
                 if not _missing_connector(exc):
                     raise  # real failure (auth, missing key): fail loud
-                logger.info("s3a connector unavailable; presigned-URL tier")
-            expiry = int(options.pop("presign_expiry", 3600))
-            s3_keys = ("endpoint_url", "access_key", "secret_key",
-                       "region", "anon")
-            s3_opts = {k: str(options.pop(k)) for k in s3_keys
-                       if k in options}
-            csv_opts = {k: str(v) for k, v in options.items()}
-            self._register_presigned_csv(name, path, s3_opts, csv_opts,
-                                         expiry)
+                logger.info(
+                    "s3a connector unavailable; distributed boto3 source"
+                )
+            from .sources.httpcsv import S3CsvDataSource
+
+            df = self._load_source(S3CsvDataSource, {"path": path}, options)
+            self._register(name, df, path)
             return
         if path.startswith(("http://", "https://")):
-            try:
-                from .sources.httpcsv import register_http_csv
+            from .sources.httpcsv import HttpCsvDataSource
 
-                register_http_csv(self.spark)
-                reader = self.spark.read.format("http_csv").option("url", path)
-                for k, v in options.items():
-                    reader = reader.option(k, str(v))
-                df = reader.load()
-                df.limit(0).collect()  # surface schema/connect errors NOW
-                self._register(name, df, path)
-                return
-            except Exception:
-                logger.info("http_csv datasource failed; driver-spool fallback")
-            path = self._fetch_url(path)
+            df = self._load_source(HttpCsvDataSource, {"url": path}, options)
+            self._register(name, df, path)
+            return
         path = self._normalize_path(path)
         opts = {"header": "true", "inferSchema": "true"}
         opts.update({k: str(v) for k, v in options.items()})
@@ -615,45 +594,31 @@ class DFRayContext:
         batches — zero-copy through the Arrow fast path. ``path`` may be
         a file or a directory of ``.arrow``/``.feather``/``.ipc`` files.
         """
-        from .sources.arrowipc import register_arrow_ipc
+        from .sources.arrowipc import ArrowIPCDataSource
 
-        register_arrow_ipc(self.spark)
-        reader = self.spark.read.format("arrowipc").option("path", path)
-        for k, v in options.items():
-            reader = reader.option(k, str(v))
-        df = reader.load()
-        df.limit(0).collect()  # surface missing/corrupt-footer errors NOW
+        df = self._load_source(ArrowIPCDataSource, {"path": path}, options)
         self._register(name, df, path)
 
     def register_avro(self, name: str, path: str) -> None:
         """Avro source (reference: ``datafusion.proto:715``).
 
-        Three tiers, best available wins:
+        Two tiers, best available wins:
         1. the ``spark-avro`` connector when on the classpath (JVM scan);
         2. the DISTRIBUTED pure-Python container reader — a Spark 4 Python
            Data Source splitting files into byte-range partitions at the
            Avro sync markers (``sources/avro.py``), so even without the
-           jar the scan parallelizes across executors;
-        3. driver-side decode + ``createDataFrame`` as the last resort
-           (e.g. an exotic codec the pure reader rejects).
-        Same SQL surface in all three.
+           jar the scan parallelizes across executors. Its errors (an
+           unsupported codec, a corrupt header) surface as-is.
+        Same SQL surface in both.
         """
         try:
             df = self.spark.read.format("avro").load(path)
-        except Exception:  # connector absent -> pure-Python paths
-            try:
-                from .sources.avro import register_pyavro
+        except Exception:  # connector absent -> pure-Python reader
+            from .sources.avro import register_pyavro
 
-                register_pyavro(self.spark)
-                df = self.spark.read.format("pyavro").option("path", path).load()
-                df.limit(0).collect()  # surface schema/codec errors NOW
-            except Exception:
-                from .sources.avro import avro_to_spark_type, read_avro
-
-                schema, rows = read_avro(path)
-                df = self.spark.createDataFrame(
-                    rows, schema=avro_to_spark_type(schema)
-                )
+            register_pyavro(self.spark)
+            df = self.spark.read.format("pyavro").option("path", path).load()
+            df.limit(0).collect()  # surface schema/codec errors NOW
         self._register(name, df, path)
 
     def register_delta(self, name: str, path: str) -> None:
@@ -786,96 +751,6 @@ class DFRayContext:
         df.createOrReplaceTempView(name)
         self._tables[name] = path
 
-    def _register_presigned_csv(
-        self,
-        name: str,
-        s3_path: str,
-        s3_opts: dict[str, str],
-        csv_opts: dict[str, str],
-        expiry: int,
-        spool_fallback: bool = True,
-    ) -> None:
-        """Presign a GET URL for an s3:// CSV object and register it
-        through the distributed Range-partitioned HTTP source.
-
-        The signed URL embeds the access-key id and signature in its query
-        string — a bearer credential — so it is confined to the data
-        source's fetch option: provenance (``tables()``) records the
-        ``s3://`` path, log lines carry no URL, and re-presigning happens
-        against the stored metadata here, invoked by ``sql()`` shortly
-        before ``expiry`` elapses."""
-        import time
-
-        from .sources.s3store import _client, _split_url
-
-        bucket, key = _split_url(s3_path)
-        url = _client(s3_opts).generate_presigned_url(
-            "get_object",
-            Params={"Bucket": bucket, "Key": key},
-            ExpiresIn=expiry,
-        )
-        try:
-            from .sources.httpcsv import register_http_csv
-
-            register_http_csv(self.spark)
-            reader = self.spark.read.format("http_csv").option("url", url)
-            for k, v in csv_opts.items():
-                reader = reader.option(k, v)
-            df = reader.load()
-            df.limit(0).collect()  # surface schema/connect errors NOW
-        except Exception:
-            # On a REFRESH the table is already serving; downgrading it to
-            # a frozen local spool because of a transient hiccup would be
-            # a silent semantics change — raise to the caller instead.
-            if not spool_fallback:
-                raise
-            logger.info("http_csv datasource failed; driver-spool fallback")
-            local = self._fetch_url(url)
-            opts = {"header": "true", "inferSchema": "true", **csv_opts}
-            # spooled to local disk: no live URL, nothing expires
-            self._register(
-                name, self.spark.read.options(**opts).csv(local), s3_path
-            )
-            self._presigned.pop(name, None)
-            return
-        self._register(name, df, s3_path)  # provenance WITHOUT the signature
-        # refresh a safety margin before S3 starts rejecting: 60 s for
-        # real expiries, half-life for the short ones tests use
-        margin = 60 if expiry > 120 else expiry / 2
-        self._presigned[name] = {
-            "s3_path": s3_path,
-            "s3_opts": s3_opts,
-            "csv_opts": csv_opts,
-            "expiry": expiry,
-            "refresh_at": time.time() + expiry - margin,
-        }
-
-    def _refresh_presigned(self) -> None:
-        """Re-presign + re-register any presigned-CSV table nearing
-        expiry (the view swap is atomic; running queries keep their
-        already-resolved URL). A failed refresh must not take down
-        UNRELATED queries: the table keeps serving its current URL (the
-        refresh margin means it is usually still valid), the failure is
-        logged, and the next ``sql()`` after a short back-off retries."""
-        import time
-
-        for name, meta in list(self._presigned.items()):
-            if time.time() >= meta["refresh_at"]:
-                logger.info("re-presigning table %r before expiry", name)
-                try:
-                    self._register_presigned_csv(
-                        name, meta["s3_path"], meta["s3_opts"],
-                        meta["csv_opts"], meta["expiry"],
-                        spool_fallback=False,
-                    )
-                except Exception as exc:  # noqa: BLE001 - isolate per table
-                    meta["refresh_at"] = time.time() + 30  # back-off retry
-                    logger.warning(
-                        "re-presign of %r failed (%s); keeping the current "
-                        "URL, retrying on the next query after 30 s",
-                        name, exc,
-                    )
-
     def tables(self) -> dict[str, str]:
         return dict(self._tables)
 
@@ -884,7 +759,6 @@ class DFRayContext:
     def sql(self, query: str) -> DFRayDataFrame:
         """Run SQL (multi-statement scripts supported) and return the last
         statement's result lazily."""
-        self._refresh_presigned()
         return DFRayDataFrame(run_script(self.spark, query))
 
     def set(self, key: str, value: str) -> None:

@@ -7,11 +7,11 @@ primitives, records/enums/arrays/maps/unions/fixed, and the ``null`` /
 
 Purpose: the reference registers Avro sources natively
 (``datafusion.proto:715``); Spark needs the separate ``spark-avro``
-connector jar, absent from this container. ``DFRayContext.register_avro``
-uses the connector when present and falls back to this reader otherwise
-(driver-side read -> Arrow/createDataFrame). The fallback is the DEGRADED
-path — fine for dimension-table-sized files; at 100 TB you install the
-connector and the same ``register_avro`` call becomes a distributed scan.
+connector jar, which a bare Spark install lacks.
+``DFRayContext.register_avro`` uses the connector when present and falls
+back to this module's distributed ``pyavro`` Data Source otherwise.
+``read_avro`` decodes one file on the driver: the reference decoder the
+tests compare against.
 
 The writer covers flat records of primitives (round-trip tests and
 interchange); the reader covers the full standard type system.
@@ -394,8 +394,7 @@ def _build_datasource_classes():
     the next marker, and decodes only the blocks that START inside its
     range (ownership: ``start < block_pos <= end``, so every block lands in
     exactly one partition, including marker-on-boundary cases). This is the
-    same split discipline Hadoop's Avro input format uses, and it removes
-    the driver-side limitation of the ``read_avro`` fallback: scan
+    same split discipline Hadoop's Avro input format uses: scan
     parallelism = file bytes / partition_bytes, independent of file count.
     (Classes built lazily to keep the pyspark.datasource import optional.)
     """

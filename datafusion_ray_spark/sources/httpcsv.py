@@ -1,55 +1,42 @@
-"""Distributed HTTP CSV source — a Spark 4 Python Data Source that closes
-the reference's http object-store capability (``/root/reference/
-examples/http_csv.py:27-35`` streams CSV over http via DataFusion's object
-store) WITHOUT the driver-spool fallback's single-node bottleneck.
+"""Distributed ranged CSV reader: ONE Spark 4 Python Data Source core for
+CSV over the stores of the ranged-parquet reader (``sources/s3store.py``)
+— ``http_csv`` reads through the http store, ``s3csv`` through the S3
+store. The reference does the same: its http example streams CSV over
+DataFusion's http object store (``examples/http_csv.py:27-35``), and the
+store comes from the URL scheme (``src/util.rs:523-580``).
 
-How it distributes: the planner issues one HEAD request; when the server
-advertises ``Accept-Ranges: bytes``, the file is split into byte-range
-partitions and EVERY EXECUTOR fetches its own range with an HTTP ``Range``
-header — the same split-at-newline technique Spark's file sources use for
-text: each partition skips its first (possibly partial) line and reads
-through the first newline PAST its end, so every line lands in exactly one
-partition. No Range support (or unknown length) degrades to one partition,
-still executor-side, never a driver spool.
+How it distributes: the planner takes each object's size (from the S3
+listing, or from one HEAD that also reports ``Accept-Ranges`` on http)
+and splits it into byte-range partitions ``(ref, size, start, end)``;
+EVERY EXECUTOR fetches its own range with a ranged GET — the same
+split-at-newline technique Spark's file sources use for text: each
+partition skips its first (possibly partial) line and reads on past its
+end until a newline or the end of the object, so every line, however
+long, lands in exactly one partition. A server without Range support, or
+an object of unknown size, reads as one whole-object partition — still
+executor-side, never a driver spool.
 
 Schema: header + sampled type inference (long/double/string) from the
-first chunk, so the SQL surface matches a ``spark.read.csv`` with
-``inferSchema`` for the common types.
+first object's first 64 KiB, so the SQL surface matches a
+``spark.read.csv`` with ``inferSchema`` for the common types.
 """
 
 from __future__ import annotations
 
+import csv
 import io
-import urllib.request
 
 from pyspark.sql import types as T
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
+from .httpparquet import RangeUnsupportedError, _HTTPStore
+from .s3store import _range_plan, _S3Store
+
 #: target bytes per partition (small default so tests exercise >1 split;
 #: production sets option("partition_bytes", 128<<20) or similar).
 DEFAULT_PARTITION_BYTES = 4 << 20
+#: bytes of the schema sample, and of the first GET past a partition's end
 _SAMPLE_BYTES = 64 << 10
-
-
-def _fetch(url: str, start: int | None = None, end: int | None = None,
-           timeout: float = 60.0) -> bytes:
-    req = urllib.request.Request(url)
-    if start is not None:
-        req.add_header("Range", f"bytes={start}-{'' if end is None else end}")
-    with urllib.request.urlopen(req, timeout=timeout) as resp:  # noqa: S310 - user-supplied source
-        return resp.read()
-
-
-def _probe(url: str, timeout: float = 60.0) -> tuple[int | None, bool]:
-    """(content_length, supports_ranges) via one HEAD request."""
-    req = urllib.request.Request(url, method="HEAD")
-    try:
-        with urllib.request.urlopen(req, timeout=timeout) as resp:  # noqa: S310
-            length = resp.headers.get("Content-Length")
-            ranges = resp.headers.get("Accept-Ranges", "").lower() == "bytes"
-            return (int(length) if length else None), ranges
-    except Exception:
-        return None, False
 
 
 def _infer_field(values: list[str]) -> T.DataType:
@@ -70,18 +57,20 @@ def _infer_field(values: list[str]) -> T.DataType:
         return T.StringType()
 
 
-class HttpCsvDataSource(DataSource):
-    """``spark.read.format("http_csv").option("url", ...).load()``."""
+class _RangedCsvSource(DataSource):
+    """The one CSV scan over a ranged-GET store; a subclass names its
+    format and sets ``store`` to the store class."""
 
-    @classmethod
-    def name(cls) -> str:
-        return "http_csv"
+    store: type
+    suffixes = (".csv",)
 
     def schema(self):
-        import csv
-
-        url = self.options["url"]
-        sample = _fetch(url, 0, _SAMPLE_BYTES - 1)
+        store = self.store(dict(self.options), self.suffixes)
+        ref, _size = store.entries()[0]
+        try:
+            sample = store.get(ref, 0, _SAMPLE_BYTES - 1)
+        except RangeUnsupportedError:  # no Range support: the whole object
+            sample = store.get(ref, 0, None)[:_SAMPLE_BYTES]
         # drop the trailing (possibly truncated) line of the sample
         text = sample.decode("utf-8", errors="replace")
         lines = text.split("\n")
@@ -100,46 +89,60 @@ class HttpCsvDataSource(DataSource):
         )
 
     def reader(self, schema):
-        return _HttpCsvReader(schema, self.options)
+        opts = dict(self.options)
+        return _CsvReader(schema, opts, self.store(opts, self.suffixes))
 
 
-class _HttpCsvReader(DataSourceReader):
-    def __init__(self, schema, options):
+class _CsvReader(DataSourceReader):
+    def __init__(self, schema, options, store):
         self.schema = schema
-        self.url = options["url"]
+        self.store = store
         self.part_bytes = int(
             options.get("partition_bytes", DEFAULT_PARTITION_BYTES)
         )
-        self.timeout = float(options.get("timeout", 60.0))
 
     def partitions(self):
-        length, ranged = _probe(self.url, self.timeout)
-        if not ranged or not length or length <= self.part_bytes:
-            return [InputPartition((0, None))]
-        starts = list(range(0, length, self.part_bytes))
-        return [
-            InputPartition((s, min(s + self.part_bytes, length) - 1))
-            for s in starts
-        ]
+        parts = []
+        for ref, size in self.store.entries():
+            ranged = True
+            if size is None:
+                size, ranged = self.store.head(ref)
+            if ranged and size is not None:
+                parts += _range_plan([(ref, size)], self.part_bytes)
+            else:  # one whole-object partition, read with an open range
+                parts.append((ref, None, 0, None))
+        return [InputPartition(p) for p in parts]
+
+    def _line_end(self, ref, pos: int, size: int) -> bytes:
+        """Bytes from ``pos`` up to the next newline or the end of the
+        object; each GET doubles the last, so a long line costs a few
+        round trips and no GET asks past the object's end."""
+        out, step = [], _SAMPLE_BYTES
+        while pos < size:
+            chunk = self.store.get(ref, pos, min(pos + step, size) - 1)
+            if not chunk:
+                raise EOFError(f"object ended before byte {pos} of {size}")
+            nl = chunk.find(b"\n")
+            if nl >= 0:
+                out.append(chunk[:nl])
+                break
+            out.append(chunk)
+            pos += len(chunk)
+            step *= 2
+        return b"".join(out)
 
     def read(self, partition):
-        import csv
-
-        start, end = partition.value
-        if end is None:  # single whole-file partition
-            chunk = _fetch(self.url, None, None, self.timeout)
+        ref, size, start, end = partition.value
+        if size is None:  # whole-object partition
+            chunk = self.store.get(ref, 0, None)
         else:
-            # Over-read past the range end to finish the final line; skip
+            # Read on past the range end to finish the final line; skip
             # the first (possibly partial) line unless we own byte 0. Each
             # line is then emitted by exactly one partition — including the
             # exact-boundary case, where the previous partition's over-read
             # completes the line starting at our first byte.
-            body = _fetch(self.url, start, end, self.timeout)
-            try:  # past EOF on the last partition -> 416/empty: no tail
-                tail = _fetch(self.url, end + 1, end + 1_048_576, self.timeout)
-            except Exception:
-                tail = b""
-            chunk = body + tail.split(b"\n", 1)[0]
+            chunk = (self.store.get(ref, start, end - 1)
+                     + self._line_end(ref, end, size))
         text = chunk.decode("utf-8", errors="replace")
         lines = text.split("\n")
         # start>0: drop the partial first line (owned by the previous
@@ -161,6 +164,28 @@ class _HttpCsvReader(DataSourceReader):
             yield tuple(
                 c(row[i]) if i < len(row) else None for i, c in enumerate(casts)
             )
+
+
+class HttpCsvDataSource(_RangedCsvSource):
+    """``spark.read.format("http_csv").option("url", ...).load()``."""
+
+    store = _HTTPStore
+
+    @classmethod
+    def name(cls) -> str:
+        return "http_csv"
+
+
+class S3CsvDataSource(_RangedCsvSource):
+    """``spark.read.format("s3csv").option("path", "s3://b/key.csv")`` —
+    one object, or every ``*.csv`` under a prefix; credentials as for
+    ``s3parquet``."""
+
+    store = _S3Store
+
+    @classmethod
+    def name(cls) -> str:
+        return "s3csv"
 
 
 def register_http_csv(spark) -> None:

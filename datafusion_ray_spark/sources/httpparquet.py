@@ -1,18 +1,21 @@
-"""The http(s) store of the ranged-parquet reader — extends the reference's
-http object-store capability (``/root/reference/src/util.rs:523-580``
-registers an http store from the URL scheme; its DataFusion scans then
-ranged-read parquet over it) to this engine's
-``register_parquet("https://...")``.
+"""The http(s) store of the ranged readers — extends the reference's
+http object-store capability (its ``src/util.rs:523-580`` registers an
+http store from the URL scheme; its DataFusion scans then ranged-read
+parquet and CSV over it) to this engine's
+``register_parquet("https://...")`` and ``register_csv("https://...")``.
 
-The scan itself — planner, stats pruner, ranged file, Arrow-batch reads —
-is the one in ``sources/s3store.py``; this module supplies only what http
-does differently: resolving the scan's objects from ``url``, ``urls`` or
-``manifest``, probing a size (HEAD, or a 1-byte Range GET when the server
-hides Content-Length), and the urllib Range GET.
+The scans themselves are the ranged-parquet reader in
+``sources/s3store.py`` and the ranged CSV reader in ``sources/httpcsv.py``;
+this module supplies only what http does differently: resolving the
+scan's objects from ``url``, ``urls`` or ``manifest``, one HEAD for size
+and ``Accept-Ranges``, a size probe (HEAD, or a 1-byte Range GET when the
+server hides Content-Length), and the urllib Range GET.
 
 Servers without Range support cannot serve partial reads of a columnar
-file; the facade degrades to its driver-spool fallback (download once,
-read locally) rather than failing, same as ``register_csv``.
+file; for parquet the facade degrades to its driver-spool fallback
+(download once, read locally) rather than failing. CSV needs no partial
+read: such a server's object is one whole-object partition, read by an
+executor with an open-ended GET.
 """
 
 from __future__ import annotations
@@ -62,7 +65,7 @@ def _parse_manifest(body: str, murl: str) -> list[tuple[str, int | None]]:
         entries.append((urljoin(murl, url), size))
     if not entries:
         raise FileNotFoundError(
-            f"manifest {redact_url(murl)} lists no parquet URLs"
+            f"manifest {redact_url(murl)} lists no object URLs"
         )
     return entries
 
@@ -116,11 +119,12 @@ class _HTTPStore:
       annotation) — how a 100 TB publisher actually exposes a many-file
       dataset over plain http.
 
-    Refs are object URLs."""
+    Refs are object URLs. ``suffixes`` is unused: http objects are
+    declared, never listed."""
 
     timeout = 60.0
 
-    def __init__(self, opts: dict):
+    def __init__(self, opts: dict, suffixes: tuple[str, ...] = ()):
         self.opts = opts
 
     def entries(self) -> list[tuple[str, int | None]]:
@@ -129,18 +133,25 @@ class _HTTPStore:
         return (_declared_entries(self.opts, "urls")
                 or [(self.opts["url"], None)])
 
-    def probe_size(self, url: str) -> int:
-        """Object size via HEAD; falls back to a 1-byte Range GET's
-        Content-Range header (servers that hide Content-Length on
-        HEAD)."""
+    def head(self, url: str) -> tuple[int | None, bool]:
+        """``(Content-Length, serves Range)`` from one HEAD request;
+        ``(None, False)`` when the HEAD itself fails."""
         req = urllib.request.Request(url, method="HEAD")
         try:
             with urllib.request.urlopen(req, timeout=self.timeout) as resp:  # noqa: S310 - user-supplied source
                 length = resp.headers.get("Content-Length")
-                if length:
-                    return int(length)
-        except Exception:  # noqa: BLE001 - fall through to the Range probe
-            pass
+                ranges = resp.headers.get("Accept-Ranges", "").lower()
+                return (int(length) if length else None), ranges == "bytes"
+        except Exception:  # noqa: BLE001 - callers fall back
+            return None, False
+
+    def probe_size(self, url: str) -> int:
+        """Object size via HEAD; falls back to a 1-byte Range GET's
+        Content-Range header (servers that hide Content-Length on
+        HEAD)."""
+        size, _ranged = self.head(url)
+        if size is not None:
+            return size
         req = urllib.request.Request(url, headers={"Range": "bytes=0-0"})
         with urllib.request.urlopen(req, timeout=self.timeout) as resp:  # noqa: S310
             rng = resp.headers.get("Content-Range", "")
@@ -156,15 +167,18 @@ class _HTTPStore:
             f"cannot determine object size for {redact_url(url)}"
         )
 
-    def get(self, url: str, start: int, end: int) -> bytes:
-        req = urllib.request.Request(
-            url, headers={"Range": f"bytes={start}-{end}"}
-        )
+    def get(self, url: str, start: int, end: int | None) -> bytes:
+        """Bytes ``[start, end]``; ``end=None`` reads to the end of the
+        object, and a 200 carrying the whole object then answers an
+        open range from 0 (a server without Range support)."""
+        rng = f"bytes={start}-{'' if end is None else end}"
+        req = urllib.request.Request(url, headers={"Range": rng})
         with urllib.request.urlopen(req, timeout=self.timeout) as resp:  # noqa: S310
-            if resp.status != 206:
+            whole = resp.status == 200 and start == 0 and end is None
+            if resp.status != 206 and not whole:
                 raise RangeUnsupportedError(
                     f"server ignored Range request for {redact_url(url)} "
-                    f"(HTTP {resp.status}); ranged parquet reads need "
+                    f"(HTTP {resp.status}); ranged reads need "
                     "Accept-Ranges: bytes"
                 )
             return resp.read()

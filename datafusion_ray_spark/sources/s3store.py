@@ -1,14 +1,19 @@
 """Distributed ranged-parquet reader: ONE Spark 4 Python Data Source core
 for parquet on any store that serves ranged GETs, plus its S3 store.
 
-The reference reads parquet from s3, gs and http through one DataFusion
-scan; only the object store differs, picked from the URL scheme
-(``/root/reference/src/util.rs:523-580``). Same split here: this module
-holds the scan (seekable ranged file, DataSource/reader pair, planner,
-stats pruner) and the S3 store; ``sources/httpparquet.py`` holds only the
-http store. A store supplies what differs: ``entries()`` — the scan's
-objects as ``[(ref, size | None)]``; ``get(ref, start, end)`` — one
-ranged GET, ``end`` inclusive; ``probe_size(ref)``.
+The reference reads parquet and CSV from s3, gs and http through one
+DataFusion scan per format; only the object store differs, picked from
+the URL scheme (the reference's ``src/util.rs:523-580``). Same split
+here: this module holds the parquet scan (seekable ranged file,
+DataSource/reader pair, planner, stats pruner) and the S3 store;
+``sources/httpparquet.py`` holds only the http store, and
+``sources/httpcsv.py`` the CSV scan over the same two stores. A store
+supplies what differs: ``entries()`` — the scan's objects as
+``[(ref, size | None)]``, listing a prefix by the format's filename
+suffixes; ``get(ref, start, end)`` — one ranged GET, ``end`` inclusive
+(the http store also takes ``end=None``, the whole object from a server
+without Range support); ``probe_size(ref)``; and ``head(ref)`` —
+``(size | None, serves Range)``.
 
 The production path for S3 remains Hadoop's ``s3a`` connector (jars +
 IAM); ``DFRayContext.register_parquet("s3://...")`` tries that first and
@@ -464,13 +469,14 @@ class _RangedParquetSource(DataSource):
     docstring for the store interface)."""
 
     store: type
+    suffixes = (".parquet", ".pq")
 
     def schema(self):
         import pyarrow as pa
         from pyspark.sql.pandas.types import from_arrow_schema
 
         opts = dict(self.options)
-        store = self.store(opts)
+        store = self.store(opts, self.suffixes)
         # parquet is self-describing: the first object's footer, probing
         # that object's size alone (a declared size skips even that).
         ref, size = store.entries()[0]
@@ -484,7 +490,7 @@ class _RangedParquetSource(DataSource):
 
     def reader(self, schema):
         opts = dict(self.options)
-        return _ParquetReader(schema, opts, self.store(opts))
+        return _ParquetReader(schema, opts, self.store(opts, self.suffixes))
 
 
 class _ParquetReader(DataSourceReader):
@@ -591,8 +597,10 @@ class _ParquetReader(DataSourceReader):
 
 # -- the S3 store ------------------------------------------------------------
 
-def _list_parquet_objects(client, bucket: str, key: str) -> list[tuple[str, int]]:
-    """(key, size) for `key` itself or every *.parquet under the prefix."""
+def _list_objects(client, bucket: str, key: str,
+                  suffixes: tuple[str, ...]) -> list[tuple[str, int]]:
+    """(key, size) for `key` itself or every object under the prefix whose
+    name ends in one of ``suffixes``."""
     out: list[tuple[str, int]] = []
     if key and not key.endswith("/"):
         try:
@@ -617,13 +625,15 @@ def _list_parquet_objects(client, bucket: str, key: str) -> list[tuple[str, int]
         page = client.list_objects_v2(**kwargs)
         for obj in page.get("Contents", []):
             k = obj["Key"]
-            if k.endswith(".parquet") or k.endswith(".pq"):
+            if k.endswith(suffixes):
                 out.append((k, obj["Size"]))
         if not page.get("IsTruncated"):
             break
         token = page["NextContinuationToken"]
     if not out:
-        raise FileNotFoundError(f"no parquet objects under s3://{bucket}/{key}")
+        raise FileNotFoundError(
+            f"no {suffixes[0][1:]} objects under s3://{bucket}/{key}"
+        )
     return sorted(out)
 
 
@@ -634,10 +644,13 @@ class _S3Store:
     """The objects of one s3:// (or gs://, through GCS's S3-interop
     endpoint) scan, declared by a ``path`` prefix or a ``paths`` list.
     Refs are object keys; all objects live in ONE bucket — a partition
-    records only its key, and the read path binds one bucket per scan."""
+    records only its key, and the read path binds one bucket per scan. A
+    prefix lists the objects whose names end in ``suffixes`` (the
+    format's, from the source class)."""
 
-    def __init__(self, opts: dict):
-        self.opts = opts
+    def __init__(self, opts: dict,
+                 suffixes: tuple[str, ...] = (".parquet", ".pq")):
+        self.opts, self.suffixes = opts, suffixes
         # Resolved ONCE and pickled to executors: with an explicit-list
         # scan the `paths` option IS the manifest, and re-deriving the
         # bucket per read() call would re-parse that JSON per partition.
@@ -663,7 +676,7 @@ class _S3Store:
         paths = _declared_entries(self.opts, "paths")
         if paths is None:
             key = _split_url(self.opts["path"])[1]
-            return _list_parquet_objects(self.client, self.bucket, key)
+            return _list_objects(self.client, self.bucket, key, self.suffixes)
         out = []
         for url, size in paths:
             b, k = _split_url(url)
@@ -680,6 +693,9 @@ class _S3Store:
         return self.client.head_object(
             Bucket=self.bucket, Key=key
         )["ContentLength"]
+
+    def head(self, key: str) -> tuple[int, bool]:
+        return self.probe_size(key), True  # S3 serves every Range
 
     def get(self, key: str, start: int, end: int) -> bytes:
         return self.client.get_object(

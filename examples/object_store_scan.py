@@ -11,8 +11,8 @@ Range server:
   row groups from footer min/max stats via Spark 4.1 ``pushFilters`` —
   observe the partition count drop, no options declared;
 - multi-object http parquet via a URL list, planned across all objects;
-- presigned-URL s3:// CSV with hygiene: provenance shows the ``s3://``
-  path, never the signed URL.
+- s3:// CSV through the same ranged CSV reader over the S3 store, split
+  by byte range; provenance shows the ``s3://`` path.
 
 Run: python examples/object_store_scan.py [sf_dir]
 (requires boto3 + moto; prints a skip note and exits cleanly without)
@@ -91,11 +91,14 @@ def main() -> None:
     ).collect()[0].to_pydict()
     print(f"s3 exact answer: n={got['n'][0]} min_k={got['mn'][0]}")
 
-    # --- presigned s3:// CSV with hygiene ------------------------------
-    ctx.register_csv("dim_s3", "s3://demo/t/dim.csv", **creds)
-    assert ctx.tables()["dim_s3"] == "s3://demo/t/dim.csv"  # no signature
+    # --- s3:// CSV: byte-range partitions over the S3 store ------------
+    ctx.register_csv("dim_s3", "s3://demo/t/dim.csv", partition_bytes=2048,
+                     **creds)
+    assert ctx.tables()["dim_s3"] == "s3://demo/t/dim.csv"
+    parts = ctx.spark.table("dim_s3").rdd.getNumPartitions()
     n = ctx.sql("SELECT COUNT(*) AS n FROM dim_s3").collect()[0]["n"][0]
-    print(f"presigned CSV rows: {n}; provenance: {ctx.tables()['dim_s3']}")
+    print(f"s3 CSV rows: {n} in {parts} byte-range partitions; "
+          f"provenance: {ctx.tables()['dim_s3']}")
 
     # --- multi-object http parquet via a URL list ----------------------
     payloads = {}

@@ -188,3 +188,23 @@ def test_register_listing_table_avro_dir(spark, tmp_path):
     ctx.register_listing_table("avdir", str(tmp_path), file_format="avro")
     out = ctx.sql("SELECT COUNT(*) AS n, SUM(id) AS s FROM avdir").to_pandas()
     assert int(out["n"][0]) == 250 and int(out["s"][0]) == sum(range(250))
+
+
+def test_register_avro_unsupported_codec_names_it(spark, tmp_path):
+    """A codec the pure-Python reader rejects surfaces as that reader's
+    error naming the codec — here for a directory holding one
+    snappy-codec file, which no other tier could read either."""
+    from datafusion_ray_spark import DFRayContext
+
+    schema = {"type": "record", "name": "row",
+              "fields": [{"name": "id", "type": "long"}]}
+    p = tmp_path / "snappy.avro"
+    write_avro(str(p), schema, [{"id": i} for i in range(10)])
+    raw = p.read_bytes()
+    # the header's codec entry: zigzag string lengths 4 ("null") -> 6
+    assert raw.count(b"\x08null") == 1
+    p.write_bytes(raw.replace(b"\x08null", b"\x0csnappy"))
+    ctx = DFRayContext(spark=spark)
+    with pytest.raises(Exception, match="snappy"):
+        ctx.register_avro("avro_snappy", str(tmp_path))
+    assert "avro_snappy" not in ctx.tables()

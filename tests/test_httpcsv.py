@@ -81,17 +81,59 @@ def test_http_csv_range_partitioned(spark, http_url):
     assert df.agg({"id": "sum"}).first()[0] == sum(range(500))
 
 
-def test_http_csv_no_range_single_partition(spark, http_url):
+@pytest.mark.parametrize("partition_bytes", [None, 2048],
+                         ids=["default", "2048"])
+def test_http_csv_no_range_single_partition(spark, http_url, partition_bytes):
+    """A server without Range support reads as ONE executor-side
+    partition, also when the file is larger than one split (2048)."""
     from datafusion_ray_spark.sources.httpcsv import register_http_csv
 
     _RangeHandler.support_ranges = False
     try:
         register_http_csv(spark)
-        df = spark.read.format("http_csv").option("url", http_url).load()
+        reader = spark.read.format("http_csv").option("url", http_url)
+        if partition_bytes is not None:
+            assert len(_RangeHandler.payload) > partition_bytes
+            reader = reader.option("partition_bytes", partition_bytes)
+        df = reader.load()
         assert df.rdd.getNumPartitions() == 1
         assert df.count() == 500
     finally:
         _RangeHandler.support_ranges = True
+
+
+def test_http_csv_long_line_across_partitions_is_whole(spark, http_url):
+    """A line that starts in one partition and runs 1.6 MB past its end
+    (64 KiB partitions) is read on to its newline: no field is cut and
+    every line lands in exactly one partition."""
+    from datafusion_ray_spark.sources.httpcsv import register_http_csv
+
+    short = [",".join(f"r{i}_{j}" for j in range(16)) for i in range(20)]
+    long_fields = [chr(ord("a") + j) * 100_000 for j in range(16)]
+    lines = (
+        [",".join(f"c{j}" for j in range(16))]
+        + short[:10] + [",".join(long_fields)] + short[10:]
+    )
+    good = _RangeHandler.payload
+    _RangeHandler.payload = ("\n".join(lines) + "\n").encode()
+    try:
+        register_http_csv(spark)
+        df = (
+            spark.read.format("http_csv")
+            .option("url", http_url)
+            .option("partition_bytes", 65536)
+            .load()
+        )
+        assert df.rdd.getNumPartitions() > 20
+        rows = [tuple(r) for r in df.collect()]
+    finally:
+        _RangeHandler.payload = good
+    assert len(rows) == 21
+    assert sorted(rows) == sorted(
+        tuple(line.split(",")) for line in lines[1:]
+    )
+    got_long = [r for r in rows if r[0].startswith("a")]
+    assert sum(len(f) for f in got_long[0]) == 1_600_000
 
 
 def test_register_csv_http_uses_datasource(spark, http_url):

@@ -207,21 +207,22 @@ def test_facade_gs_interop_fallback(spark, s3_endpoint, bucket):
     assert row["n"] == [25] and row["mx"] == [24]
 
 
-def test_facade_s3_csv_presigned_distributed(spark, s3_endpoint, bucket):
-    """register_csv('s3://...') in a jar-less environment presigns a GET
-    URL and feeds the DISTRIBUTED Range-partitioned HTTP CSV source —
-    S3 answers Range requests natively (moto does too), so the scan
-    splits instead of spooling."""
-    import io
+def _put_people_csv(s3_endpoint) -> None:
+    """csv/people.csv: 5000 rows of id,name,score (about 90 KB)."""
+    rows = "".join(f"{i},name_{i},{i * 0.5}\n" for i in range(5000))
+    boto3.client("s3", endpoint_url=s3_endpoint).put_object(
+        Bucket="graft", Key="csv/people.csv",
+        Body=f"id,name,score\n{rows}".encode(),
+    )
 
+
+def test_facade_s3_csv_distributed(spark, s3_endpoint, bucket):
+    """register_csv('s3://...') in a jar-less environment reads through
+    the ranged CSV reader over the S3 store — S3 answers Range requests
+    natively (moto does too), so the scan splits by byte range."""
     from datafusion_ray_spark.context import DFRayContext
 
-    client = boto3.client("s3", endpoint_url=s3_endpoint)
-    rows = "".join(f"{i},name_{i},{i * 0.5}\n" for i in range(5000))
-    client.put_object(
-        Bucket="graft", Key="csv/people.csv",
-        Body=io.BytesIO(f"id,name,score\n{rows}".encode()).read(),
-    )
+    _put_people_csv(s3_endpoint)
     ctx = DFRayContext(spark=spark)
     ctx.register_csv(
         "people_s3", "s3://graft/csv/people.csv",
@@ -237,6 +238,66 @@ def test_facade_s3_csv_presigned_distributed(spark, s3_endpoint, bucket):
     assert row["n"] == [5000]
     assert row["s"] == [sum(range(5000))]
     assert row["mx"] == [4999 * 0.5]
+
+
+def test_s3_csv_reader_issues_only_head_and_get(s3_endpoint, bucket):
+    """The s3csv reader plans byte ranges from the object's size and reads
+    each with ranged GETs: a recorded client sees only HeadObject and
+    GetObject — no listing of a single key, no presigning."""
+    from datafusion_ray_spark.sources import s3store
+    from datafusion_ray_spark.sources.httpcsv import S3CsvDataSource
+
+    _put_people_csv(s3_endpoint)
+    real_client = s3store._client
+    calls: list[str] = []
+
+    class Recorder:
+        def __init__(self, inner):
+            self.inner = inner
+
+        def __getattr__(self, attr):
+            calls.append(attr)
+            return getattr(self.inner, attr)
+
+    source = S3CsvDataSource({
+        "path": "s3://graft/csv/people.csv", "endpoint_url": s3_endpoint,
+        "access_key": "testing", "secret_key": "testing",
+        "region": "us-east-1", "partition_bytes": "16384",
+    })
+    s3store._client = lambda _o: Recorder(real_client(_o))
+    try:
+        reader = source.reader(source.schema())
+        parts = reader.partitions()
+        rows = [r for p in parts for r in reader.read(p)]
+    finally:
+        s3store._client = real_client
+    assert len(parts) > 1
+    assert len(rows) == 5000
+    assert sum(r[0] for r in rows) == sum(range(5000))
+    assert max(r[2] for r in rows) == 4999 * 0.5
+    assert set(calls) == {"head_object", "get_object"}
+
+
+def test_s3_csv_prefix_lists_csv_objects(s3_endpoint, bucket):
+    """A prefix scan of s3csv lists the ``.csv`` objects (each with its
+    own header) and skips others; an empty prefix names the format."""
+    from datafusion_ray_spark.sources.httpcsv import S3CsvDataSource
+
+    client = boto3.client("s3", endpoint_url=s3_endpoint)
+    for i in range(2):
+        rows = "".join(f"{k},{k % 3}\n" for k in range(i * 50, i * 50 + 50))
+        client.put_object(Bucket="graft", Key=f"csvdir/part-{i}.csv",
+                          Body=f"k,g\n{rows}".encode())
+    client.put_object(Bucket="graft", Key="csvdir/_SUCCESS", Body=b"")
+    opts = {"endpoint_url": s3_endpoint, "access_key": "testing",
+            "secret_key": "testing", "region": "us-east-1"}
+    source = S3CsvDataSource(dict(opts, path="s3://graft/csvdir"))
+    reader = source.reader(source.schema())
+    ks = sorted(r[0] for p in reader.partitions() for r in reader.read(p))
+    assert ks == list(range(100))
+    empty = S3CsvDataSource(dict(opts, path="s3://graft/nope"))
+    with pytest.raises(FileNotFoundError, match="no csv objects"):
+        empty.schema()
 
 
 def test_missing_prefix_raises_cleanly(spark, s3_endpoint, bucket):
@@ -546,48 +607,41 @@ def test_redact_url_strips_query_string():
     assert redact_url("https://b/k.csv") == "https://b/k.csv"
 
 
-def test_presigned_csv_hygiene_and_expiry_refresh(spark, s3_endpoint, bucket):
-    """Round-10 presign hygiene: the signed URL is a bearer credential, so
-    (a) it must not surface in provenance or plan output, and (b) a
-    long-lived registration must keep working past presign_expiry —
-    sql() re-presigns against the stored s3:// metadata shortly before
-    the URL would expire."""
-    import io
-    import time
-
+@pytest.mark.parametrize("fmt", ["parquet", "csv"])
+def test_s3_jarless_tiers_keep_credentials_out(spark, s3_endpoint, bucket,
+                                               fmt):
+    """Both jar-less s3:// tiers keep credentials out of user-visible
+    surfaces: provenance (``tables()``) records the ``s3://`` path, and no
+    plan string carries the access key, the secret or a signature."""
     from datafusion_ray_spark.context import DFRayContext
 
-    client = boto3.client("s3", endpoint_url=s3_endpoint)
-    rows = "".join(f"{i},{i * 2}\n" for i in range(100))
-    client.put_object(
-        Bucket="graft", Key="csv/expiring.csv",
-        Body=io.BytesIO(f"a,b\n{rows}".encode()).read(),
-    )
+    key_id, secret = "AKIAHYGIENE7Q2X", "hygiene-Secret-9f3c7a1e"
+    if fmt == "csv":
+        rows = "".join(f"{i},{i * 2}\n" for i in range(100))
+        boto3.client("s3", endpoint_url=s3_endpoint).put_object(
+            Bucket="graft", Key="csv/hygiene.csv",
+            Body=f"a,b\n{rows}".encode(),
+        )
+        path = "s3://graft/csv/hygiene.csv"
+        query = "COUNT(*) AS n, SUM(b) AS s"
+        want = {"n": [100], "s": [sum(2 * i for i in range(100))]}
+    else:
+        path = "s3://graft/tables/nation.parquet"
+        query = "COUNT(*) AS n, SUM(n_nationkey) AS s"
+        want = {"n": [25], "s": [sum(range(25))]}
     ctx = DFRayContext(spark=spark)
-    ctx.register_csv(
-        "expiring_s3", "s3://graft/csv/expiring.csv",
-        endpoint_url=s3_endpoint, access_key="testing",
-        secret_key="testing", region="us-east-1",
-        presign_expiry=2,
+    register = ctx.register_csv if fmt == "csv" else ctx.register_parquet
+    register(
+        "hygiene_s3", path, endpoint_url=s3_endpoint, access_key=key_id,
+        secret_key=secret, region="us-east-1",
     )
-    # provenance records the s3:// path, never the signed URL
-    assert ctx.tables()["expiring_s3"] == "s3://graft/csv/expiring.csv"
-    df = ctx.sql("SELECT COUNT(*) AS n, SUM(b) AS s FROM expiring_s3")
-    plan = str(df.execution_plan())
-    assert "X-Amz-Signature" not in plan and "X-Amz-Credential" not in plan
-    row = df.collect()[0].to_pydict()
-    assert row["n"] == [100] and row["s"] == [sum(2 * i for i in range(100))]
-
-    # past the refresh point (expiry 2s -> margin 1s), sql() re-presigns:
-    # the stored metadata's refresh_at must ADVANCE and the query answer
-    first_refresh_at = ctx._presigned["expiring_s3"]["refresh_at"]
-    time.sleep(1.2)
-    row = ctx.sql(
-        "SELECT COUNT(*) AS n FROM expiring_s3"
-    ).collect()[0].to_pydict()
-    assert row["n"] == [100]
-    assert ctx._presigned["expiring_s3"]["refresh_at"] > first_refresh_at
-    assert ctx.tables()["expiring_s3"] == "s3://graft/csv/expiring.csv"
+    assert ctx.tables()["hygiene_s3"] == path
+    df = ctx.sql(f"SELECT {query} FROM hygiene_s3")
+    for plan in (df.logical_plan(), df.optimized_logical_plan(),
+                 df.execution_plan()):
+        for leak in (key_id, secret, "X-Amz-Signature", "X-Amz-Credential"):
+            assert leak not in str(plan)
+    assert df.collect()[0].to_pydict() == want
 
 
 def test_range_split_protocol_large_listing(s3_endpoint, bucket):
