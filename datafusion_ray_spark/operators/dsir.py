@@ -165,20 +165,3 @@ def dsir_select_approx(raw: DataFrame, target: DataFrame, frac: float,
     w = dsir_logweights(raw, target, text_col, n_buckets)
     [threshold] = w.approxQuantile("logw_nats", [1.0 - frac], rel_err)
     return w.where(F.col("logw_nats") >= threshold)
-
-
-def frozen_ratio(raw: DataFrame, target: DataFrame, text_col: str = "text",
-                 n_buckets: int = DSIR_BUCKETS) -> dict[int, int]:
-    """Fit the DSIR log-ratio table and freeze it as a plain dict
-    (≤ ``n_buckets`` integer entries — driver-sized by construction).
-
-    The frozen artifact is what a deployment ships to scorers: batch
-    re-scoring, the streaming scorer (``streaming.structured
-    .dsir_score_stream``), or an external service all read the same table.
-    """
-    tbl = _log_ratio_table(
-        _bucket_counts(hashed_features(target, text_col, n_buckets)),
-        _bucket_counts(hashed_features(raw, text_col, n_buckets)),
-        n_buckets,
-    )
-    return {int(r["bucket"]): int(r["llr"]) for r in tbl.collect()}

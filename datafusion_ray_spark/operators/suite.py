@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table, narrow, spread
-from . import dedup, packing, text
+from . import dedup, eventops, packing, text
 from .dedup import JACCARD_THRESHOLD
 from .oracles import (
     _hyperplane_values_sql,
@@ -1598,37 +1598,27 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def run_ev_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming import windows as W
-
-    return W.tumbling_agg(_events(spark, sf_dir)).orderBy("bucket_start", "event_type")
+    return eventops.tumbling_agg(_events(spark, sf_dir)).orderBy("bucket_start", "event_type")
 
 
 def run_resample_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming import windows as W
-
-    return W.resample_fill(_events(spark, sf_dir)).orderBy(
+    return eventops.resample_fill(_events(spark, sf_dir)).orderBy(
         "bucket_start", "event_type"
     )
 
 
 def run_ev_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming import windows as W
-
-    return W.sliding_agg(_events(spark, sf_dir)).orderBy("bucket_start")
+    return eventops.sliding_agg(_events(spark, sf_dir)).orderBy("bucket_start")
 
 
 def run_ev_session(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming import windows as W
-
     # unordered: per-session output scales with the corpus and the child
     # is a two-pass window pipeline (SCALE.md round-6 cosmetic-sort rule)
-    return W.session_agg(_events(spark, sf_dir))
+    return eventops.session_agg(_events(spark, sf_dir))
 
 
 def run_ev_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming import windows as W
-
-    return W.daily_type_pivot(_events(spark, sf_dir)).orderBy("day")
+    return eventops.daily_type_pivot(_events(spark, sf_dir)).orderBy("day")
 
 
 MM_META_ORACLE = """
@@ -1857,7 +1847,6 @@ def run_emb_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def extension_entries():
-    from ..streaming import windows as W
     from ..queries.registry import SuiteEntry
 
     return [
@@ -1896,13 +1885,13 @@ def extension_entries():
                    "similarity: IVF coarse-quantized ANN top-k (nprobe cells)"),
         SuiteEntry("dedup_embedding_cosine", run_emb_neardup, neardup_oracle(),
                    "embedding-cosine near-dup pairs within label blocks"),
-        SuiteEntry("ev_tumbling_window", run_ev_tumbling, W.TUMBLING_ORACLE,
+        SuiteEntry("ev_tumbling_window", run_ev_tumbling, eventops.TUMBLING_ORACLE,
                    "tumbling 1h window: count + sum per event_type"),
-        SuiteEntry("ev_sliding_window", run_ev_sliding, W.SLIDING_ORACLE,
+        SuiteEntry("ev_sliding_window", run_ev_sliding, eventops.SLIDING_ORACLE,
                    "sliding 1h/15m window counts"),
-        SuiteEntry("ev_session_window", run_ev_session, W.SESSION_ORACLE,
+        SuiteEntry("ev_session_window", run_ev_session, eventops.SESSION_ORACLE,
                    "session windows (30m gap) per user"),
-        SuiteEntry("ev_daily_pivot", run_ev_pivot, W.PIVOT_ORACLE,
+        SuiteEntry("ev_daily_pivot", run_ev_pivot, eventops.PIVOT_ORACLE,
                    "daily event-type pivot matrix"),
         SuiteEntry("mm_meta_stats", run_mm_meta, MM_META_ORACLE,
                    "multimodal: metadata-only agg (payload pruned from scan)"),
@@ -1969,7 +1958,7 @@ def extension_entries():
                    ppl_bucket_oracle(),
                    "CCNet-style perplexity-stratified seeded sampling "
                    "(head/middle/tail fluency buckets)"),
-        SuiteEntry("ev_resample_fill", run_resample_fill, W.RESAMPLE_ORACLE,
+        SuiteEntry("ev_resample_fill", run_resample_fill, eventops.RESAMPLE_ORACLE,
                    "gap-filled hourly resample: dense time spine x type "
                    "grid, zero rows for empty buckets"),
         SuiteEntry("sim_ann_pq", run_ann_pq, pq_oracle(),

@@ -444,8 +444,8 @@ ANOMALY_Z = 2.0
 def anomaly_zscore(c: Column, n: Column, s: Column, q: Column) -> Column:
     """Exact-integer seasonal z-score: with n samples, S = Σc, Q = Σc²,
     z = (c·n − S) / sqrt(n·Q − S²) — one sqrt and one division in double,
-    rounded to 6dp; 0.0 for a constant series. Shared by the batch query
-    and the streaming twin so both score bit-identically."""
+    rounded to 6dp; 0.0 for a constant series. Integer inputs keep the
+    score bit-identical to the DuckDB oracle's."""
     num = n * q - s * s
     return F.when(num == 0, F.lit(0.0)).otherwise(
         F.round((c * n - s).cast("double") / F.sqrt(num.cast("double")), 6)
@@ -454,8 +454,8 @@ def anomaly_zscore(c: Column, n: Column, s: Column, q: Column) -> Column:
 
 def anomaly_cells(ev: DataFrame) -> DataFrame:
     """Dense (event_type, day, hour) count cells with per-(type, hour)
-    baseline stats (n, s, q) and z_score attached — shared core of
-    :func:`run_ev_anomaly` and the streaming-twin test."""
+    baseline stats (n, s, q) and z_score attached — the core of
+    :func:`run_ev_anomaly`."""
     spark = ev.sparkSession
     bounds = ev.agg(
         F.min(F.to_date("ts")).alias("d0"), F.max(F.to_date("ts")).alias("d1")
@@ -487,19 +487,6 @@ def anomaly_cells(ev: DataFrame) -> DataFrame:
         "z_score",
         anomaly_zscore(F.col("c"), F.col("n"), F.col("s"), F.col("q")),
     )
-
-
-def anomaly_baseline(ev: DataFrame) -> list[tuple]:
-    """FROZEN per-(event_type, hour-of-day) baseline for the streaming
-    twin: [(event_type, hour, n, s, q)] — at most |types|·24 rows on the
-    driver (fit once in batch over the dense grid, score forever)."""
-    return [
-        (r["event_type"], r["hour"], r["n"], r["s"], r["q"])
-        for r in anomaly_cells(ev)
-        .select("event_type", "hour", "n", "s", "q")
-        .distinct()
-        .collect()
-    ]
 
 
 def run_ev_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:

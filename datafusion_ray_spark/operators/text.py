@@ -651,50 +651,6 @@ def ppl_bucket_sample_approx(
     )
 
 
-def frozen_lm(df: DataFrame, text_col: str = "text",
-              vocab_cap: int = 50_000) -> tuple[dict[str, int], int]:
-    """Fit the unigram LM of :func:`lm_score` and freeze it as
-    (word -> integer nano-nat log-prob, oov log-prob) — the deployable
-    scoring artifact (≤ ``vocab_cap`` entries, driver-sized by the same
-    cap that keeps the broadcast table bounded). Batch re-scoring, the
-    streaming scorer (``streaming.structured.lm_score_stream``), or an
-    external service all read the same table."""
-    words = df.select(F.explode(tokens(text_col)).alias("word"))
-    wc = (
-        words.groupBy("word")
-        .agg(F.count("*").alias("c"))
-        .orderBy(F.desc("c"), F.asc("word"))
-        .limit(vocab_cap)
-    )
-    totals = wc.agg(F.sum("c").alias("total"), F.count("*").alias("v"))
-    denom = F.col("total") + F.col("v") + 1
-    # One action fits the whole artifact: llr_oov is a scalar of `totals`,
-    # so carrying it as a constant column on the broadcast-joined prob rows
-    # collects vocab AND oov in a single corpus pass — the old separate
-    # .first() re-ran the tokenize+count pipeline end to end (r11, guide
-    # §1.2 "don't compute things twice").
-    rows = (
-        wc.crossJoin(F.broadcast(totals))
-        .select(
-            "word",
-            F.round(F.log((F.col("c") + 1) / denom) * LM_SCALE)
-            .cast("long")
-            .alias("llr"),
-            F.round(F.log(1.0 / denom) * LM_SCALE).cast("long").alias("llr_oov"),
-        )
-        .collect()
-    )
-    if not rows:  # empty corpus: fall back to the scalar-only pass
-        oov_row = totals.select(
-            F.round(F.log(1.0 / denom) * LM_SCALE).cast("long").alias("llr_oov")
-        ).first()
-        return {}, int(oov_row["llr_oov"])
-    return (
-        {r["word"]: int(r["llr"]) for r in rows},
-        int(rows[0]["llr_oov"]),
-    )
-
-
 HASH_EMBED_DIM = 64
 
 

@@ -397,8 +397,7 @@ def load_manifest(root: str, version: int | None = None,
 
 def _commit(store, *, op: str, parent_manifest: dict | None,
             partition_col: str, objects: list[dict],
-            extra_meta: dict | None = None, token: object = None,
-            schema_json: str | None = None,
+            token: object = None, schema_json: str | None = None,
             sort_by: list[str] | None = None,
             row_group_rows: int | None = None) -> dict:
     parent_version = parent_manifest["version"] if parent_manifest else None
@@ -408,8 +407,7 @@ def _commit(store, *, op: str, parent_manifest: dict | None,
     # overwrite the other's — only the pointer CAS decides which one
     # becomes v<N>, and the loser's file is unreferenced garbage for GC.
     name = f"{_vname(version)}-{uuid.uuid4().hex[:8]}"
-    manifest = dict(extra_meta or {})  # protocol keys always win below
-    manifest.update(
+    manifest = dict(
         version=version,
         name=name,
         parent=parent_version,
@@ -433,18 +431,6 @@ def _commit(store, *, op: str, parent_manifest: dict | None,
     )
     store.put_text_if(_POINTER, name + "\n", token)
     return manifest
-
-
-def _merge_streams(parent_manifest: dict, extra_meta: dict | None) -> dict | None:
-    """The commit's ``streams`` record: parent's per-app map merged with
-    this commit's entry. One slot per stream app — a second stream (or a
-    manual append) must never erase another app's replay protection."""
-    merged = dict(parent_manifest.get("streams") or {})
-    extra = dict(extra_meta or {})
-    merged.update(extra.pop("streams", None) or {})
-    if merged:
-        extra["streams"] = merged
-    return extra or None
 
 
 def _strip_nullability(node):
@@ -618,7 +604,6 @@ def write_index(
     mode: str = "overwrite",
     opts: dict | None = None,
     target_object_bytes: int = DEFAULT_TARGET_OBJECT_BYTES,
-    extra_meta: dict | None = None,
     pre_commit_hook=None,
     sort_by: list[str] | None = None,
     row_group_rows: int | None = None,
@@ -645,12 +630,6 @@ def write_index(
     how a pipeline re-embeds a subset of cells, applies a per-partition
     TTL, or backfills one day without rewriting the corpus. All three
     modes are one atomic commit.
-
-    ``extra_meta`` rides into the manifest (protocol keys win). Its
-    ``streams`` key is special: a ``{app_id: batch_id}`` idempotence
-    record (the Delta ``txn`` pattern) that MERGES with the parent's map
-    on every commit — one slot per stream app, so two streams ingesting
-    into one index never erase each other's replay protection.
 
     Concurrency: the commit is a pointer compare-and-swap against the
     head resolved here. If another writer commits in between, the data
@@ -680,7 +659,6 @@ def write_index(
         pre_commit_hook(head)
     for _attempt in range(_COMMIT_RETRIES):
         objects = new_objects
-        meta = extra_meta
         # The manifest records the index's clustering SPEC (what appends
         # and compactions apply), re-derived from the head on every
         # attempt: a fresh-root append that loses its CAS race to a
@@ -701,12 +679,11 @@ def write_index(
                 batch_parts = {o["part"] for o in new_objects}
                 kept = [o for o in kept if o["part"] not in batch_parts]
             objects = kept + new_objects
-            meta = _merge_streams(head, extra_meta)
         try:
             return _commit(
                 store, op=mode, parent_manifest=head,
                 partition_col=partition_col, objects=objects,
-                extra_meta=meta, token=token, schema_json=schema_json,
+                token=token, schema_json=schema_json,
                 sort_by=manifest_sort, row_group_rows=manifest_rgr,
             )
         except CommitConflictError:
@@ -794,7 +771,6 @@ def compact_index(
     root: str,
     opts: dict | None = None,
     target_object_bytes: int = DEFAULT_TARGET_OBJECT_BYTES,
-    extra_meta: dict | None = None,
 ) -> dict:
     """Rewrite the live version to ~one object per partition value and
     commit the result as a NEW version — the object-store twin of
@@ -824,12 +800,9 @@ def compact_index(
             f"{live['rows']} -> {rows_new}; keeping {_vname(live['version'])}"
             " live (new objects left for gc_index)"
         )
-    # carry forward the per-app idempotence records (a compaction must
-    # not make any stream's last ingest batch look un-landed)
     return _commit(
         store, op="compact", parent_manifest=live,
-        partition_col=live["partition_col"], objects=objects,
-        extra_meta=_merge_streams(live, extra_meta), token=token,
+        partition_col=live["partition_col"], objects=objects, token=token,
         schema_json=live.get("schema") or snapshot.schema.json(),
         sort_by=live.get("sort_by"),
         row_group_rows=live.get("row_group_rows"),

@@ -65,8 +65,7 @@ def epoch_us(df: DataFrame, col: str = "ts") -> F.Column:
 def ts_to_utc(df: DataFrame, col: str = "ts") -> DataFrame:
     """Normalize a timestamp column to the engine-canonical TIMESTAMP type
     (instant = stored wall-clock interpreted as UTC).  No-op when already
-    TIMESTAMP; works identically on batch and streaming DataFrames (pure
-    projection)."""
+    TIMESTAMP; otherwise a pure projection."""
     dtype = dict(df.dtypes).get(col)
     if dtype in ("bigint", "timestamp_ntz"):
         return df.withColumn(col, F.timestamp_micros(epoch_us(df, col)))

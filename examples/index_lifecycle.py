@@ -1,14 +1,12 @@
-"""Persisted-index LIFECYCLE: build -> append -> stream-ingest -> compact
--> probe, for both index families (bucketed LSH dedup index and
-cell-partitioned IVF vector index).
+"""Persisted-index LIFECYCLE: build -> append -> compact -> probe, for both
+index families (bucketed LSH dedup index and cell-partitioned IVF vector
+index).
 
 This is the shape a production 100 TB corpus runs nightly:
 
 - BUILD once at snapshot time (pay the corpus shuffle exactly once);
 - APPEND each ingest batch at O(batch) cost — new files only, existing
   files byte-untouched, co-partitioning/pruning preserved;
-- (or let Structured Streaming do the appends at trigger cadence with
-  `compact_every_n_triggers` handling maintenance in-stream);
 - COMPACT when fragmentation accumulates — generation-then-swap: the new
   generation is written and verified at a versioned sibling location,
   committed atomically (ALTER TABLE SET LOCATION / ordered rename), and

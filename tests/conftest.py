@@ -1,7 +1,6 @@
 from __future__ import annotations
 
 import os
-import shutil
 
 import duckdb
 import pytest
@@ -31,25 +30,3 @@ def oracle():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
-
-
-@pytest.fixture(scope="session")
-def events_dir(sf_dir, tmp_path_factory):
-    # readStream wants a directory; stage the single parquet file into one.
-    d = tmp_path_factory.mktemp("events_stream")
-    shutil.copy(f"{sf_dir}/events.parquet", d / "part-0.parquet")
-    return str(d)
-
-
-@pytest.fixture(scope="session")
-def docs_dir(sf_dir, tmp_path_factory):
-    d = tmp_path_factory.mktemp("docs_stream")
-    shutil.copy(f"{sf_dir}/documents.parquet", d / "part-0.parquet")
-    return str(d)
-
-
-@pytest.fixture(scope="session")
-def emb_dir(sf_dir, tmp_path_factory):
-    d = tmp_path_factory.mktemp("emb_stream")
-    shutil.copy(f"{sf_dir}/embeddings.parquet", d / "part-0.parquet")
-    return str(d)

@@ -1,19 +1,21 @@
 """Driver contract: ``__spark_entry__.py`` loaded by path, the way an
-external driver loads it, exposes the whole registry with TPC-H first."""
+external driver loads it, exposes the whole registry with TPC-H first, and
+the engine has no Structured Streaming surface (a non-goal: the reference
+has no streaming semantics)."""
 
 from __future__ import annotations
 
 import importlib.util
 import os
+import pathlib
+import re
 
 import pytest
 
 from datafusion_ray_spark.queries.registry import build_registry
 
-_ENTRY_PATH = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "__spark_entry__.py",
-)
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_ENTRY_PATH = os.path.join(_REPO, "__spark_entry__.py")
 
 
 @pytest.fixture(scope="module")
@@ -37,3 +39,15 @@ def test_oracle_sql_names_are_queries(contract):
 
 def test_entry_returns_rows(contract, spark):
     assert contract.entry(spark).count() > 0
+
+
+def test_no_structured_streaming_surface():
+    assert importlib.util.find_spec("datafusion_ray_spark.streaming") is None
+    streaming = re.compile(r"readStream|writeStream|pyspark\.sql\.streaming")
+    hits = [
+        str(path)
+        for top in ("datafusion_ray_spark", "examples")
+        for path in pathlib.Path(_REPO, top).rglob("*.py")
+        if streaming.search(path.read_text(encoding="utf-8"))
+    ]
+    assert hits == []

@@ -16,7 +16,6 @@ SCRIPTS = [
     "basic.py",
     "ann_search.py",
     "dedup_pipeline.py",
-    "streaming_ingest.py",
     "llm_pipeline.py",
     "behavior_analytics.py",
     "partitioned_tables.py",

@@ -1,4 +1,5 @@
-"""UDF library registration + stateful streaming operator."""
+"""SQL function library: the registered UDFs (`functions/__init__.py`) and
+the UDTFs (`functions/udtfs.py`)."""
 
 from __future__ import annotations
 
@@ -44,43 +45,6 @@ def test_udf_matches_jvm_cosine(spark, sf_dir):
         .collect()
     }
     assert fast == slow
-
-
-def test_stateful_user_counts_matches_batch(spark, sf_dir, events_dir):
-    from datafusion_ray_spark.streaming.structured import (
-        run_to_memory,
-        stateful_user_counts_stream,
-        stream_events,
-    )
-
-    stream = stream_events(spark, events_dir)
-    run_to_memory(
-        stateful_user_counts_stream(stream), "user_counts", output_mode="update"
-    )
-    # update-mode may emit one row per user per micro-batch; the final
-    # (largest-n) row per user is the converged state.
-    got = {
-        r["user_id"]: (r["n_events"], r["total_value"])
-        for r in spark.sql(
-            """
-            SELECT user_id, n_events, total_value
-            FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id
-                    ORDER BY n_events DESC) AS rn FROM user_counts)
-            WHERE rn = 1
-            """
-        ).collect()
-    }
-    batch = {
-        r["user_id"]: (r["n"], r["tot"])
-        for r in load_table(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .agg(
-            F.count("*").alias("n"),
-            (F.sum(F.round(F.col("value") * 100).cast("long")) / 100.0).alias("tot"),
-        )
-        .collect()
-    }
-    assert got == batch
 
 
 def test_udtf_chunking_matches_sql_twin(spark, sf_dir):

@@ -358,48 +358,7 @@ def test_s3_ivf_probed_search_matches_in_plan(spark, sf_dir, s3_opts):
 
 
 # ---------------------------------------------------------------------------
-# Streaming ingest (exactly-once commits) and the facade surface
-
-
-def test_streaming_ingest_exactly_once(spark, tmp_path):
-    """Each trigger is one atomic commit; with app_id set, the manifest's
-    per-app streams record makes replays no-ops — a
-    full re-run of the stream against the same index changes nothing."""
-    from datafusion_ray_spark.streaming import structured
-
-    src = str(tmp_path / "src")
-    for lo, hi in ((0, 40), (40, 70), (70, 100)):
-        _toy(spark, lo, hi).coalesce(1).write.mode("append").parquet(src)
-    root = str(tmp_path / "idx")
-
-    def drain(ckpt: str):
-        stream = (
-            spark.readStream.schema(_toy(spark, 0, 1).schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = structured.objectindex_ingest_stream(
-            stream, root, app_id="ingest-a",
-            checkpoint_dir=str(tmp_path / ckpt),
-            compact_every_n_triggers=2, gc_keep=2,
-        )
-        q.awaitTermination()
-
-    drain("ckpt1")
-    live = oi.load_manifest(root)
-    assert live["streams"] == {"ingest-a": 2}  # last of batches 0,1,2
-    # v1 append, v2 append, v3 compact (after batch 1), v4 append
-    assert live["version"] == 4
-    assert _rows(oi.read_index(spark, root)) == _rows(_toy(spark, 0, 100))
-    # compaction carried the idempotence record forward
-    assert oi.load_manifest(root, 3)["op"] == "compact"
-    assert oi.load_manifest(root, 3)["streams"] == {"ingest-a": 1}
-
-    # whole-stream replay (fresh checkpoint, same app): every batch is
-    # detected as already-committed — zero new versions, zero new rows
-    drain("ckpt2")
-    assert oi.current_version(root) == 4
-    assert _rows(oi.read_index(spark, root)) == _rows(_toy(spark, 0, 100))
+# The facade surface
 
 
 def test_facade_register_index_pins_a_snapshot(spark, tmp_path):
@@ -608,22 +567,6 @@ def test_s3_sorted_index_prunes_row_groups_via_pushdown(spark, s3_opts):
         f"sorted row groups should mostly refute id>=35000: "
         f"{n_pruned}/{n_full} planned"
     )
-
-
-def test_streams_map_merges_across_apps_and_maintenance(spark, tmp_path):
-    """One idempotence slot PER stream app: another app's commit, a
-    manual append, and a compaction must all preserve every app's
-    replay-protection record."""
-    root = str(tmp_path / "idx")
-    oi.write_index(_toy(spark, 0, 30), root, extra_meta={"streams": {"a": 1}})
-    oi.write_index(_toy(spark, 30, 40), root, mode="append")  # manual
-    oi.write_index(
-        _toy(spark, 40, 50), root, mode="append",
-        extra_meta={"streams": {"b": 7}},  # a second stream app
-    )
-    assert oi.load_manifest(root)["streams"] == {"a": 1, "b": 7}
-    oi.compact_index(spark, root)
-    assert oi.load_manifest(root)["streams"] == {"a": 1, "b": 7}
 
 
 def test_gc_default_grace_shields_inflight_and_refuses_corruption(spark, tmp_path):

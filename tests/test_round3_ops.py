@@ -258,43 +258,6 @@ def test_pagerank_mass_and_bounds(spark, sf_dir):
     assert (dist.node == fast.node).all()
 
 
-# ---------------------------------------------------------------------------
-# streaming EWMA twin
-
-
-def test_streaming_ewma_matches_reference_recursion(spark, sf_dir, events_dir):
-    from datafusion_ray_spark.sources.tables import load_table
-    from datafusion_ray_spark.streaming import structured
-
-    stream = structured.stream_events(spark, events_dir).where(
-        "event_type = 'purchase'"
-    )
-    structured.run_to_memory(
-        structured.ewma_stream(stream), "stream_ewma", output_mode="update"
-    )
-    got = {
-        r["user_id"]: (r["n_seen"], r["ewma"])
-        for r in spark.sql("SELECT * FROM stream_ewma").collect()
-    }
-    # reference: the same integer recursion folded per user in plain Python
-    rows = (
-        load_table(spark, sf_dir, "events")
-        .where("event_type = 'purchase'")
-        .select("user_id", "ts", "event_id", "value")
-        .orderBy("user_id", "ts", "event_id")
-        .collect()
-    )
-    ref: dict[int, tuple[int, int]] = {}
-    for r in rows:
-        n, e = ref.get(r["user_id"], (0, 0))
-        v_us = int(r["value"] * 1_000_000)
-        e = v_us if n == 0 else (1 * v_us + 3 * e) // 4
-        ref[r["user_id"]] = (n + 1, e)
-    assert set(got) == set(ref)
-    for uid, (n, e_us) in ref.items():
-        assert got[uid] == (n, e_us / 1_000_000.0)
-
-
 def test_sq8_rerank_converges_to_exact_with_wide_candidates(spark, sf_dir):
     from datafusion_ray_spark.operators import similarity
     from datafusion_ray_spark.sources.tables import load_table
@@ -309,35 +272,6 @@ def test_sq8_rerank_converges_to_exact_with_wide_candidates(spark, sf_dir):
     exact = similarity.cosine_topk(emb, qv, k=5, exclude_vec_id=0).toPandas()
     assert list(wide.vec_id) == list(exact.vec_id)
     assert list(wide.cosine) == list(exact.cosine)
-
-
-# ---------------------------------------------------------------------------
-# streaming rolling-median twin
-
-
-def test_streaming_rolling_median_matches_batch(spark, sf_dir, events_dir):
-    from datafusion_ray_spark.operators.suite3 import rolling_median_x2
-    from datafusion_ray_spark.sources.tables import load_table
-    from datafusion_ray_spark.streaming import structured
-
-    stream = structured.stream_events(spark, events_dir).where(
-        "event_type = 'purchase'"
-    )
-    structured.run_to_memory(
-        structured.rolling_median_stream(stream), "stream_roll_med",
-        output_mode="append",
-    )
-    got = {
-        r["event_id"]: r["med_x2_us"]
-        for r in spark.sql("SELECT * FROM stream_roll_med").collect()
-    }
-    batch = {
-        r["event_id"]: r["med_x2_us"]
-        for r in rolling_median_x2(
-            load_table(spark, sf_dir, "events").where("event_type = 'purchase'")
-        ).select("event_id", "med_x2_us").collect()
-    }
-    assert got == batch
 
 
 def test_compact_files_preserves_data(spark, sf_dir, tmp_path):

@@ -389,7 +389,7 @@ def test_sessionize_agrees_with_session_window_counts(spark, sf_dir):
     windows the aggregate operator emits."""
     from datafusion_ray_spark.operators.suite4 import run_sessionize
     from datafusion_ray_spark.sources.tables import load_table
-    from datafusion_ray_spark.streaming.windows import session_agg
+    from datafusion_ray_spark.operators.eventops import session_agg
 
     labels = (
         run_sessionize(spark, sf_dir)
