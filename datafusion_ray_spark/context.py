@@ -228,31 +228,13 @@ class DFRayDataFrame:
         (AdaptiveSparkPlanExec, Shuffle/BroadcastQueryStageExec) are
         descended through so the FINAL runtime plan's metrics are reported.
         """
-        out: dict[str, dict[str, int]] = {}
+        from .plans import executed_nodes, node_metrics
 
-        def walk(node) -> None:
-            # AQE / query-stage wrappers expose the materialized subtree
-            # behind accessor methods rather than children().
-            for accessor in ("executedPlan", "plan"):
-                try:
-                    walk(getattr(node, accessor)())
-                except Exception:  # noqa: BLE001 - absent on plain nodes
-                    pass
-            vals: dict[str, int] = {}
-            try:
-                it = node.metrics().iterator()
-                while it.hasNext():
-                    kv = it.next()
-                    vals[kv._1()] = int(kv._2().value())
-            except Exception:  # noqa: BLE001 - metric-less node
-                pass
+        out: dict[str, dict[str, int]] = {}
+        for node in executed_nodes(self.df):
+            vals = node_metrics(node)
             if vals:
                 out[f"{node.nodeName()}#{node.id()}"] = vals
-            ch = node.children().iterator()
-            while ch.hasNext():
-                walk(ch.next())
-
-        walk(self.df._jdf.queryExecution().executedPlan())
         return out
 
 
@@ -312,7 +294,8 @@ class DFRayContext:
            (the production path — IAM, multipart, committers);
         2. the DISTRIBUTED pure-Python source otherwise
            (``sources/s3store.py``: boto3 Range GETs, one input partition
-           per ~128 MB of row groups, Arrow-batch reads on executors) —
+           per ~128 MB byte range of each object, Arrow-batch reads on
+           executors) —
            so a jar-less environment still scans S3 in parallel instead
            of failing. e2e-tested against a live moto S3 endpoint.
 
@@ -327,9 +310,10 @@ class DFRayContext:
         become a ``select``/``where`` Catalyst pushes into the scan; on
         the boto3 tier the source itself reads only the projected columns'
         byte ranges and drops row groups whose footer min/max stats refute
-        the filters (driver-side, zero extra round trips), with the same
-        ``where`` applied above for exact semantics. Both tiers return
-        identical rows — the options only change the bytes transferred.
+        the filters (task-side, from the footer each task reads), with
+        the same ``where`` applied above for exact semantics. Both tiers
+        return identical rows — the options only change the bytes
+        transferred.
         """
         import json
 
@@ -380,49 +364,20 @@ class DFRayContext:
         path = self._normalize_path(path)
         if path.startswith(("http://", "https://")):
             # Reference parity: its http object store serves parquet scans
-            # too (src/util.rs:523-580). The distributed ranged source
-            # needs Range support; servers without it degrade to a
-            # driver spool of the objects.
-            from .sources.httpparquet import (
-                RANGE_UNSUPPORTED_TOKEN,
-                HTTPParquetDataSource,
-                RangeUnsupportedError,
-                _HTTPStore,
-            )
+            # too (src/util.rs:523-580). A server without Range support
+            # answers each task's first GET with the whole object, which
+            # that task then reads from memory.
+            from .sources.httpparquet import HTTPParquetDataSource
 
             src = (
                 {"urls": json.dumps(url_list)} if url_list is not None
                 else {"manifest": manifest} if manifest
                 else {"url": raw}
             )
-            try:
-                df = self._ranged_parquet(
-                    HTTPParquetDataSource, src, columns, filters, options
-                )
-                self._register(name, df, raw)
-                return
-            except Exception as exc:
-                # Spool to the driver ONLY when the server cannot serve
-                # partial reads (no Range support / opaque size) — the one
-                # failure the fallback exists for. Everything else (corrupt
-                # footer, 403/404 after the probe, bad filter JSON) must
-                # surface as-is: silently downloading a broken or
-                # forbidden object to the driver masks the real cause.
-                # Detection is the source's RangeUnsupportedError contract:
-                # the type when the raise is driver-side, its sentinel
-                # token when Spark's worker boundary has flattened the
-                # exception to message text.
-                range_unsupported = isinstance(
-                    exc, RangeUnsupportedError
-                ) or RANGE_UNSUPPORTED_TOKEN in f"{exc}"
-                if not range_unsupported:
-                    raise
-                logger.info(
-                    "server lacks Range support; driver-spool fallback"
-                )
-            local = [self._fetch_url(u) for u, _ in _HTTPStore(src).entries()]
-            df = self.spark.read.parquet(*local)
-            self._register(name, _shape(df, columns, filters), raw)
+            df = self._ranged_parquet(
+                HTTPParquetDataSource, src, columns, filters, options
+            )
+            self._register(name, df, raw)
             return
         if path.startswith(("s3a://", "gs://")):
             try:
@@ -539,28 +494,6 @@ class DFRayContext:
         opts = {"header": "true", "inferSchema": "true"}
         opts.update({k: str(v) for k, v in options.items()})
         self._register(name, self.spark.read.options(**opts).csv(path), path)
-
-    @staticmethod
-    def _fetch_url(url: str, timeout: float = 60.0) -> str:
-        import atexit
-        import os
-        import tempfile
-        import urllib.request
-
-        # Suffix from the PATH component only: a presigned URL's query
-        # string holds the signature (a bearer credential that must not
-        # become a /tmp filename) and is long enough to ENAMETOOLONG the
-        # temp file outright.
-        path_part = url.partition("?")[0]
-        tail = path_part.rsplit("/", 1)[-1]
-        suffix = "." + tail.rsplit(".", 1)[-1] if "." in tail else ""
-        with urllib.request.urlopen(url, timeout=timeout) as resp:  # noqa: S310 - user-supplied source
-            with tempfile.NamedTemporaryFile(delete=False, suffix=suffix) as out:
-                out.write(resp.read())
-        # Spool files must outlive registration (Spark re-reads lazily) but
-        # not the process: clean up at interpreter exit.
-        atexit.register(lambda p=out.name: os.path.exists(p) and os.unlink(p))
-        return out.name
 
     def register_json(self, name: str, path: str, **options: Any) -> None:
         self._register(name, self.spark.read.options(**options).json(path), path)

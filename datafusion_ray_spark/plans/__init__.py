@@ -88,6 +88,50 @@ def uses_python_workers(df: DataFrame) -> bool:
     )
 
 
+def executed_nodes(df: DataFrame) -> list:
+    """Every node of the EXECUTED plan (JVM ``SparkPlan`` objects), each
+    once. AQE / query-stage wrappers (AdaptiveSparkPlanExec,
+    Shuffle/BroadcastQueryStageExec) expose the materialized subtree
+    behind accessor methods rather than ``children()``, so the walk
+    descends through those too and reports the FINAL runtime plan; a node
+    reachable through two accessors is listed once. Order: a wrapper's
+    subtree, then the node, then its children."""
+    out: list = []
+    seen: set[int] = set()
+
+    def walk(node) -> None:
+        ident = node.id()
+        if ident in seen:
+            return
+        seen.add(ident)
+        for accessor in ("executedPlan", "plan"):
+            try:
+                walk(getattr(node, accessor)())
+            except Exception:  # noqa: BLE001 - absent on plain nodes
+                pass
+        out.append(node)
+        ch = node.children().iterator()
+        while ch.hasNext():
+            walk(ch.next())
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return out
+
+
+def node_metrics(node) -> dict[str, int]:
+    """A plan node's SQLMetrics as ``{name: value}`` (empty when it has
+    none)."""
+    vals: dict[str, int] = {}
+    try:
+        it = node.metrics().iterator()
+        while it.hasNext():
+            kv = it.next()
+            vals[kv._1()] = int(kv._2().value())
+    except Exception:  # noqa: BLE001 - metric-less node
+        pass
+    return vals
+
+
 def runtime_shuffle_metrics(df: DataFrame) -> dict[str, int]:
     """Aggregate runtime shuffle/plan-shape metrics from the EXECUTED plan.
 
@@ -105,13 +149,7 @@ def runtime_shuffle_metrics(df: DataFrame) -> dict[str, int]:
     """
     agg = {"shuffle_bytes": 0, "shuffle_rows": 0, "n_exchange": 0,
            "n_broadcast": 0, "n_expand": 0, "n_reused_exchange": 0}
-    seen: set[int] = set()
-
-    def walk(node) -> None:
-        ident = node.id()
-        if ident in seen:  # AQE stages can be reachable via two accessors
-            return
-        seen.add(ident)
+    for node in executed_nodes(df):
         name = node.nodeName()
         if "ReusedExchange" in name:
             # A reused exchange shares the original's SQLMetrics object:
@@ -124,29 +162,9 @@ def runtime_shuffle_metrics(df: DataFrame) -> dict[str, int]:
                 agg["n_broadcast"] += 1
             else:
                 agg["n_exchange"] += 1
-                try:
-                    it = node.metrics().iterator()
-                    while it.hasNext():
-                        kv = it.next()
-                        k, v = kv._1(), int(kv._2().value())
-                        if k == "shuffleBytesWritten":
-                            agg["shuffle_bytes"] += v
-                        elif k == "shuffleRecordsWritten":
-                            agg["shuffle_rows"] += v
-                except Exception:  # noqa: BLE001 - metric-less node
-                    pass
+                vals = node_metrics(node)
+                agg["shuffle_bytes"] += vals.get("shuffleBytesWritten", 0)
+                agg["shuffle_rows"] += vals.get("shuffleRecordsWritten", 0)
         elif name.startswith("Expand"):
             agg["n_expand"] += 1
-        # AQE / query-stage wrappers expose the materialized subtree behind
-        # accessor methods rather than children().
-        for accessor in ("executedPlan", "plan"):
-            try:
-                walk(getattr(node, accessor)())
-            except Exception:  # noqa: BLE001 - absent on plain nodes
-                pass
-        ch = node.children().iterator()
-        while ch.hasNext():
-            walk(ch.next())
-
-    walk(df._jdf.queryExecution().executedPlan())
     return agg

@@ -29,8 +29,8 @@ import io
 from pyspark.sql import types as T
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
-from .httpparquet import RangeUnsupportedError, _HTTPStore
-from .s3store import _range_plan, _S3Store
+from .httpparquet import _HTTPStore
+from .s3store import RangeUnsupportedError, _range_plan, _S3Store
 
 #: target bytes per partition (small default so tests exercise >1 split;
 #: production sets option("partition_bytes", 128<<20) or similar).
@@ -69,8 +69,10 @@ class _RangedCsvSource(DataSource):
         ref, _size = store.entries()[0]
         try:
             sample = store.get(ref, 0, _SAMPLE_BYTES - 1)
-        except RangeUnsupportedError:  # no Range support: the whole object
-            sample = store.get(ref, 0, None)[:_SAMPLE_BYTES]
+        except RangeUnsupportedError as exc:  # the whole object came back
+            if exc.body is None:
+                raise
+            sample = exc.body[:_SAMPLE_BYTES]
         # drop the trailing (possibly truncated) line of the sample
         text = sample.decode("utf-8", errors="replace")
         lines = text.split("\n")

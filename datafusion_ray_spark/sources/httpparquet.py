@@ -11,11 +11,12 @@ scan's objects from ``url``, ``urls`` or ``manifest``, one HEAD for size
 and ``Accept-Ranges``, a size probe (HEAD, or a 1-byte Range GET when the
 server hides Content-Length), and the urllib Range GET.
 
-Servers without Range support cannot serve partial reads of a columnar
-file; for parquet the facade degrades to its driver-spool fallback
-(download once, read locally) rather than failing. CSV needs no partial
-read: such a server's object is one whole-object partition, read by an
-executor with an open-ended GET.
+A server without Range support answers a ranged GET with the whole
+object; the store raises :class:`RangeUnsupportedError` carrying that
+body, and the parquet reader's ranged file keeps it and serves the task's
+remaining reads from memory — still on the executor, never a driver
+spool. CSV plans such a server's object as one whole-object partition,
+read by an executor with an open-ended GET.
 """
 
 from __future__ import annotations
@@ -23,6 +24,7 @@ from __future__ import annotations
 import urllib.request
 
 from .s3store import (
+    RangeUnsupportedError,
     _RangedParquetSource,
     _declared_entries,
     _enable_python_filter_pushdown,
@@ -86,25 +88,6 @@ def _manifest_entries(murl: str) -> list[tuple[str, int | None]]:
     return entries
 
 
-#: stable machine-readable token for "this server cannot serve ranged
-#: reads". It is part of the error CONTRACT: the facade's driver-spool
-#: fallback keys on this token (plus the exception type driver-side)
-#: because Spark's Python-worker boundary erases Python exception types —
-#: only message text survives into the PySparkException the driver sees.
-#: Human wording around it may change; the token must not.
-RANGE_UNSUPPORTED_TOKEN = "[RANGE_UNSUPPORTED]"
-
-
-class RangeUnsupportedError(OSError):
-    """The http server cannot serve partial reads (no Range support or an
-    opaque object size) — the ONE failure the facade's driver-spool
-    fallback exists for. The token rides the message so the condition is
-    still detectable after Spark flattens the exception to text."""
-
-    def __init__(self, detail: str):
-        super().__init__(f"{RANGE_UNSUPPORTED_TOKEN} {detail}")
-
-
 class _HTTPStore:
     """The objects of one http(s) scan. Three declaration forms:
 
@@ -158,8 +141,8 @@ class _HTTPStore:
             if "/" in rng:
                 return int(rng.rsplit("/", 1)[1])
             # Range-less server answering 200: its Content-Length IS the
-            # object size (the body is discarded; the ranged reader will
-            # fail loudly on the first real read and the facade spools).
+            # object size (the body is discarded; the reader's first GET
+            # fetches the whole object again and keeps it).
             length = resp.headers.get("Content-Length")
             if resp.status == 200 and length:
                 return int(length)
@@ -170,18 +153,21 @@ class _HTTPStore:
     def get(self, url: str, start: int, end: int | None) -> bytes:
         """Bytes ``[start, end]``; ``end=None`` reads to the end of the
         object, and a 200 carrying the whole object then answers an
-        open range from 0 (a server without Range support)."""
+        open range from 0. A 200 to any other range raises
+        :class:`RangeUnsupportedError` with the whole object as its
+        ``body`` (a server without Range support)."""
         rng = f"bytes={start}-{'' if end is None else end}"
         req = urllib.request.Request(url, headers={"Range": rng})
         with urllib.request.urlopen(req, timeout=self.timeout) as resp:  # noqa: S310
-            whole = resp.status == 200 and start == 0 and end is None
-            if resp.status != 206 and not whole:
-                raise RangeUnsupportedError(
-                    f"server ignored Range request for {redact_url(url)} "
-                    f"(HTTP {resp.status}); ranged reads need "
-                    "Accept-Ranges: bytes"
-                )
-            return resp.read()
+            body = resp.read()
+        if resp.status == 206 or (resp.status == 200 and start == 0
+                                  and end is None):
+            return body
+        raise RangeUnsupportedError(
+            f"server ignored Range request for {redact_url(url)} "
+            f"(HTTP {resp.status})",
+            body if resp.status == 200 else None,
+        )
 
 
 class HTTPParquetDataSource(_RangedParquetSource):

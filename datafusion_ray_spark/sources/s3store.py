@@ -11,38 +11,44 @@ DataSource/reader pair, planner, stats pruner) and the S3 store;
 supplies what differs: ``entries()`` — the scan's objects as
 ``[(ref, size | None)]``, listing a prefix by the format's filename
 suffixes; ``get(ref, start, end)`` — one ranged GET, ``end`` inclusive
-(the http store also takes ``end=None``, the whole object from a server
-without Range support); ``probe_size(ref)``; and ``head(ref)`` —
-``(size | None, serves Range)``.
+(the http store also takes ``end=None``, the whole object; a server
+that answers a ranged GET with the whole object raises
+:class:`RangeUnsupportedError` carrying that body); ``probe_size(ref)``;
+and ``head(ref)`` — ``(size | None, serves Range)``.
 
 The production path for S3 remains Hadoop's ``s3a`` connector (jars +
 IAM); ``DFRayContext.register_parquet("s3://...")`` tries that first and
 falls back here, so a bare-Python environment (boto3 only, no hadoop-aws)
 can still read S3 tables DISTRIBUTED rather than not at all.
 
-How it distributes (the same split Spark's own parquet source makes):
+How it distributes (the split Spark's own parquet source and the
+reference's file-range groups make):
 
-- The PLANNER (driver) resolves the entries. Up to
-  ``footer_planning_max_files`` (default 256) objects, it range-reads
-  each FOOTER (16-way concurrent) and emits one input partition per
-  contiguous run of row groups packed to ``partition_bytes`` (default
-  128 MB) — precise splits and plan-time stats pruning. BEYOND that it
-  switches to the Hadoop split protocol: byte-range partitions from sizes
-  ALONE, and each TASK reads its own footer, claims the row groups whose
-  byte midpoint falls in its range (contiguous ranges tile the file, so
-  exactly-once), and prunes task-side. Unsized entries are probed 16-way
-  on the driver — or, above ``size_probe_max_files`` of them, each
-  becomes one whole-file partition whose task probes its own size.
-- EVERY EXECUTOR opens its own ranged reader over exactly its row groups
-  (pyarrow reads only the byte ranges those row groups cover) and yields
-  ARROW BATCHES — the Python Data Source Arrow fast path.
+- The PLANNER (driver) resolves the entries and cuts every object into
+  byte-range partitions ``(ref, size, start, end)`` of
+  ``partition_bytes`` (default 128 MB) from sizes ALONE — it reads no
+  footer. Sizes ride the S3 listing or a sized declaration; unsized
+  entries are probed 16-way on the driver — or, above
+  ``size_probe_max_files`` of them, each becomes one whole-file
+  partition whose task probes its own size.
+- EVERY TASK reads its object's footer (one cached 64 KiB tail GET),
+  claims the row groups whose byte midpoint falls in its range
+  (contiguous ranges tile the file, so exactly-once), drops those the
+  footer stats refute, and reads the rest through its own ranged reader
+  (pyarrow fetches only the byte ranges those row groups cover), yielding
+  ARROW BATCHES — the Python Data Source Arrow fast path. A range whose
+  row groups are all refuted costs its task one tail GET.
+- A server that ignores Range answers a task's first GET with the whole
+  object; the task keeps that body and serves the rest of its reads
+  from it, so Range-less http objects are still read on the executors.
 
 Schema comes from the first object's footer (parquet is self-describing,
-matching ``spark.read.parquet``); only that object's size is probed.
+matching ``spark.read.parquet``); only that object's size is probed, and
+it is the one footer the driver reads per scan.
 Predicate pushdown is AUTOMATIC: Spark 4.1's ``pushFilters`` API hands
 the reader the conjunctive predicates Catalyst collected above the scan
 (``spark.sql.python.filterPushdown.enabled`` — set by the engine's
-session builder and by the ``register_*`` helpers), and the planner feeds
+session builder and by the ``register_*`` helpers), and each task feeds
 them into the same footer-stats row-group pruner the user-declared
 ``filters`` option uses. Every pushed filter is returned to Spark
 unconsumed (pruning drops provably-empty row groups, it does not evaluate
@@ -55,7 +61,7 @@ The USER-declared options remain for sessions without the pushdown conf
   columns and executors read ONLY their byte ranges (parquet is
   columnar, so unread columns' pages are never transferred);
 - ``filters`` option (JSON list of ``[col, op, value]`` triples, AND-ed;
-  ops ``= == != < <= > >=``): the planner drops row groups whose footer
+  ops ``= == != < <= > >=``): each task drops row groups whose footer
   min/max statistics prove no row can match. Pruning is LOSSLESS and
   conservative (a row group is kept on any doubt); surviving row groups
   may still hold non-matching rows, so ``DFRayContext.register_parquet``
@@ -76,26 +82,14 @@ from functools import partial
 
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
-#: target bytes of row-group content per input partition. 128 MB matches
-#: spark.sql.files.maxPartitionBytes' default, the size the rest of the
-#: engine's memory budgeting assumes.
+#: target bytes per input partition (byte range of an object). 128 MB
+#: matches spark.sql.files.maxPartitionBytes' default, the size the rest
+#: of the engine's memory budgeting assumes.
 DEFAULT_PARTITION_BYTES = 128 << 20
 
 _FOOTER_PROBE = 64 << 10  # tail bytes fetched to parse most footers in one GET
 
-#: listings larger than this switch the planner from footer-based
-#: row-group packing (driver fetches every footer — precise splits and
-#: plan-time stats pruning, but O(files) driver round trips) to the
-#: Hadoop split protocol: byte-range partitions computed from the LISTING
-#: alone (sizes only, zero per-file round trips on the driver); each TASK
-#: reads its own footer and claims the row groups whose byte midpoint
-#: falls inside its range, applying the same stats pruning there. A
-#: 100 TB / 800k-object prefix plans without the driver transferring
-#: ~50 GB of footer tails. Override per-read with the
-#: ``footer_planning_max_files`` option.
-DEFAULT_FOOTER_PLANNING_MAX_FILES = 256
-
-#: split-mode scans with more size-less entries than this stop paying a
+#: scans with more size-less entries than this stop paying a
 #: planner size probe per object: beyond the threshold each unsized entry
 #: becomes ONE whole-file partition whose TASK probes the size itself
 #: (one probe per file, cluster-parallel, overlapped with the read)
@@ -151,6 +145,17 @@ def _split_url(url: str) -> tuple[str, str]:
     return bucket, key
 
 
+class RangeUnsupportedError(OSError):
+    """A store cannot serve a byte range: an http server without Range
+    support, or one that hides the object's size. ``body`` is the whole
+    object when the server answered the ranged GET with it (HTTP 200),
+    else ``None``."""
+
+    def __init__(self, detail: str, body: bytes | None = None):
+        super().__init__(detail)
+        self.body = body
+
+
 class _RangedFile(io.RawIOBase):
     """Minimal seekable read-only file over one object of size ``size``;
     ``get(start, end)`` fetches the inclusive byte range ``[start, end]``
@@ -158,7 +163,9 @@ class _RangedFile(io.RawIOBase):
 
     pyarrow calls read() for exactly the byte ranges the requested row
     groups/footer cover, so the transfer volume is what the scan needs —
-    the object is never downloaded whole.
+    the object is never downloaded whole, unless its server ignores
+    Range: then the first GET's whole-object answer is kept and serves
+    every later read.
     """
 
     def __init__(self, get, size: int):
@@ -166,11 +173,11 @@ class _RangedFile(io.RawIOBase):
         self._pos = 0
         # Footer parsing clusters its reads (magic+length probe, then the
         # footer itself) in the object's tail; one cached tail GET serves
-        # them all, so PLANNING cost is one round trip per object instead
-        # of 2-3 tiny GETs — the cost the driver pays per file when it
-        # plans a large listing.
+        # them all, so a footer costs one round trip instead of 2-3 tiny
+        # GETs.
         self._tail_start = max(0, size - _FOOTER_PROBE)
         self._tail: bytes | None = None
+        self._whole: bytes | None = None
 
     def seekable(self) -> bool:
         return True
@@ -189,6 +196,16 @@ class _RangedFile(io.RawIOBase):
     def tell(self) -> int:
         return self._pos
 
+    def _fetch(self, start: int, end: int) -> bytes:
+        if self._whole is None:
+            try:
+                return self._get(start, end)
+            except RangeUnsupportedError as exc:
+                if exc.body is None:
+                    raise
+                self._whole = exc.body
+        return self._whole[start : end + 1]
+
     def read(self, n: int = -1) -> bytes:
         if n is None or n < 0:
             end = self._size - 1
@@ -198,11 +215,11 @@ class _RangedFile(io.RawIOBase):
             return b""
         if self._pos >= self._tail_start and self._size > 0:
             if self._tail is None:
-                self._tail = self._get(self._tail_start, self._size - 1)
+                self._tail = self._fetch(self._tail_start, self._size - 1)
             off = self._pos - self._tail_start
             data = self._tail[off : end - self._tail_start + 1]
         else:
-            data = self._get(self._pos, end)
+            data = self._fetch(self._pos, end)
         self._pos += len(data)
         return data
 
@@ -389,8 +406,8 @@ def _select_row_groups_for_range(meta, start: int, end: int,
     """TASK-side split resolution (Hadoop protocol): the row groups whose
     byte MIDPOINT falls in [start, end) — contiguous ranges tile the
     file, so every row group lands in exactly one partition — minus the
-    groups the footer stats refute for ``filters`` (same lossless pruning
-    the driver-side planner does, applied where the footer was read)."""
+    groups the footer stats refute for ``filters`` (lossless, see
+    ``_rg_may_match``)."""
     col_idx = _col_index(meta, filters)
     out = []
     for rg in range(meta.num_row_groups):
@@ -406,7 +423,7 @@ def _select_row_groups_for_range(meta, start: int, end: int,
 
 def _range_plan(objects, part_bytes: int):
     """[(ref, size, start, end), ...] — byte-range partitions from the
-    objects' sizes ALONE (no footer reads anywhere on the driver)."""
+    objects' sizes ALONE (no footer reads on the driver)."""
     parts = []
     for key, size in objects:
         start = 0
@@ -414,29 +431,6 @@ def _range_plan(objects, part_bytes: int):
             end = min(start + part_bytes, size)
             parts.append((key, size, start, end))
             start = end
-    return parts
-
-
-def _pack_row_groups(metas, part_bytes: int, filters=()):
-    """Footer-mode plan: pack each object's surviving row groups into
-    contiguous runs of ~``part_bytes``; ``metas`` is ``[(ref, size,
-    parquet FileMetaData), ...]``."""
-    parts = []
-    for key, size, meta in metas:
-        col_idx = _col_index(meta, filters)
-        run: list[int] = []
-        run_bytes = 0
-        for rg in range(meta.num_row_groups):
-            if filters and not _rg_may_match(meta, rg, col_idx, filters):
-                continue
-            rg_bytes = meta.row_group(rg).total_byte_size
-            if run and run_bytes + rg_bytes > part_bytes:
-                parts.append((key, size, run))
-                run, run_bytes = [], 0
-            run.append(rg)
-            run_bytes += rg_bytes
-        if run:
-            parts.append((key, size, run))
     return parts
 
 
@@ -507,14 +501,13 @@ class _ParquetReader(DataSourceReader):
     def pushFilters(self, filters):
         """Catalyst's conjunctive predicates over this scan (Spark 4.1
         Python Data Source pushdown; requires
-        ``spark.sql.python.filterPushdown.enabled``). The planner feeds
-        them into the footer-stats row-group pruner — provably-empty row
-        groups never plan, never transfer. EVERY filter is returned
-        unconsumed: stats pruning cannot evaluate predicates, so Spark
-        must keep exact filtering above the scan (correctness does not
-        depend on the pruning at all)."""
+        ``spark.sql.python.filterPushdown.enabled``). Each task feeds them
+        into the footer-stats row-group pruner — provably-empty row
+        groups never transfer. EVERY filter is returned unconsumed: stats
+        pruning cannot evaluate predicates, so Spark must keep exact
+        filtering above the scan (correctness does not depend on the
+        pruning at all)."""
         self._pushed = _triples_from_pushed(filters)
-        self._parts = None  # pushed predicates invalidate a cached plan
         return filters
 
     def _filters(self) -> list[tuple[str, str, object]]:
@@ -522,33 +515,19 @@ class _ParquetReader(DataSourceReader):
 
     def partitions(self):
         # Cache the plan on the reader: repeated planner calls within one
-        # scan's lifetime must not re-pay the listing (or, in footer
-        # mode, the O(files) footer round trips).
+        # scan's lifetime must not re-pay the listing or the size probes.
         if self._parts is None:
             self._parts = [InputPartition(p) for p in self._plan()]
         return self._parts
 
     def _plan(self) -> list:
-        store, opts = self.store, self.options
+        """Byte ranges from sizes alone (the Hadoop split protocol): zero
+        footer reads on the driver; tasks read their own footers, claim
+        row groups by midpoint and prune."""
+        store = self.store
         entries = store.entries()
-        max_footer_files = int(opts.get(
-            "footer_planning_max_files", DEFAULT_FOOTER_PLANNING_MAX_FILES,
-        ))
-        if len(entries) <= max_footer_files:
-            def footer(entry):
-                ref, size = entry
-                if size is None:
-                    size = store.probe_size(ref)
-                return ref, size, _open(store, ref, size).metadata
-
-            return _pack_row_groups(
-                _pool_map(footer, entries), self.part_bytes, self._filters()
-            )
-        # Hadoop split protocol: byte ranges from sizes alone — zero
-        # footer reads on the driver; tasks read their own footers and
-        # claim row groups by midpoint, pruning task-side.
         unsized = [ref for ref, size in entries if size is None]
-        probe_max = int(opts.get(
+        probe_max = int(self.options.get(
             "size_probe_max_files", DEFAULT_SIZE_PROBE_MAX_FILES,
         ))
         if len(unsized) > probe_max:
@@ -566,26 +545,21 @@ class _ParquetReader(DataSourceReader):
         )
 
     def read(self, partition):
-        # A legitimately EMPTY plan (every row group refuted by the filter
-        # stats) comes back here as a single None partition: pyspark's
-        # plan_data_source_read substitutes [None] when partitions()
-        # returns [] — yield nothing instead of dereferencing it.
+        # An EMPTY plan (only zero-byte objects) comes back here as a
+        # single None partition: pyspark's plan_data_source_read
+        # substitutes [None] when partitions() returns [].
         if partition is None:
             return
         store = self.store
-        if len(partition.value) == 4:  # byte-range split (large listing)
-            ref, size, start, end = partition.value
-            if size is None:  # size-deferred whole-file partition
-                size = end = store.probe_size(ref)
-            pf = _open(store, ref, size)
-            row_groups = _select_row_groups_for_range(
-                pf.metadata, start, end, self._filters(),
-            )
-            if not row_groups:
-                return
-        else:
-            ref, size, row_groups = partition.value
-            pf = _open(store, ref, size)
+        ref, size, start, end = partition.value
+        if size is None:  # size-deferred whole-file partition
+            size = end = store.probe_size(ref)
+        pf = _open(store, ref, size)
+        row_groups = _select_row_groups_for_range(
+            pf.metadata, start, end, self._filters(),
+        )
+        if not row_groups:
+            return
         cols = _parse_columns(self.options)
         # Arrow fast path: yield RecordBatches, never per-row Python.
         # With a projection, pyarrow reads ONLY the requested columns'
@@ -664,7 +638,7 @@ class _S3Store:
 
     @property
     def client(self):
-        with _CLIENT_LOCK:  # the planner's footer pool shares one client
+        with _CLIENT_LOCK:  # the planner's size-probe pool shares one client
             if self._c is None:
                 self._c = _client(self.opts)
         return self._c

@@ -283,39 +283,3 @@ def test_register_parquet_local_pushdown_options(spark, sf_dir):
     )
     got = sum(b.num_rows for b in df.collect())
     assert got == want > 0
-
-
-def test_fetch_url_suffix_ignores_query_string(tmp_path):
-    """Round-10 review fix: the spool temp-file suffix must come from the
-    URL's PATH only — a presigned URL's query string holds the signature
-    (must not become a /tmp filename) and is long enough to
-    ENAMETOOLONG the temp file."""
-    import http.server
-    import threading
-
-    from datafusion_ray_spark.context import DFRayContext
-
-    class H(http.server.BaseHTTPRequestHandler):
-        def log_message(self, *a):
-            pass
-
-        def do_GET(self):
-            body = b"a,b\n1,2\n"
-            self.send_response(200)
-            self.send_header("Content-Length", str(len(body)))
-            self.end_headers()
-            self.wfile.write(body)
-
-    srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), H)
-    threading.Thread(target=srv.serve_forever, daemon=True).start()
-    try:
-        url = (
-            f"http://127.0.0.1:{srv.server_address[1]}/data.csv"
-            "?X-Amz-Algorithm=AWS4-HMAC-SHA256&X-Amz-Credential=AKIA"
-            + "X" * 200 + "&X-Amz-Signature=" + "s" * 64
-        )
-        local = DFRayContext._fetch_url(url)
-        assert local.endswith(".csv")
-        assert "X-Amz" not in local and "Signature" not in local
-    finally:
-        srv.shutdown()

@@ -1,14 +1,13 @@
 """Distributed HTTP CSV source: byte-range partitioning end-to-end against
-a local Range-supporting HTTP server (and the no-Range degradation)."""
+a local Range-supporting HTTP server (the ``range_server`` fixture of
+``conftest.py``), and the no-Range degradation."""
 
 from __future__ import annotations
-
-import http.server
-import threading
 
 import pytest
 
 CSV_HEADER = "id,name,score\n"
+DATA = "/data.csv"
 
 
 def _csv_payload(n: int = 500) -> bytes:
@@ -16,54 +15,15 @@ def _csv_payload(n: int = 500) -> bytes:
     return "".join(rows).encode()
 
 
-class _RangeHandler(http.server.BaseHTTPRequestHandler):
-    payload = _csv_payload()
-    support_ranges = True
-
-    def log_message(self, *a):  # quiet
-        pass
-
-    def do_HEAD(self):
-        self.send_response(200)
-        self.send_header("Content-Length", str(len(self.payload)))
-        if self.support_ranges:
-            self.send_header("Accept-Ranges", "bytes")
-        self.end_headers()
-
-    def do_GET(self):
-        rng = self.headers.get("Range")
-        if rng and self.support_ranges:
-            spec = rng.split("=", 1)[1]
-            s, e = spec.split("-", 1)
-            start = int(s)
-            if start >= len(self.payload):
-                self.send_response(416)
-                self.end_headers()
-                return
-            end = min(int(e) if e else len(self.payload) - 1, len(self.payload) - 1)
-            body = self.payload[start : end + 1]
-            self.send_response(206)
-        else:
-            body = self.payload
-            self.send_response(200)
-        self.send_header("Content-Length", str(len(body)))
-        self.end_headers()
-        self.wfile.write(body)
-
-
 @pytest.fixture()
-def http_url():
-    srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), _RangeHandler)
-    t = threading.Thread(target=srv.serve_forever, daemon=True)
-    t.start()
-    yield f"http://127.0.0.1:{srv.server_address[1]}/data.csv"
-    srv.shutdown()
+def http_url(range_server):
+    range_server.payloads[DATA] = _csv_payload()
+    return range_server.url(DATA)
 
 
 def test_http_csv_range_partitioned(spark, http_url):
     from datafusion_ray_spark.sources.httpcsv import register_http_csv
 
-    _RangeHandler.support_ranges = True
     register_http_csv(spark)
     df = (
         spark.read.format("http_csv")
@@ -83,26 +43,25 @@ def test_http_csv_range_partitioned(spark, http_url):
 
 @pytest.mark.parametrize("partition_bytes", [None, 2048],
                          ids=["default", "2048"])
-def test_http_csv_no_range_single_partition(spark, http_url, partition_bytes):
+def test_http_csv_no_range_single_partition(spark, http_url, range_server,
+                                            partition_bytes):
     """A server without Range support reads as ONE executor-side
     partition, also when the file is larger than one split (2048)."""
     from datafusion_ray_spark.sources.httpcsv import register_http_csv
 
-    _RangeHandler.support_ranges = False
-    try:
-        register_http_csv(spark)
-        reader = spark.read.format("http_csv").option("url", http_url)
-        if partition_bytes is not None:
-            assert len(_RangeHandler.payload) > partition_bytes
-            reader = reader.option("partition_bytes", partition_bytes)
-        df = reader.load()
-        assert df.rdd.getNumPartitions() == 1
-        assert df.count() == 500
-    finally:
-        _RangeHandler.support_ranges = True
+    range_server.ranges = False
+    register_http_csv(spark)
+    reader = spark.read.format("http_csv").option("url", http_url)
+    if partition_bytes is not None:
+        assert len(range_server.payloads[DATA]) > partition_bytes
+        reader = reader.option("partition_bytes", partition_bytes)
+    df = reader.load()
+    assert df.rdd.getNumPartitions() == 1
+    assert df.count() == 500
 
 
-def test_http_csv_long_line_across_partitions_is_whole(spark, http_url):
+def test_http_csv_long_line_across_partitions_is_whole(spark, http_url,
+                                                       range_server):
     """A line that starts in one partition and runs 1.6 MB past its end
     (64 KiB partitions) is read on to its newline: no field is cut and
     every line lands in exactly one partition."""
@@ -114,20 +73,16 @@ def test_http_csv_long_line_across_partitions_is_whole(spark, http_url):
         [",".join(f"c{j}" for j in range(16))]
         + short[:10] + [",".join(long_fields)] + short[10:]
     )
-    good = _RangeHandler.payload
-    _RangeHandler.payload = ("\n".join(lines) + "\n").encode()
-    try:
-        register_http_csv(spark)
-        df = (
-            spark.read.format("http_csv")
-            .option("url", http_url)
-            .option("partition_bytes", 65536)
-            .load()
-        )
-        assert df.rdd.getNumPartitions() > 20
-        rows = [tuple(r) for r in df.collect()]
-    finally:
-        _RangeHandler.payload = good
+    range_server.payloads[DATA] = ("\n".join(lines) + "\n").encode()
+    register_http_csv(spark)
+    df = (
+        spark.read.format("http_csv")
+        .option("url", http_url)
+        .option("partition_bytes", 65536)
+        .load()
+    )
+    assert df.rdd.getNumPartitions() > 20
+    rows = [tuple(r) for r in df.collect()]
     assert len(rows) == 21
     assert sorted(rows) == sorted(
         tuple(line.split(",")) for line in lines[1:]
@@ -139,7 +94,6 @@ def test_http_csv_long_line_across_partitions_is_whole(spark, http_url):
 def test_register_csv_http_uses_datasource(spark, http_url):
     from datafusion_ray_spark import DFRayContext
 
-    _RangeHandler.support_ranges = True
     ctx = DFRayContext(spark=spark)
     ctx.register_csv("web_tbl", http_url, partition_bytes=2048)
     out = ctx.sql(

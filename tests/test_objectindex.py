@@ -260,37 +260,19 @@ def test_s3_lifecycle_end_to_end(spark, s3_opts):
 
 
 @pytestmark_s3
-def test_s3_scan_plans_with_zero_listing_calls(spark, s3_opts):
+def test_s3_scan_plans_with_zero_listing_calls(spark, s3_opts, s3_log):
     from datafusion_ray_spark.sources import s3store
 
     root = "s3://idx/indexes/noprobe"
     oi.write_index(_toy(spark, 0, 100), root, opts=s3_opts)
-
-    real_client = s3store._client
-    counts = {"list_objects_v2": 0, "head_object": 0}
-
-    class Recorder:
-        def __init__(self, inner):
-            self.inner = inner
-
-        def list_objects_v2(self, **kw):
-            counts["list_objects_v2"] += 1
-            return self.inner.list_objects_v2(**kw)
-
-        def head_object(self, **kw):
-            counts["head_object"] += 1
-            return self.inner.head_object(**kw)
-
-        def __getattr__(self, attr):
-            return getattr(self.inner, attr)
 
     # e2e rows through the real Spark scan
     got = _rows(oi.read_index(spark, root, partitions=[0, 2], opts=s3_opts))
     assert got == _rows(_toy(spark, 0, 100).where("cell in (0,2)"))
 
     # zero-discovery planning, asserted on the reader itself (Spark runs
-    # data-source planning in a separate Python worker, so the counting
-    # hook must run in-process — same harness as the pushFilters
+    # data-source planning in a separate Python worker, so the recorder
+    # must run in-process — same harness as the pushFilters
     # byte-accounting test in test_s3store.py)
     manifest = oi.load_manifest(root, opts=s3_opts)
     selected = [o for o in manifest["objects"] if o["part"] in ("0", "2")]
@@ -301,18 +283,15 @@ def test_s3_scan_plans_with_zero_listing_calls(spark, s3_opts):
             [[store.url(o["key"]), o["bytes"]] for o in selected]
         ),
     )
-    s3store._client = lambda o: Recorder(real_client(o))
-    try:
-        reader = s3store.S3ParquetDataSource(reader_opts).reader(None)
-        parts = reader.partitions()
-        rows = sum(
-            batch.num_rows for p in parts for batch in reader.read(p)
-        )
-    finally:
-        s3store._client = real_client
+    s3_log.clear()
+    reader = s3store.S3ParquetDataSource(reader_opts).reader(None)
+    parts = reader.partitions()
+    rows = sum(
+        batch.num_rows for p in parts for batch in reader.read(p)
+    )
     assert rows == 40
     # the manifest carried keys AND sizes: planning issued no discovery
-    assert counts == {"list_objects_v2": 0, "head_object": 0}
+    assert s3_log.count("list_objects_v2") == s3_log.count("head_object") == 0
 
 
 @pytestmark_s3
@@ -530,8 +509,9 @@ def test_sort_by_clusters_objects_and_is_inherited(spark, tmp_path):
 def test_s3_sorted_index_prunes_row_groups_via_pushdown(spark, s3_opts):
     """The point of sort_by: tight per-row-group min/max on the sort key
     lets the inherited pushFilters path refute most row groups of a
-    range predicate — asserted at the reader level, same harness as the
-    s3store pushdown tests."""
+    range predicate — asserted at the reader level as rows read (every
+    row group holds 2,500 rows), same harness as the s3store pushdown
+    tests."""
     from pyspark.sql.datasource import GreaterThanOrEqual
 
     from datafusion_ray_spark.sources import s3store
@@ -543,7 +523,7 @@ def test_s3_sorted_index_prunes_row_groups_via_pushdown(spark, s3_opts):
     )
     store = oi._store_for(root, s3_opts)
     reader_opts = dict(
-        s3_opts, partition_bytes="1",
+        s3_opts,
         paths=json.dumps(
             [[store.url(o["key"]), o["bytes"]] for o in m["objects"]]
         ),
@@ -553,19 +533,18 @@ def test_s3_sorted_index_prunes_row_groups_via_pushdown(spark, s3_opts):
         reader = s3store.S3ParquetDataSource(dict(reader_opts)).reader(None)
         if pushed:
             reader.pushFilters(pushed)
-        parts = reader.partitions()
-        rows = sum(
-            b.num_rows for p in parts for b in reader.read(p)
+        return sum(
+            b.num_rows for p in reader.partitions() for b in reader.read(p)
         )
-        return len(parts), rows
 
-    n_full, rows_full = scan(None)
-    assert rows_full == 40_000 and n_full >= 16  # 2 objects x 8 groups
-    n_pruned, rows_pruned = scan([GreaterThanOrEqual(("id",), 35_000)])
+    rows_full = scan(None)
+    assert rows_full == 40_000  # 2 objects x 8 row groups read
+    rows_pruned = scan([GreaterThanOrEqual(("id",), 35_000)])
+    # 2 of 16 row groups read: the last one of each object
     assert rows_pruned == 5_000
-    assert n_pruned <= n_full / 4, (
+    assert rows_pruned <= rows_full / 4, (
         f"sorted row groups should mostly refute id>=35000: "
-        f"{n_pruned}/{n_full} planned"
+        f"{rows_pruned}/{rows_full} rows read"
     )
 
 

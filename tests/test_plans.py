@@ -321,20 +321,16 @@ def test_sample_uniform_is_take_ordered(spark, sf_dir):
     assert "TakeOrderedAndProject" in _plan(entry.run(spark, sf_dir))
 
 
-def test_events_date_partition_pruning(spark, sf_dir, tmp_path):
+def test_events_date_partition_pruning(spark, sf_dir):
     """The canonical event layout: a single-day predicate must become a
     PartitionFilter (directories skipped at plan time), and the day's
     data must round-trip exactly."""
-    from datafusion_ray_spark.sources.layout import (
-        read_events_partitioned,
-        write_events_partitioned,
-    )
+    from datafusion_ray_spark.operators.sinks import write_events_partitioned
 
     ev = load_table(spark, sf_dir, "events")
-    path = str(tmp_path / "events_by_day")
-    write_events_partitioned(ev, path)
-
-    back = read_events_partitioned(spark, path)
+    back = spark.read.parquet(
+        write_events_partitioned(spark, sf_dir, "event_date")
+    )
     day = back.select("event_date").first()["event_date"]
     q = back.where(F.col("event_date") == day)
     plan = _plan(q)

@@ -272,25 +272,3 @@ def test_sq8_rerank_converges_to_exact_with_wide_candidates(spark, sf_dir):
     exact = similarity.cosine_topk(emb, qv, k=5, exclude_vec_id=0).toPandas()
     assert list(wide.vec_id) == list(exact.vec_id)
     assert list(wide.cosine) == list(exact.cosine)
-
-
-def test_compact_files_preserves_data(spark, sf_dir, tmp_path):
-    from datafusion_ray_spark.sources.layout import compact_files
-    from datafusion_ray_spark.sources.tables import load_table
-
-    src = str(tmp_path / "fragmented")
-    out = str(tmp_path / "compacted")
-    ev = load_table(spark, sf_dir, "events")
-    # simulate micro-batch fragmentation: many tiny files
-    ev.repartition(64).write.parquet(src)
-    import glob
-    assert len(glob.glob(f"{src}/part-*.parquet")) == 64
-
-    n_files = compact_files(spark, src, out, target_file_rows=5_000)
-    assert len(glob.glob(f"{out}/part-*.parquet")) == n_files < 64
-    a = spark.read.parquet(src)
-    b = spark.read.parquet(out)
-    assert a.count() == b.count()
-    assert sorted(a.columns) == sorted(b.columns)
-    # value-level equality: symmetric difference is empty
-    assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()

@@ -19,9 +19,6 @@ import os
 
 import pytest
 
-# the http store's local Range server, for the store-parity test
-from .test_httpparquet import _RangeHandler, http_url  # noqa: F401
-
 try:
     import boto3
     from moto.server import ThreadedMotoServer
@@ -111,6 +108,12 @@ def bucket(s3_endpoint):
     return "graft"
 
 
+def _object(s3_endpoint, key: str) -> bytes:
+    return boto3.client("s3", endpoint_url=s3_endpoint).get_object(
+        Bucket="graft", Key=key,
+    )["Body"].read()
+
+
 def _read(spark, s3_endpoint, path, **opts):
     from datafusion_ray_spark.sources.s3store import register_s3_parquet
 
@@ -153,13 +156,20 @@ def test_prefix_listing_reads_all_files(spark, s3_endpoint, bucket):
 
 
 def test_row_group_splitting_fans_out(spark, s3_endpoint, bucket):
-    # partition_bytes=1: every row group becomes its own input partition.
+    """32 byte ranges over the 8 row groups: each row group's midpoint
+    falls in one range, so 8 different tasks read rows."""
+    from pyspark.sql import functions as F
+
+    size = len(_object(s3_endpoint, "multi/customer.parquet"))
     got = _read(
         spark, s3_endpoint, "s3://graft/multi/customer.parquet",
-        partition_bytes=1,
+        partition_bytes=-(-size // 32),
     )
-    nparts = got.rdd.getNumPartitions()
-    assert nparts >= 7, f"expected >=7 row-group partitions, got {nparts}"
+    nparts = (
+        got.withColumn("pid", F.spark_partition_id())
+        .select("pid").distinct().count()
+    )
+    assert nparts >= 7, f"expected >=7 tasks reading rows, got {nparts}"
     want = spark.read.parquet(os.path.join(SF_DIR, "customer.parquet"))
     assert got.count() == want.count()
     # values survive the split exactly
@@ -240,42 +250,26 @@ def test_facade_s3_csv_distributed(spark, s3_endpoint, bucket):
     assert row["mx"] == [4999 * 0.5]
 
 
-def test_s3_csv_reader_issues_only_head_and_get(s3_endpoint, bucket):
+def test_s3_csv_reader_issues_only_head_and_get(s3_endpoint, bucket, s3_log):
     """The s3csv reader plans byte ranges from the object's size and reads
     each with ranged GETs: a recorded client sees only HeadObject and
     GetObject — no listing of a single key, no presigning."""
-    from datafusion_ray_spark.sources import s3store
     from datafusion_ray_spark.sources.httpcsv import S3CsvDataSource
 
     _put_people_csv(s3_endpoint)
-    real_client = s3store._client
-    calls: list[str] = []
-
-    class Recorder:
-        def __init__(self, inner):
-            self.inner = inner
-
-        def __getattr__(self, attr):
-            calls.append(attr)
-            return getattr(self.inner, attr)
-
     source = S3CsvDataSource({
         "path": "s3://graft/csv/people.csv", "endpoint_url": s3_endpoint,
         "access_key": "testing", "secret_key": "testing",
         "region": "us-east-1", "partition_bytes": "16384",
     })
-    s3store._client = lambda _o: Recorder(real_client(_o))
-    try:
-        reader = source.reader(source.schema())
-        parts = reader.partitions()
-        rows = [r for p in parts for r in reader.read(p)]
-    finally:
-        s3store._client = real_client
+    reader = source.reader(source.schema())
+    parts = reader.partitions()
+    rows = [r for p in parts for r in reader.read(p)]
     assert len(parts) > 1
     assert len(rows) == 5000
     assert sum(r[0] for r in rows) == sum(range(5000))
     assert max(r[2] for r in rows) == 4999 * 0.5
-    assert set(calls) == {"head_object", "get_object"}
+    assert {r.method for r in s3_log.requests} == {"head_object", "get_object"}
 
 
 def test_s3_csv_prefix_lists_csv_objects(s3_endpoint, bucket):
@@ -305,78 +299,60 @@ def test_missing_prefix_raises_cleanly(spark, s3_endpoint, bucket):
         _read(spark, s3_endpoint, "s3://graft/nope").limit(1).collect()
 
 
-def test_projection_and_stats_pruning_reduce_transfer(s3_endpoint, bucket):
+BIG = "big/pushdown.parquet"
+
+
+def test_projection_and_stats_pruning_reduce_transfer(s3_endpoint, bucket,
+                                                      s3_log):
     """Round-9 user-declared pushdown: a column projection must transfer
     FEWER bytes (only the projected columns' pages), and a filter whose
-    refutation is provable from footer min/max stats must plan FEWER row
+    refutation is provable from footer min/max stats must read FEWER row
     groups and transfer fewer bytes — with identical surviving rows.
-    Byte accounting is exact: every executor-side GET goes through the
-    module's _client hook, recorded per Range header against live moto."""
+    Byte accounting is exact: every GET goes through the module's
+    _client hook, recorded per Range against live moto."""
     from datafusion_ray_spark.sources import s3store
 
-    real_client = s3store._client
-
-    class Recorder:
-        def __init__(self, inner):
-            self.inner, self.data_bytes, self.calls = inner, 0, []
-
-        def get_object(self, **kw):
-            rng = kw["Range"][len("bytes="):]
-            lo, hi = rng.split("-")
-            self.data_bytes += int(hi) - int(lo) + 1
-            self.calls.append(kw["Range"])
-            return self.inner.get_object(**kw)
-
-        def __getattr__(self, attr):
-            return getattr(self.inner, attr)
-
+    blob = _object(s3_endpoint, BIG)
     base_opts = {
-        "path": "s3://graft/big/pushdown.parquet",
+        "path": f"s3://graft/{BIG}",
         "endpoint_url": s3_endpoint,
         "access_key": "testing", "secret_key": "testing",
         "region": "us-east-1",
     }
 
     def run(**extra):
-        opts = dict(base_opts, **extra)
-        rec = Recorder(real_client(opts))
-        s3store._client = lambda _o: rec
-        try:
-            reader = s3store.S3ParquetDataSource(opts).reader(None)
-            parts = reader.partitions()
-            rows = cols = 0
-            for p in parts:
-                for batch in reader.read(p):
-                    rows += batch.num_rows
-                    cols = batch.num_columns
-            return rec, len(parts), rows, cols
-        finally:
-            s3store._client = real_client
+        s3_log.clear()
+        reader = s3store.S3ParquetDataSource(
+            dict(base_opts, **extra)
+        ).reader(None)
+        rows = cols = 0
+        for p in reader.partitions():
+            for batch in reader.read(p):
+                rows += batch.num_rows
+                cols = batch.num_columns
+        return s3_log.bytes, s3_log.row_groups_read(BIG, blob), rows, cols
 
-    full, n_full, rows_full, cols_full = run(partition_bytes=1)
-    assert n_full == 8 and rows_full == 200_000
+    full_bytes, rgs_full, rows_full, cols_full = run()
+    assert rgs_full == set(range(8)) and rows_full == 200_000
 
     # projection: same rows, two columns, strictly fewer bytes (only the
     # projected columns' pages are ranged-GET; the wide string column
     # never transfers)
-    proj, n_proj, rows_proj, cols_proj = run(
-        partition_bytes=1, columns="k,v"
-    )
+    proj_bytes, _, rows_proj, cols_proj = run(columns="k,v")
     assert rows_proj == rows_full and cols_proj == 2 < cols_full
-    assert proj.data_bytes < full.data_bytes * 0.8, (
-        f"projection transferred {proj.data_bytes} vs {full.data_bytes}"
+    assert proj_bytes < full_bytes * 0.8, (
+        f"projection transferred {proj_bytes} vs {full_bytes}"
     )
 
     # stats pruning: k is ascending, so row-group min/max are tight and a
-    # 150k threshold refutes 6 of the 8 row groups driver-side
+    # 150k threshold refutes 6 of the 8 row groups task-side
     import json
 
-    filt, n_filt, rows_filt, _ = run(
-        partition_bytes=1,
+    filt_bytes, rgs_filt, rows_filt, _ = run(
         filters=json.dumps([["k", ">=", 150_000]]),
     )
-    assert n_filt == 2, f"stats pruning kept {n_filt} of 8 partitions"
-    assert filt.data_bytes < full.data_bytes / 2
+    assert rgs_filt == {6, 7}, f"stats pruning read row groups {rgs_filt}"
+    assert filt_bytes < full_bytes / 2
     # lossless: every row >= cutoff survives (surviving row groups may
     # carry extras below the cutoff; exact filtering happens above)
     assert 50_000 <= rows_filt < rows_full
@@ -384,12 +360,11 @@ def test_projection_and_stats_pruning_reduce_transfer(s3_endpoint, bucket):
 
 def test_all_row_groups_pruned_returns_empty(spark, s3_endpoint, bucket):
     """An all-excluding filter (k >= max+1: every row group's footer
-    stats refute it) plans ZERO partitions; pyspark substitutes [None]
-    for an empty plan, so read(None) must yield nothing instead of
-    crashing (advisor round-9 medium)."""
+    stats refute it) returns 0 rows with the schema intact: each task
+    reads its footer, keeps no row group and yields nothing."""
     df = _read(
-        spark, s3_endpoint, "s3://graft/big/pushdown.parquet",
-        partition_bytes=1, filters='[["k", ">=", 200000]]',
+        spark, s3_endpoint, f"s3://graft/{BIG}",
+        partition_bytes=800_000, filters='[["k", ">=", 200000]]',
     )
     assert df.count() == 0
     assert df.columns == ["k", "v", "s"]
@@ -424,23 +399,9 @@ def test_facade_projection_filters_identical_results(
     assert len(got) > 0
 
 
-def test_ranged_file_tail_cache_one_get_per_footer():
-    """Planner cost contract: parsing one object's parquet FOOTER costs
-    exactly ONE Range GET (the cached tail), not one per pyarrow read —
-    the round trips the driver pays per file while planning a prefix.
-    Data-page reads outside the tail still issue their own ranged GETs."""
-    import io as _io
-
+def _two_column_parquet() -> bytes:
     import pyarrow as pa
     import pyarrow.parquet as pq
-
-    from functools import partial
-
-    from datafusion_ray_spark.sources import s3store
-    from datafusion_ray_spark.sources.s3store import (
-        _FOOTER_PROBE,
-        _RangedFile,
-    )
 
     sink = pa.BufferOutputStream()
     pq.write_table(
@@ -448,35 +409,70 @@ def test_ranged_file_tail_cache_one_get_per_footer():
         sink,
         row_group_size=50_000,
     )
-    blob = sink.getvalue().to_pybytes()
+    return sink.getvalue().to_pybytes()
+
+
+def test_ranged_file_tail_cache_one_get_per_footer():
+    """Task cost contract: parsing one object's parquet FOOTER costs
+    exactly ONE Range GET (the cached tail), not one per pyarrow read —
+    the round trip every task pays for its object's footer. Data-page
+    reads outside the tail still issue their own ranged GETs."""
+    import pyarrow.parquet as pq
+
+    from datafusion_ray_spark.sources.s3store import (
+        _FOOTER_PROBE,
+        _RangedFile,
+    )
+
+    blob = _two_column_parquet()
     assert len(blob) > _FOOTER_PROBE  # data pages live outside the tail
+    calls: list[tuple[int, int]] = []
 
-    class CountingClient:
-        def __init__(self, payload: bytes):
-            self.payload = payload
-            self.calls: list[str] = []
+    def get(lo, hi):
+        calls.append((lo, hi))
+        return blob[lo : hi + 1]
 
-        def get_object(self, Bucket, Key, Range):
-            self.calls.append(Range)
-            lo, hi = Range[len("bytes="):].split("-")
-            return {"Body": _io.BytesIO(self.payload[int(lo): int(hi) + 1])}
-
-    client = CountingClient(blob)
-    real_client = s3store._client
-    s3store._client = lambda _o: client
-    try:
-        store = s3store._S3Store({"path": "s3://b/k"})
-        pf = pq.ParquetFile(_RangedFile(partial(store.get, "k"), len(blob)))
-    finally:
-        s3store._client = real_client
+    pf = pq.ParquetFile(_RangedFile(get, len(blob)))
     assert pf.metadata.num_row_groups == 4
-    assert len(client.calls) == 1, f"footer parse issued {client.calls}"
+    assert len(calls) == 1, f"footer parse issued {calls}"
 
     # reading a row group fetches data bytes with fresh GETs and matches
     # the original table's rows
     got = pf.read_row_group(0)
     assert got.num_rows == 50_000
-    assert len(client.calls) > 1
+    assert len(calls) > 1
+
+
+def test_ranged_file_keeps_whole_body_of_rangeless_answer():
+    """A store that answers a ranged GET with the whole object (an http
+    server without Range support) raises RangeUnsupportedError carrying
+    that body: the ranged file keeps it and serves every later read from
+    it — one request per file, identical rows. An error without a body
+    still raises."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from datafusion_ray_spark.sources.s3store import (
+        RangeUnsupportedError,
+        _RangedFile,
+    )
+
+    blob = _two_column_parquet()
+    calls: list[tuple[int, int]] = []
+
+    def get(lo, hi):
+        calls.append((lo, hi))
+        raise RangeUnsupportedError("HTTP 200", blob)
+
+    got = pq.ParquetFile(_RangedFile(get, len(blob))).read()
+    assert len(calls) == 1
+    assert got.equals(pq.read_table(pa.BufferReader(blob)))
+
+    def refuse(lo, hi):
+        raise RangeUnsupportedError("cannot determine object size")
+
+    with pytest.raises(RangeUnsupportedError, match="object size"):
+        pq.ParquetFile(_RangedFile(refuse, len(blob)))
 
 
 def test_pushfilters_triples_conversion():
@@ -513,7 +509,8 @@ def test_pushfilters_triples_conversion():
     ]
 
 
-def test_pushfilters_byte_reduction_no_declared_filters(s3_endpoint, bucket):
+def test_pushfilters_byte_reduction_no_declared_filters(s3_endpoint, bucket,
+                                                       s3_log):
     """Round-10 automatic pushdown: the reader's pushFilters (fed exactly
     what Catalyst would push for `WHERE k >= 150000`) must prune 6 of 8
     row groups and halve transferred bytes — with NO user-declared
@@ -525,76 +522,61 @@ def test_pushfilters_byte_reduction_no_declared_filters(s3_endpoint, bucket):
 
     from datafusion_ray_spark.sources import s3store
 
-    real_client = s3store._client
-
-    class Recorder:
-        def __init__(self, inner):
-            self.inner, self.data_bytes = inner, 0
-
-        def get_object(self, **kw):
-            lo, hi = kw["Range"][len("bytes="):].split("-")
-            self.data_bytes += int(hi) - int(lo) + 1
-            return self.inner.get_object(**kw)
-
-        def __getattr__(self, attr):
-            return getattr(self.inner, attr)
-
+    blob = _object(s3_endpoint, BIG)
     opts = {
-        "path": "s3://graft/big/pushdown.parquet",
+        "path": f"s3://graft/{BIG}",
         "endpoint_url": s3_endpoint,
         "access_key": "testing", "secret_key": "testing",
-        "region": "us-east-1", "partition_bytes": "1",
+        "region": "us-east-1",
     }
 
     def run(pushed):
-        rec = Recorder(real_client(opts))
-        s3store._client = lambda _o: rec
-        try:
-            reader = s3store.S3ParquetDataSource(dict(opts)).reader(None)
-            if pushed is not None:
-                returned = reader.pushFilters(pushed)
-                assert [f is g for f, g in zip(returned, pushed)] == (
-                    [True] * len(pushed)
-                ), "filters must be returned unconsumed, by reference"
-            parts = reader.partitions()
-            rows = 0
-            for p in parts:
-                for batch in reader.read(p):
-                    rows += batch.num_rows
-            return rec.data_bytes, len(parts), rows
-        finally:
-            s3store._client = real_client
+        s3_log.clear()
+        reader = s3store.S3ParquetDataSource(dict(opts)).reader(None)
+        if pushed is not None:
+            returned = reader.pushFilters(pushed)
+            assert [f is g for f, g in zip(returned, pushed)] == (
+                [True] * len(pushed)
+            ), "filters must be returned unconsumed, by reference"
+        rows = 0
+        for p in reader.partitions():
+            for batch in reader.read(p):
+                rows += batch.num_rows
+        return s3_log.bytes, s3_log.row_groups_read(BIG, blob), rows
 
-    full_bytes, n_full, rows_full = run(None)
-    assert n_full == 8 and rows_full == 200_000
+    full_bytes, rgs_full, rows_full = run(None)
+    assert rgs_full == set(range(8)) and rows_full == 200_000
 
     pushed = [IsNotNull(("k",)), GreaterThanOrEqual(("k",), 150_000)]
-    filt_bytes, n_filt, rows_filt = run(pushed)
-    assert n_filt == 2, f"pushFilters pruning kept {n_filt} of 8 partitions"
+    filt_bytes, rgs_filt, rows_filt = run(pushed)
+    assert rgs_filt == {6, 7}, f"pushFilters pruning read row groups {rgs_filt}"
     assert filt_bytes < full_bytes / 2
     assert 50_000 <= rows_filt < rows_full  # lossless, exact filter above
 
 
 def test_pushfilters_e2e_plain_where(spark, s3_endpoint, bucket):
     """Full Spark path: .where() on the s3parquet table with NO filters
-    option — the executed scan fans out over only the surviving row
-    groups and the answer is exact."""
+    option — the executed scan emits only the surviving row groups' rows
+    (2 of 8 row groups of 25k) and the answer is exact."""
     from pyspark.sql import functions as F
 
+    from datafusion_ray_spark.context import DFRayDataFrame
+
     df = _read(
-        spark, s3_endpoint, "s3://graft/big/pushdown.parquet",
-        partition_bytes=1,
+        spark, s3_endpoint, f"s3://graft/{BIG}", partition_bytes=800_000,
     ).where("k >= 150000")
-    nparts = (
-        df.withColumn("pid", F.spark_partition_id())
-        .select("pid").distinct().count()
-    )
-    assert nparts == 2, f"executed scan planned {nparts} partitions"
     agg = df.agg(
         F.count("*").alias("n"), F.min("k").alias("mn"),
         F.max("k").alias("mx"),
-    ).collect()[0]
-    assert (agg["n"], agg["mn"], agg["mx"]) == (50_000, 150_000, 199_999)
+    )
+    row = agg.collect()[0]
+    assert (row["n"], row["mn"], row["mx"]) == (50_000, 150_000, 199_999)
+    scanned = [
+        vals["numOutputRows"]
+        for node, vals in DFRayDataFrame(agg).execution_metrics().items()
+        if node.startswith("BatchScan s3parquet")
+    ]
+    assert scanned == [50_000], f"scan read rows {scanned}"
 
 
 def test_redact_url_strips_query_string():
@@ -644,59 +626,39 @@ def test_s3_jarless_tiers_keep_credentials_out(spark, s3_endpoint, bucket,
     assert df.collect()[0].to_pydict() == want
 
 
-def test_range_split_protocol_large_listing(s3_endpoint, bucket):
-    """Round-10 Hadoop split protocol: beyond footer_planning_max_files
-    the planner emits byte-range partitions from the LISTING alone —
-    zero driver GETs — and each task reads its own footer, claiming row
-    groups by byte midpoint (exactly-once across tiling ranges) with the
-    same lossless stats pruning applied task-side."""
+def test_range_split_protocol_large_listing(s3_endpoint, bucket, s3_log):
+    """Round-10 Hadoop split protocol, once only for large listings and
+    now every scan's plan: the planner emits byte-range partitions from
+    the object's size alone — zero driver GETs — and
+    each task reads its own footer, claiming row groups by byte midpoint
+    (exactly-once across tiling ranges) with the same lossless stats
+    pruning applied task-side."""
     from datafusion_ray_spark.sources import s3store
 
-    real_client = s3store._client
-
-    class Recorder:
-        def __init__(self, inner):
-            self.inner, self.gets, self.data_bytes = inner, 0, 0
-
-        def get_object(self, **kw):
-            self.gets += 1
-            lo, hi = kw["Range"][len("bytes="):].split("-")
-            self.data_bytes += int(hi) - int(lo) + 1
-            return self.inner.get_object(**kw)
-
-        def __getattr__(self, attr):
-            return getattr(self.inner, attr)
-
     opts = {
-        "path": "s3://graft/big/pushdown.parquet",
+        "path": f"s3://graft/{BIG}",
         "endpoint_url": s3_endpoint,
         "access_key": "testing", "secret_key": "testing",
         "region": "us-east-1",
-        # force range mode for this single object, ~4 ranges
-        "footer_planning_max_files": "0",
-        "partition_bytes": str(800_000),
+        "partition_bytes": str(800_000),  # ~10 ranges
     }
 
     def run(pushed=None, opts=opts):
-        rec = Recorder(real_client(opts))
-        s3store._client = lambda _o: rec
-        try:
-            reader = s3store.S3ParquetDataSource(dict(opts)).reader(None)
-            if pushed is not None:
-                reader.pushFilters(pushed)
-            parts = reader.partitions()
-            plan_gets = rec.gets  # GETs issued by PLANNING alone
-            rows = 0
-            for p in parts:
-                assert len(p.value) == 4, "expected byte-range partitions"
-                for batch in reader.read(p):
-                    rows += batch.num_rows
-            return plan_gets, len(parts), rows, rec.data_bytes
-        finally:
-            s3store._client = real_client
+        s3_log.clear()
+        reader = s3store.S3ParquetDataSource(dict(opts)).reader(None)
+        if pushed is not None:
+            reader.pushFilters(pushed)
+        parts = reader.partitions()
+        plan_gets = s3_log.count("get_object")  # GETs of PLANNING alone
+        rows = 0
+        for p in parts:
+            assert len(p.value) == 4, "expected byte-range partitions"
+            for batch in reader.read(p):
+                rows += batch.num_rows
+        return plan_gets, len(parts), rows, s3_log.bytes
 
     plan_gets, n_parts, rows, full_bytes = run()
-    assert plan_gets == 0, f"planner issued {plan_gets} GETs in range mode"
+    assert plan_gets == 0, f"planner issued {plan_gets} GETs"
     assert n_parts > 1, "expected multiple byte ranges"
     assert rows == 200_000, f"midpoint rule lost/duplicated rows: {rows}"
 
@@ -707,13 +669,31 @@ def test_range_split_protocol_large_listing(s3_endpoint, bucket):
     assert 50_000 <= rows_f < 200_000
     assert filt_bytes < full_bytes / 2
 
-    # footer mode (threshold back at default) returns identical rows
-    opts_footer = dict(opts, footer_planning_max_files="256")
-    reader = s3store.S3ParquetDataSource(opts_footer).reader(None)
-    rows_footer = sum(
-        b.num_rows for p in reader.partitions() for b in reader.read(p)
+    # one range for the whole object (default size) returns identical rows
+    _, n_one, rows_one, _ = run(
+        opts={k: v for k, v in opts.items() if k != "partition_bytes"}
     )
-    assert rows_footer == rows
+    assert n_one == 1 and rows_one == rows
+
+
+def test_planning_reads_no_footer(s3_endpoint, bucket, s3_log):
+    """Planning a multi-object prefix whose sizes ride the listing
+    issues zero GETs: the driver reads no footer (the only footer it
+    reads is schema()'s, one per scan) — every footer is read by the
+    task that scans its object."""
+    from datafusion_ray_spark.sources import s3store
+
+    reader = s3store.S3ParquetDataSource({
+        "path": "s3://graft/dir", "endpoint_url": s3_endpoint,
+        "access_key": "testing", "secret_key": "testing",
+        "region": "us-east-1",
+    }).reader(None)
+    parts = reader.partitions()
+    assert len({p.value[0] for p in parts}) == 2  # both objects planned
+    assert s3_log.count("get_object") == 0, (
+        f"planning issued GETs: {s3_log.requests}"
+    )
+    assert s3_log.count("list_objects_v2") == 1
 
 
 # ---------------------------------------------------------------------------
@@ -738,7 +718,7 @@ def test_paths_option_reads_explicit_objects(spark, s3_endpoint, bucket):
     )
 
 
-def test_paths_sized_entries_skip_all_discovery(s3_endpoint, bucket):
+def test_paths_sized_entries_skip_all_discovery(s3_endpoint, bucket, s3_log):
     """[url, size] pairs: planning issues ZERO ListObjects and HEADs only
     the entries whose size the declaration omitted."""
     import json
@@ -750,23 +730,9 @@ def test_paths_sized_entries_skip_all_discovery(s3_endpoint, bucket):
         "ContentLength"
     ]
 
-    real_client = s3store._client
-    counts = {"list_objects_v2": 0, "head_object": 0}
-
-    class Recorder:
-        def __init__(self, inner):
-            self.inner = inner
-
-        def list_objects_v2(self, **kw):
-            counts["list_objects_v2"] += 1
-            return self.inner.list_objects_v2(**kw)
-
-        def head_object(self, **kw):
-            counts["head_object"] += 1
-            return self.inner.head_object(**kw)
-
-        def __getattr__(self, attr):
-            return getattr(self.inner, attr)
+    def discovery():
+        return {op: s3_log.count(op)
+                for op in ("list_objects_v2", "head_object")}
 
     opts = {
         "endpoint_url": s3_endpoint, "access_key": "testing",
@@ -776,19 +742,15 @@ def test_paths_sized_entries_skip_all_discovery(s3_endpoint, bucket):
              "s3://graft/dir/part-1.parquet"]  # size omitted -> one HEAD
         ),
     }
-    s3store._client = lambda _o: Recorder(real_client(_o))
-    try:
-        reader = s3store.S3ParquetDataSource(dict(opts)).reader(None)
-        rows = sum(
-            b.num_rows for p in reader.partitions() for b in reader.read(p)
-        )
-    finally:
-        s3store._client = real_client
+    reader = s3store.S3ParquetDataSource(dict(opts)).reader(None)
+    rows = sum(
+        b.num_rows for p in reader.partitions() for b in reader.read(p)
+    )
     assert rows > 0
-    assert counts == {"list_objects_v2": 0, "head_object": 1}
+    assert discovery() == {"list_objects_v2": 0, "head_object": 1}
 
     # fully sized: zero discovery of any kind
-    counts.update(list_objects_v2=0, head_object=0)
+    s3_log.clear()
     size1 = client.head_object(Bucket="graft", Key="dir/part-1.parquet")[
         "ContentLength"
     ]
@@ -796,16 +758,12 @@ def test_paths_sized_entries_skip_all_discovery(s3_endpoint, bucket):
         [["s3://graft/dir/part-0.parquet", size0],
          ["s3://graft/dir/part-1.parquet", size1]]
     )
-    s3store._client = lambda _o: Recorder(real_client(_o))
-    try:
-        reader = s3store.S3ParquetDataSource(dict(opts)).reader(None)
-        rows2 = sum(
-            b.num_rows for p in reader.partitions() for b in reader.read(p)
-        )
-    finally:
-        s3store._client = real_client
+    reader = s3store.S3ParquetDataSource(dict(opts)).reader(None)
+    rows2 = sum(
+        b.num_rows for p in reader.partitions() for b in reader.read(p)
+    )
     assert rows2 == rows
-    assert counts == {"list_objects_v2": 0, "head_object": 0}
+    assert discovery() == {"list_objects_v2": 0, "head_object": 0}
 
 
 def test_paths_validation_errors():
@@ -821,26 +779,13 @@ def test_paths_validation_errors():
         ).entries()
 
 
-def test_schema_probes_only_the_first_unsized_path(s3_endpoint, bucket):
+def test_schema_probes_only_the_first_unsized_path(s3_endpoint, bucket,
+                                                   s3_log):
     """schema() reads ONE footer, so it probes only that object's size:
     three unsized `paths` entries cost one HeadObject, not three."""
     import json
 
     from datafusion_ray_spark.sources import s3store
-
-    real_client = s3store._client
-    heads: list[str] = []
-
-    class Recorder:
-        def __init__(self, inner):
-            self.inner = inner
-
-        def head_object(self, **kw):
-            heads.append(kw["Key"])
-            return self.inner.head_object(**kw)
-
-        def __getattr__(self, attr):
-            return getattr(self.inner, attr)
 
     source = s3store.S3ParquetDataSource({
         "endpoint_url": s3_endpoint, "access_key": "testing",
@@ -851,43 +796,43 @@ def test_schema_probes_only_the_first_unsized_path(s3_endpoint, bucket):
             "s3://graft/multi/customer.parquet",
         ]),
     })
-    s3store._client = lambda _o: Recorder(real_client(_o))
-    try:
-        schema = source.schema()
-    finally:
-        s3store._client = real_client
+    schema = source.schema()
     assert "s_suppkey" in schema.fieldNames()
+    heads = [r.ref for r in s3_log.requests if r.method == "head_object"]
     assert heads == ["dir/part-0.parquet"]
 
 
-@pytest.mark.parametrize("footer_planning_max_files", [None, "0"],
-                         ids=["footer", "byte_range"])
-def test_store_parity_s3_and_http(s3_endpoint, bucket, http_url,
-                                  footer_planning_max_files):
+@pytest.mark.parametrize("partition_bytes", [None, "400000"],
+                         ids=["one_range", "byte_range"])
+def test_store_parity_s3_and_http(s3_endpoint, bucket, range_server, s3_log,
+                                  pushdown_parquet, partition_bytes):
     """The s3 and http stores of the one ranged-parquet reader, over the
     SAME parquet bytes (8 row groups of 10k ascending k), plan the same
-    partitions, return the same rows, and prune the same row groups under
-    the same pushed predicate — in footer mode and in byte-range mode."""
+    partitions, return the same rows, and read the same row groups under
+    the same pushed predicate — with one range per object and with
+    several."""
     from pyspark.sql.datasource import GreaterThanOrEqual
 
     from datafusion_ray_spark.sources.httpparquet import HTTPParquetDataSource
     from datafusion_ray_spark.sources.s3store import S3ParquetDataSource
 
-    payload = _RangeHandler.payload
+    payload = pushdown_parquet
+    size = len(payload)
+    key, path = "parity/data.parquet", "/data.parquet"
     boto3.client("s3", endpoint_url=s3_endpoint).put_object(
-        Bucket="graft", Key="parity/data.parquet", Body=payload,
+        Bucket="graft", Key=key, Body=payload,
     )
-    opts = {"partition_bytes": "1"}
-    if footer_planning_max_files is not None:
-        opts = {"partition_bytes": "400000",
-                "footer_planning_max_files": footer_planning_max_files}
+    range_server.payloads[path] = payload
+    opts = {} if partition_bytes is None else {
+        "partition_bytes": partition_bytes
+    }
     sources = {
         "s3": S3ParquetDataSource(dict(
-            opts, path="s3://graft/parity/data.parquet",
+            opts, path=f"s3://graft/{key}",
             endpoint_url=s3_endpoint, access_key="testing",
             secret_key="testing", region="us-east-1",
         )),
-        "http": HTTPParquetDataSource(dict(opts, url=http_url)),
+        "http": HTTPParquetDataSource(dict(opts, url=range_server.url(path))),
     }
 
     def scan(source, pushed=None):
@@ -906,14 +851,16 @@ def test_store_parity_s3_and_http(s3_endpoint, bucket, http_url,
     assert full["s3"] == full["http"]
     plan, ks = full["s3"]
     assert ks == list(range(80_000))
-    if footer_planning_max_files is None:
-        assert plan == [(len(payload), [rg]) for rg in range(8)]
+    if partition_bytes is None:
+        assert plan == [(size, 0, size)]
     else:
         assert len(plan) > 2 and all(len(v) == 3 for v in plan)
-        assert plan[-1][2] == len(payload)
+        assert plan[-1][2] == size
 
-    # k >= 60000 refutes row groups 0-5 from footer stats on both stores:
-    # driver-side in footer mode, task-side in byte-range mode
+    # k >= 60000 refutes row groups 0-5 from footer stats on both stores,
+    # task-side: each store serves data pages of row groups 6 and 7 only
+    s3_log.clear()
+    range_server.log.clear()
     pushed = {
         name: scan(src, [GreaterThanOrEqual(("k",), 60_000)])
         for name, src in sources.items()
@@ -921,5 +868,5 @@ def test_store_parity_s3_and_http(s3_endpoint, bucket, http_url,
     assert pushed["s3"] == pushed["http"]
     plan_f, ks_f = pushed["s3"]
     assert ks_f == list(range(60_000, 80_000))
-    if footer_planning_max_files is None:
-        assert plan_f == [(len(payload), [6]), (len(payload), [7])]
+    assert s3_log.row_groups_read(key, payload) == {6, 7}
+    assert range_server.log.row_groups_read(path, payload) == {6, 7}
